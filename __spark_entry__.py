@@ -2469,7 +2469,7 @@ def q162_rolling_corr_cov_kernel(spark, sf_dir):
 def q163_rolling_by_kernel_attach(spark, sf_dir):
     """Round-9: EXPR-LEVEL time-based rolling (rolling_median/quantile/
     std/min_by — expr.rb:3964-4848) through the sliding-kernel frame
-    attachment (operators/rolling_kernel.attach_rolling_by, hooked via
+    attachment (operators/rolling_kernel.attach_rolling_by_multi, hooked via
     _global_ordinal_fn/_grouped_remap_fn like the ewm/cum attaches):
     Spark's range frame COLLECTS AND SORTS the buffer per row for median/
     percentile (O(n·w log w)), the q143-class density wall; the kernel
@@ -2522,7 +2522,7 @@ def q164_rolling_rowcount_kernel(spark, sf_dir):
 def q165_ungrouped_rank_attach(spark, sf_dir):
     """Round-9: UNGROUPED rank() (all five methods + descending) through
     the distinct-value prefix attach (operators/row_index.
-    attach_global_rank) — it previously compiled to a window with NO
+    attach_global_rank_multi) — it previously compiled to a window with NO
     partitionBy, one task for the whole frame (expr.rb:5691).  Heavy ties
     via round(value): ~49k distinct values over 10k rows at sf0.01."""
     import polars_ruby_spark as pl
@@ -2545,7 +2545,8 @@ def q165_ungrouped_rank_attach(spark, sf_dir):
 
 def q166_ungrouped_fills_lag_attach(spark, sf_dir):
     """Round-9: UNGROUPED unbounded forward/backward fill (two-pass chunk
-    prefix + O(chunks) struct-extreme carry, row_index.attach_global_fill)
+    prefix + O(chunks) struct-extreme carry,
+    row_index.attach_global_fill_multi)
     and ungrouped diff/pct_change (lag via the sliding kernel's single-row
     frame) — each previously a window with NO partitionBy, one task for
     the whole frame (expr.rb:1721 fills, :2501 diff, :2560 pct_change).

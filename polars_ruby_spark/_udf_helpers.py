@@ -562,76 +562,7 @@ def np_cumeval_arrays_udf(prog, elem_t: str, out_t: str, min_p: int):
     return _udf
 
 
-_EWM_CARRY_CACHE = {}
-
-
-def ewm_carry_arrays_udf(n_items: int, cols):
-    """Sequential carry composition for the batched ungrouped ewm attach
-    (round-7): folds the pid-sorted O(partitions) totals array into each
-    partition's INCOMING carry state.
-
-    Replaces the round-6 JVM ``F.aggregate`` fold whose struct-rebuilding
-    lambda made Catalyst ANALYSIS the dominant per-construction cost
-    (~2.2 s of q132's bench median).  The array is tiny (one entry per
-    partition), so a plain Python loop — arithmetically IDENTICAL to the
-    non-one-pass path's driver loop (python pow, `decay*s + q`) — does
-    the work in microseconds with a flat plan.
-
-    ``cols``: tuple of ``(item_idx, power, lam, ignore_nulls)`` per
-    decayed series, in the ``q_{j}`` field order.
-    """
-    key = (n_items, tuple(cols))
-    cached = _EWM_CARRY_CACHE.get(key)
-    if cached is not None:
-        return cached
-
-    import pyarrow as pa
-    from pyspark.sql.functions import arrow_udf
-    from pyspark.sql import types as T
-
-    out_struct = T.StructType(
-        [T.StructField("pid", T.IntegerType())]
-        + [T.StructField(f"c{j}", T.DoubleType())
-           for j in range(len(cols))]
-        + [T.StructField(f"p{i}", T.LongType()) for i in range(n_items)])
-    spark_out = T.ArrayType(out_struct)
-    pa_struct = pa.struct(
-        [("pid", pa.int32())]
-        + [(f"c{j}", pa.float64()) for j in range(len(cols))]
-        + [(f"p{i}", pa.int64()) for i in range(n_items)])
-
-    @arrow_udf(spark_out)
-    def _udf(xa: pa.Array) -> pa.Array:
-        if isinstance(xa, pa.ChunkedArray):
-            xa = xa.combine_chunks()
-        out = []
-        for row in xa.to_pylist():
-            if row is None:
-                out.append(None)
-                continue
-            entries = sorted(row, key=lambda e: e["pid"])
-            s = [0.0] * len(cols)
-            n = [0] * n_items
-            rows = []
-            for e in entries:
-                rec = {"pid": e["pid"]}
-                for j in range(len(cols)):
-                    rec[f"c{j}"] = s[j]
-                for i in range(n_items):
-                    rec[f"p{i}"] = n[i]
-                rows.append(rec)
-                for j, (i, p, lam, ign) in enumerate(cols):
-                    length = e[f"nn{i}"] if ign else e["nr"]
-                    q = e[f"q_{j}"]
-                    s[j] = (lam ** (p * length)) * s[j] \
-                        + (q if q is not None else 0.0)
-                for i in range(n_items):
-                    n[i] += e[f"nn{i}"]
-            out.append(rows)
-        return pa.array(out, type=pa.list_(pa_struct))
-
-    _EWM_CARRY_CACHE[key] = _udf
-    return _udf
+_EWM_FOLD_CACHE = {}
 
 
 def ewm_kernel_fold_udf(n_items: int, cols):
@@ -647,8 +578,8 @@ def ewm_kernel_fold_udf(n_items: int, cols):
     GLOBAL first non-null keeps weight 1 — and the fold picks by the
     running prior count, mirroring the JVM path's driver loop exactly.
     """
-    key = ("kernel", n_items, tuple(cols))
-    cached = _EWM_CARRY_CACHE.get(key)
+    key = (n_items, tuple(cols))
+    cached = _EWM_FOLD_CACHE.get(key)
     if cached is not None:
         return cached
 
@@ -696,7 +627,7 @@ def ewm_kernel_fold_udf(n_items: int, cols):
             out.append(rows)
         return pa.array(out, type=pa.list_(pa_struct))
 
-    _EWM_CARRY_CACHE[key] = _udf
+    _EWM_FOLD_CACHE[key] = _udf
     return _udf
 
 

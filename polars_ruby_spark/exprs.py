@@ -3186,21 +3186,6 @@ class Expr:
         if self._multi_fn is None:
             inner = self
 
-            def gfn(sdf):
-                from .operators.row_index import attach_global_cum
-
-                tmp = _next_gord_name()
-                out = attach_global_cum(
-                    sdf, lambda df: inner._fn(df, None), kind, reverse, tmp)
-                if int_preserving:
-                    from pyspark.sql import types as T
-
-                    t = inner._probe_dtype(sdf, inner._fn(sdf, None))
-                    if isinstance(t, (T.ByteType, T.ShortType,
-                                      T.IntegerType, T.LongType)):
-                        out = out.withColumn(tmp, F.col(tmp).cast(t))
-                return out, tmp
-
             def _cum_finish(sdf2, tmp, _inner=inner,
                             _ip=int_preserving):
                 if _ip:
@@ -3212,9 +3197,18 @@ class Expr:
                         return sdf2.withColumn(tmp, F.col(tmp).cast(t))
                 return sdf2
 
+            def gfn(sdf):
+                from .operators.row_index import attach_global_cum_multi
+
+                tmp = _next_gord_name()
+                out = attach_global_cum_multi(
+                    sdf, [(lambda df: inner._fn(df, None), kind, reverse,
+                           tmp)])
+                return _cum_finish(out, tmp), tmp
+
             # batch metadata: the frame binder coalesces same-frame cum_*
-            # bindings into ONE attach_global_cum_multi (one range pin,
-            # one checkpoint, one offsets broadcast — round-6)
+            # bindings into ONE attach_global_cum_multi (one chunk
+            # exchange, one offsets broadcast — round-6)
             gfn._cum_batch = {
                 "value": (lambda df, _i=inner: _i._fn(df, None)),
                 "kind": kind, "reverse": reverse,
@@ -3595,7 +3589,7 @@ class Expr:
             # round-9: UNGROUPED rank otherwise compiles to a window with
             # NO partitionBy — one task for the whole frame.  The attach
             # builds it from a distinct-value prefix table, every stage
-            # multi-task (operators/row_index.attach_global_rank);
+            # multi-task (operators/row_index.attach_global_rank_multi);
             # grouped over(keys) keeps the partitioned rank windows.
             # "random" encodes its seed into the attach method string
             # (late round-10).
@@ -3604,12 +3598,12 @@ class Expr:
                              if method == "random" else method)
 
             def gfn(sdf):
-                from .operators.row_index import attach_global_rank
+                from .operators.row_index import attach_global_rank_multi
 
                 tmp = _next_gord_name()
-                return attach_global_rank(
-                    sdf, lambda d: inner._fn(d, None), attach_method,
-                    descending, tmp), tmp
+                return attach_global_rank_multi(
+                    sdf, lambda d: inner._fn(d, None),
+                    [(attach_method, descending, tmp)]), tmp
 
             if getattr(inner, "_is_column", False) and inner._meta:
                 # round-10: SAME-COLUMN rank bindings batch into ONE
@@ -4266,9 +4260,9 @@ class Expr:
         whole buffer per row (median/percentile even collect + sort it —
         O(n·w log w)), the q143-class density wall; the kernel answers the
         same windows in O(n log w) per chunk (operators/rolling_kernel.
-        attach_rolling_by).  sum/mean/count keep the plain window binding —
-        cheap per-row JVM re-aggregation AND the sort-key fast path, which
-        hook-bearing exprs forgo.  Any attach-time failure (exotic frame
+        attach_rolling_by_multi).  sum/mean/count keep the plain window
+        binding — cheap per-row JVM re-aggregation AND the sort-key fast
+        path, which hook-bearing exprs forgo.  Any attach-time failure (exotic frame
         dtype, unsupported value dtype) falls back to the window route."""
         from .functions.duration import parse_duration
 
@@ -4303,10 +4297,13 @@ class Expr:
             inner = self
 
             def attach(sdf, key_exprs):
-                from .operators.rolling_kernel import attach_rolling_by
+                from .operators.rolling_kernel import \
+                    attach_rolling_by_multi
 
-                return attach_rolling_by(sdf, inner, by_e, list(key_exprs),
-                                         span, closed, kernel_kind)
+                tmp = _next_gord_name()
+                return attach_rolling_by_multi(
+                    sdf, by_e, list(key_exprs), span, closed,
+                    [(inner, kernel_kind, tmp)]), tmp
 
             def gfn(sdf):
                 try:
@@ -4555,11 +4552,11 @@ class Expr:
         e._name = self._name
 
         def gfn(sdf):
-            from .operators.ewm import attach_ewm_global
+            from .operators.ewm import attach_ewm_global_multi
 
             tmp = _next_gord_name()
-            return attach_ewm_global(
-                sdf, lambda df: inner._fn(df, None), spec, tmp), tmp
+            return attach_ewm_global_multi(
+                sdf, [(lambda df: inner._fn(df, None), spec, tmp)]), tmp
 
         # batch metadata: the frame binder coalesces SAME-FRAME ewm
         # bindings into one attach_ewm_global_multi call (one range pin,

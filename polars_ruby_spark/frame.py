@@ -348,6 +348,21 @@ class LazyFrame:
             # internal self-branches (rank-zip vals side) don't drag a vestigial
             # pruned one-row broadcast through their plans
             hook_cols: dict[int, str] = {}
+
+            def chain_posts(sdf, k, cur, posts):
+                # a batched binding's queued elementwise lifts (e.g.
+                # ``.round(2)`` on the hook expr) land as helper columns
+                # over its attached column; the last one is the binding
+                from .exprs import _next_gord_name
+
+                for fpost in posts:
+                    nxt = _next_gord_name()
+                    sdf = sdf.withColumn(nxt, fpost(F.col(cur)))
+                    cur = nxt
+                    helpers.append(cur)
+                hook_cols[k] = cur
+                return sdf
+
             if not (context == "select" and all_agg) and not unplanned_agg:
                 # SAME-FRAME ewm bindings batch into ONE attach: one range
                 # pin + checkpoint + two O(partitions) collects for all of
@@ -366,14 +381,8 @@ class LazyFrame:
                         sdf, [(b["value"], b["spec"], tmp)
                               for (_k, b), tmp in zip(ewm_ks, tmps)])
                     for (k, b), tmp in zip(ewm_ks, tmps):
-                        cur = tmp
-                        helpers.append(cur)
-                        for fpost in b["post"]:
-                            nxt = _next_gord_name()
-                            sdf = sdf.withColumn(nxt, fpost(F.col(cur)))
-                            cur = nxt
-                            helpers.append(cur)
-                        hook_cols[k] = cur
+                        helpers.append(tmp)
+                        sdf = chain_posts(sdf, k, tmp, b["post"])
                 # same for cum_* bindings: one pin + one offsets broadcast
                 cum_ks = [
                     (k, e._global_ordinal_fn._cum_batch)
@@ -391,14 +400,8 @@ class LazyFrame:
                               for (_k, b), tmp in zip(cum_ks, tmps)])
                     for (k, b), tmp in zip(cum_ks, tmps):
                         sdf = b["finish"](sdf, tmp)
-                        cur = tmp
-                        helpers.append(cur)
-                        for fpost in b["post"]:
-                            nxt = _next_gord_name()
-                            sdf = sdf.withColumn(nxt, fpost(F.col(cur)))
-                            cur = nxt
-                            helpers.append(cur)
-                        hook_cols[k] = cur
+                        helpers.append(tmp)
+                        sdf = chain_posts(sdf, k, tmp, b["post"])
                 # same for rolling_by kernel attaches: bindings sharing
                 # (by, span, closed, keys) run ONE kernel shuffle for all
                 # their aggregates instead of one per stat (round-9)
@@ -465,12 +468,7 @@ class LazyFrame:
                             sdf = sdf.withColumn(nxt, fin(sdf, cur))
                             cur = nxt
                             helpers.append(cur)
-                        for fpost in b["post"]:
-                            nxt = _next_gord_name()
-                            sdf = sdf.withColumn(nxt, fpost(F.col(cur)))
-                            cur = nxt
-                            helpers.append(cur)
-                        hook_cols[k] = cur
+                        sdf = chain_posts(sdf, k, cur, b["post"])
                 # same for ungrouped rank bindings: ALL methods and both
                 # directions over the same column derive from ONE ascending
                 # distinct-prefix table (round-10) — one distinct aggregate,
@@ -497,14 +495,8 @@ class LazyFrame:
                         [(b["method"], b["descending"], tmp)
                          for (_k, b), tmp in zip(grp, tmps)])
                     for (k, b), tmp in zip(grp, tmps):
-                        cur = tmp
-                        helpers.append(cur)
-                        for fpost in b["post"]:
-                            nxt = _next_gord_name()
-                            sdf = sdf.withColumn(nxt, fpost(F.col(cur)))
-                            cur = nxt
-                            helpers.append(cur)
-                        hook_cols[k] = cur
+                        helpers.append(tmp)
+                        sdf = chain_posts(sdf, k, tmp, b["post"])
                 # same for fill-family bindings (round-10): every
                 # forward/backward fill and interpolate on this frame —
                 # including merged binary compositions — flattens into ONE

@@ -281,22 +281,22 @@ def connected_components(edges: DataFrame, src: str = "id_a", dst: str = "id_b",
     # sample: per-row octet_length is codegen-cheap inside a pass the job
     # pays anyway, and a whole-graph mean can only make the byte guard
     # more honest (same 16-byte fallback when the graph is empty).
+    width = (F.coalesce(F.octet_length(F.col(src).cast("string")), F.lit(8))
+             + F.coalesce(F.octet_length(F.col(dst).cast("string")), F.lit(8)))
     edges = edges.persist()
-    n_edges, avg_w = edges.agg(
-        F.count(F.lit(1)),
-        F.avg(F.coalesce(F.octet_length(F.col(src).cast("string")), F.lit(8))
-              + F.coalesce(F.octet_length(F.col(dst).cast("string")),
-                           F.lit(8)))).first()
-    use_driver = (n_edges <= driver_threshold
-                  and n_edges * float(avg_w or 16.0) <= driver_max_bytes)
-    if use_driver:
-        out = _cc_driver_union_find(edges, src, dst)
+    # every path out of here — including a failing stats job, union-find
+    # collect or symmetric-edge checkpoint — releases the cached edges
+    try:
+        n_edges, avg_w = edges.agg(F.count(F.lit(1)), F.avg(width)).first()
+        use_driver = (n_edges <= driver_threshold
+                      and n_edges * float(avg_w or 16.0) <= driver_max_bytes)
+        if use_driver:
+            return _cc_driver_union_find(edges, src, dst)
+        sym = (edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+               .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))))
+        sym = sym.repartition("v").localCheckpoint(eager=True)
+    finally:
         edges.unpersist()
-        return out
-    sym = (edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-           .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))))
-    sym = sym.repartition("v").localCheckpoint(eager=True)
-    edges.unpersist()
     labels = (sym.select(F.col("u").alias("id")).distinct()
               .withColumn("label", F.col("id"))
               .localCheckpoint(eager=True))
@@ -428,7 +428,12 @@ def _hot_gram_salt(grams: DataFrame, gh_col: str,
 
     env = os.environ.get("SPARK_GRAFT_GRAM_SALT", "").strip()
     if env:
-        v = int(env)
+        try:
+            v = int(env)
+        except ValueError:
+            raise ValueError(
+                f"SPARK_GRAFT_GRAM_SALT must be an integer (0/1 = off, "
+                f">1 = salt modulus), got {env!r}") from None
         return 0 if v <= 1 else v
     top, tot = (grams.select(F.col(gh_col).alias("__g__"))
                 .where(F.col("__g__").isNotNull())  # short-doc null grams

@@ -35,8 +35,8 @@ only JVM window aggregates via a *block-segmented prescaled scan*:
    (``repartitionByRange(ROW_IDX)``) and the per-partition boundary
    states — O(num_partitions) rows — are composed exactly on the driver
    (the affine maps ``v -> lam^len * v + total`` compose associatively),
-   then broadcast back: the attach_global_cum two-pass pattern
-   (operators/row_index.py:120).
+   then broadcast back: the two-pass pattern of
+   ``row_index.attach_global_cum_multi``.
 
 All stages are multi-task; no Python UDF, no collected arrays, no
 single-partition window over data-sized input.
@@ -626,7 +626,8 @@ def attach_ewm_grouped(sdf: DataFrame, value_fn, key_fns, spec: dict,
 
 
 def attach_ewm_global_multi(sdf: DataFrame, items: list) -> DataFrame:
-    """Batched ungrouped ewm: ALL bindings share ONE range-partition pin,
+    """Ungrouped ewm over global row order, batched (a lone binding is a
+    one-item batch): ALL bindings share ONE range-partition pin,
     ONE lazy checkpoint, and TWO O(partitions) driver collects (round-6;
     the per-binding shape paid the partitioning pass and both collects N
     times — q132's two bindings halve their fixed cost here.  A round-5
@@ -646,21 +647,15 @@ def attach_ewm_global_multi(sdf: DataFrame, items: list) -> DataFrame:
         return _attach_ewm_global_kernel(sdf, items)
     from pyspark.sql import types as T
 
-    # adjust=True scans don't consume the prior flags (base weight is 1
-    # regardless of `first`), so the pass-1 collect can MERGE into the
-    # bounds collect — ONE driver job per construction instead of two;
-    # only the m-offset is applied post-join then.  (Reachable only with a
-    # reset-form binding in the batch now, so one_pass is always False —
-    # kept for the shape of the code below.)
-    one_pass = all(spec["adjust"] and not _is_reset_form(spec)
-                   for _vf, spec, _o in items)
-    # the checkpoint stays here (round-7 note): a deterministic-chunk key
+    # Past the kernel return every batch holds a reset-form binding, whose
+    # scan consumes the prior flags: two O(partitions) driver collects.
+    # The checkpoint stays here (round-7 note): a deterministic-chunk key
     # (row_index.chunked_by_index) was measured — it cut the ~0.5 s of
     # eager physical planning the lazy checkpoint pays at construction but
     # the ewm base (scan + row-index attach + value projections) is deep
     # enough that recomputing it in the totals/fold branch cost MORE
     # (q132 execute 2.9 s → 4.1 s); the checkpoint also pins the sampled
-    # range layout the non-one-pass prior collects key on.
+    # range layout the prior collects key on.
     # Round-8: when the input IS a fresh pinned with_row_index output
     # (``_plsq_idx_pinned`` — sorted input, checkpointed inside
     # with_row_index), its partitions are ALREADY contiguous ROW_IDX
@@ -678,35 +673,34 @@ def attach_ewm_global_multi(sdf: DataFrame, items: list) -> DataFrame:
     base = base.withColumns(
         {xn: vf(base) for xn, (vf, _s, _o) in zip(xs, items)})
     spark = base.sparkSession
-    if not one_pass:
-        # pass 1 (one job, O(partitions) rows): per-pid per-binding counted
-        # lengths -> exclusive prefix non-null counts + prev last-obs index
-        aggs1 = []
-        for i, xn in enumerate(xs):
-            aggs1 += [F.count(xn).alias(f"__n_nn_{i}__"),
-                      F.max(F.when(F.col(xn).isNotNull(),
-                                   F.col(ROW_IDX))).alias(f"__lo_{i}__")]
-        counts = sorted(base.groupBy(_PID).agg(*aggs1).collect(),
-                        key=lambda row: row[_PID])
-        run_nn = [0] * len(items)
-        run_last: list = [None] * len(items)
-        prior_rows = []
-        for row in counts:
-            vals = [row[_PID]]
-            for i in range(len(items)):
-                vals += [run_nn[i], run_last[i]]
-            prior_rows.append(tuple(vals))
-            for i in range(len(items)):
-                run_nn[i] += row[f"__n_nn_{i}__"]
-                if row[f"__lo_{i}__"] is not None:
-                    run_last[i] = row[f"__lo_{i}__"]
-        fields = [T.StructField(_PID, T.IntegerType())]
+    # pass 1 (one job, O(partitions) rows): per-pid per-binding counted
+    # lengths -> exclusive prefix non-null counts + prev last-obs index
+    aggs1 = []
+    for i, xn in enumerate(xs):
+        aggs1 += [F.count(xn).alias(f"__n_nn_{i}__"),
+                  F.max(F.when(F.col(xn).isNotNull(),
+                               F.col(ROW_IDX))).alias(f"__lo_{i}__")]
+    counts = sorted(base.groupBy(_PID).agg(*aggs1).collect(),
+                    key=lambda row: row[_PID])
+    run_nn = [0] * len(items)
+    run_last: list = [None] * len(items)
+    prior_rows = []
+    for row in counts:
+        vals = [row[_PID]]
         for i in range(len(items)):
-            fields += [T.StructField(f"__ewm_prior_{i}__", T.LongType()),
-                       T.StructField(f"__ewm_prevbnd_{i}__", T.LongType())]
-        base = base.join(
-            F.broadcast(spark.createDataFrame(
-                prior_rows, schema=T.StructType(fields))), _PID, "left")
+            vals += [run_nn[i], run_last[i]]
+        prior_rows.append(tuple(vals))
+        for i in range(len(items)):
+            run_nn[i] += row[f"__n_nn_{i}__"]
+            if row[f"__lo_{i}__"] is not None:
+                run_last[i] = row[f"__lo_{i}__"]
+    fields = [T.StructField(_PID, T.IntegerType())]
+    for i in range(len(items)):
+        fields += [T.StructField(f"__ewm_prior_{i}__", T.LongType()),
+                   T.StructField(f"__ewm_prevbnd_{i}__", T.LongType())]
+    base = base.join(
+        F.broadcast(spark.createDataFrame(
+            prior_rows, schema=T.StructType(fields))), _PID, "left")
 
     # per-binding scans, outputs renamed to _{i}-suffixed columns
     per_item = []  # (sfx, [(col, power)], reset_form, spec, out_name)
@@ -715,8 +709,7 @@ def attach_ewm_global_multi(sdf: DataFrame, items: list) -> DataFrame:
         need_var = spec["kind"] in ("var", "std")
         lam, alpha = spec["lam"], spec["alpha"]
         reset_form = _is_reset_form(spec)
-        prior_empty = (None if one_pass
-                       else F.col(f"__ewm_prior_{i}__") == 0)
+        prior_empty = F.col(f"__ewm_prior_{i}__") == 0
         if reset_form:
             prepped, series = _varying_inputs(
                 scanned, xs[i], [F.col(_PID)], lam, alpha, need_var,
@@ -732,11 +725,9 @@ def attach_ewm_global_multi(sdf: DataFrame, items: list) -> DataFrame:
                 prior_empty=prior_empty)
             powers = {"s0": 1, "s1": 1, "s2": 1, "sq": 2}
             cols_p = [(f"__ewm_{s}__", powers[s]) for s in sfxs]
-        if not one_pass:
-            # min_periods / first-row masks need the GLOBAL non-null count
-            out = out.withColumn(
-                "__ewm_m__",
-                F.col("__ewm_m__") + F.col(f"__ewm_prior_{i}__"))
+        # min_periods / first-row masks need the GLOBAL non-null count
+        out = out.withColumn(
+            "__ewm_m__", F.col("__ewm_m__") + F.col(f"__ewm_prior_{i}__"))
         ren = {c: c[:-2] + f"_{i}__" for c in _EWM_DROPS
                if c in out.columns}
         out = out.withColumnsRenamed(ren)
@@ -745,7 +736,6 @@ def attach_ewm_global_multi(sdf: DataFrame, items: list) -> DataFrame:
         scanned = out
 
     # bounds pass: every binding's per-pid last-row decayed totals
-    # (+ the counts when the prior pass was merged away)
     aggs2 = [F.count(F.lit(1)).alias("__n_rows__")]
     for i, (sfx, cols_p, reset_form, spec, _o) in enumerate(per_item):
         aggs2.append(F.count(xs[i]).alias(f"__n_nn_{i}__"))
@@ -753,81 +743,39 @@ def attach_ewm_global_multi(sdf: DataFrame, items: list) -> DataFrame:
             aggs2.append(F.max(f"__ewm_L{sfx}__").alias(f"__dL_{i}__"))
         for c, _p in cols_p:
             aggs2.append(F.max_by(F.col(c), F.col(ROW_IDX)).alias(f"__q_{c}"))
-    if one_pass:
-        # LAZY carry composition (round-6), Arrow-folded (round-7): the
-        # per-partition affine maps compose sequentially over the
-        # pid-sorted O(partitions) totals array.  The round-6 JVM
-        # `F.aggregate` fold ran no job at construction but its
-        # struct-rebuilding lambda made Catalyst ANALYSIS the dominant
-        # per-construction cost (~2.2 s of q132's bench median); a tiny
-        # arrow_udf does the same python-pow arithmetic the non-one-pass
-        # driver loop uses, with a flat plan.
-        from .._udf_helpers import ewm_carry_arrays_udf
-
-        all_cols = [(i, c, p, spec)
-                    for i, (sfx, cols_p, _r, spec, _o) in enumerate(per_item)
-                    for c, p in cols_p]
-        sf_list = ([F.col(_PID).alias("pid"),
-                    F.col("__n_rows__").alias("nr")]
-                   + [F.col(f"__n_nn_{i}__").alias(f"nn{i}")
-                      for i in range(len(items))]
-                   + [F.col(f"__q_{c}").alias(f"q_{j}")
-                      for j, (_i, c, _p, _s) in enumerate(all_cols)])
-        onerow = (scanned.groupBy(_PID).agg(*aggs2)
-                  .agg(F.array_sort(F.collect_list(F.struct(*sf_list)))
-                       .alias("__arr__")))
-        fold = ewm_carry_arrays_udf(
-            len(items),
-            tuple((i, p, spec["lam"], bool(spec["ignore_nulls"]))
-                  for (i, _c, p, spec) in all_cols))
-        carry_tab = (onerow.select(
-            F.explode(fold(F.col("__arr__"))).alias("r"))
-            .select(F.col("r.pid").alias(_PID),
-                    *[F.col(f"r.c{j}").alias(f"__c_{c}")
-                      for j, (_i, c, _p, _s) in enumerate(all_cols)],
-                    *[F.col(f"r.p{i}").alias(f"__p_{i}__")
-                      for i in range(len(items))]))
-        joined = scanned.join(F.broadcast(carry_tab), _PID, "left")
-        joined = joined.withColumns({
-            f"__ewm_m_{i}__": F.col(f"__ewm_m_{i}__")
-            + F.coalesce(F.col(f"__p_{i}__"), F.lit(0))
-            for i in range(len(items))})
-    else:
-        bounds = sorted(scanned.groupBy(_PID).agg(*aggs2).collect(),
-                        key=lambda row: row[_PID])
-        carry_fields = [T.StructField(_PID, T.IntegerType())]
-        for sfx, cols_p, _r, _s, _o in per_item:
-            carry_fields += [T.StructField(f"__c_{c}", T.DoubleType())
-                             for c, _p in cols_p]
-        states = [{c: 0.0 for c, _p in cols_p}
-                  for _sfx, cols_p, _r, _s, _o in per_item]
-        carry_rows = []
-        for row in bounds:
-            vals = [row[_PID]]
-            for i, (sfx, cols_p, reset_form, spec, _o) in enumerate(
-                    per_item):
-                vals += [states[i][c] for c, _p in cols_p]
-                if reset_form:
-                    d_l = row[f"__dL_{i}__"] or 0.0
-                    decays = {c: math.exp(-p * d_l) for c, p in cols_p}
-                else:
-                    length = (row[f"__n_nn_{i}__"] if spec["ignore_nulls"]
-                              else row["__n_rows__"])
-                    decays = {c: spec["lam"] ** (p * length)
-                              for c, p in cols_p}
-                for c, _p in cols_p:
-                    q = row[f"__q_{c}"]
-                    states[i][c] = (decays[c] * states[i][c]
-                                    + (q if q is not None else 0.0))
-            carry_rows.append(tuple(vals))
-        joined = scanned.join(
-            F.broadcast(spark.createDataFrame(
-                carry_rows, schema=T.StructType(carry_fields))),
-            _PID, "left")
+    bounds = sorted(scanned.groupBy(_PID).agg(*aggs2).collect(),
+                    key=lambda row: row[_PID])
+    carry_fields = [T.StructField(_PID, T.IntegerType())]
+    for sfx, cols_p, _r, _s, _o in per_item:
+        carry_fields += [T.StructField(f"__c_{c}", T.DoubleType())
+                         for c, _p in cols_p]
+    states = [{c: 0.0 for c, _p in cols_p}
+              for _sfx, cols_p, _r, _s, _o in per_item]
+    carry_rows = []
+    for row in bounds:
+        vals = [row[_PID]]
+        for i, (sfx, cols_p, reset_form, spec, _o) in enumerate(per_item):
+            vals += [states[i][c] for c, _p in cols_p]
+            if reset_form:
+                d_l = row[f"__dL_{i}__"] or 0.0
+                decays = {c: math.exp(-p * d_l) for c, p in cols_p}
+            else:
+                length = (row[f"__n_nn_{i}__"] if spec["ignore_nulls"]
+                          else row["__n_rows__"])
+                decays = {c: spec["lam"] ** (p * length)
+                          for c, p in cols_p}
+            for c, _p in cols_p:
+                q = row[f"__q_{c}"]
+                states[i][c] = (decays[c] * states[i][c]
+                                + (q if q is not None else 0.0))
+        carry_rows.append(tuple(vals))
+    joined = scanned.join(
+        F.broadcast(spark.createDataFrame(
+            carry_rows, schema=T.StructType(carry_fields))),
+        _PID, "left")
 
     out_frame = joined
-    drops = [_PID] + xs + ([f"__p_{i}__" for i in range(len(items))]
-                           if one_pass else [])
+    drops = [_PID] + xs
     for i, (sfx, cols_p, reset_form, spec, out_name) in enumerate(per_item):
         if reset_form:
             decay_of = {c: F.exp(-F.col(f"__ewm_L{sfx}__") * p)
@@ -849,119 +797,3 @@ def attach_ewm_global_multi(sdf: DataFrame, items: list) -> DataFrame:
     drops = [c for c in drops if c in out_frame.columns]
     return out_frame.drop(*drops).sortWithinPartitions(ROW_IDX)
 
-
-def attach_ewm_global(sdf: DataFrame, value_fn, spec: dict,
-                      out_name: str) -> DataFrame:
-    """Ungrouped ewm over global row order, multi-task.
-
-    Range-partition on ROW_IDX (contiguous index ranges, pinned with a lazy
-    localCheckpoint — the sampled-boundary hazard attach_global_cum
-    documents), scan within partitions, then compose the O(partitions)
-    boundary affine maps ``v -> lam^(p*len) * v + total`` exactly on the
-    driver and broadcast the incoming carry per partition back.
-    """
-    assert ROW_IDX in sdf.columns
-    if not _is_reset_form(spec):
-        # round-8: standard forms take the Arrow kernel via the batched
-        # entry point (zero shuffles / window sorts; see module note)
-        return attach_ewm_global_multi(sdf, [(value_fn, spec, out_name)])
-    lam, alpha = spec["lam"], spec["alpha"]
-    need_var = spec["kind"] in ("var", "std")
-    reset_form = _is_reset_form(spec)
-    if getattr(sdf, "_plsq_idx_pinned", False):
-        # fresh pinned with_row_index output: already contiguous ROW_IDX
-        # ranges on a pinned layout (see attach_ewm_global_multi, round-8)
-        base = sdf.withColumn(_PID, F.spark_partition_id())
-    else:
-        base = (sdf.repartitionByRange(F.col(ROW_IDX).asc())
-                .localCheckpoint(eager=False)
-                .withColumn(_PID, F.spark_partition_id()))
-    base = base.withColumn("__ewm_x__", value_fn(base))
-    # pass 1 (O(partitions) rows): per-pid counted lengths -> exclusive
-    # prefix counts (global non-null offset) and, for the reset form, the
-    # previous partitions' last observation index (the cross-pid gap)
-    counts = sorted(base.groupBy(_PID).agg(
-        F.count(F.lit(1)).alias("__n_rows__"),
-        F.count("__ewm_x__").alias("__n_nn__"),
-        F.max(F.when(F.col("__ewm_x__").isNotNull(),
-                     F.col(ROW_IDX))).alias("__last_obs__")).collect(),
-        key=lambda row: row[_PID])
-    prior_rows = []
-    run_nn, run_last = 0, None
-    for row in counts:
-        prior_rows.append((row[_PID], run_nn, run_last))
-        run_nn += row["__n_nn__"]
-        if row["__last_obs__"] is not None:
-            run_last = row["__last_obs__"]
-    spark = base.sparkSession
-    from pyspark.sql import types as T
-
-    prior_schema = T.StructType([
-        T.StructField(_PID, T.IntegerType()),
-        T.StructField("__ewm_prior__", T.LongType()),
-        T.StructField("__ewm_prevbnd__", T.LongType())])
-    prior_sdf = spark.createDataFrame(prior_rows, schema=prior_schema)
-    base = base.join(F.broadcast(prior_sdf), _PID, "left")
-    prior_empty = F.col("__ewm_prior__") == 0
-    if reset_form:
-        prepped, series = _varying_inputs(
-            base, "__ewm_x__", [F.col(_PID)], lam, alpha, need_var,
-            prior_empty=prior_empty, prev_idx_boundary="__ewm_prevbnd__")
-        scanned = _varying_scan(prepped, series, "__ewm_d__", [F.col(_PID)])
-        sfx_cols = [(s[0], s[2]) for s in series]   # (col, log scale)
-        comb = _combine_varying(spec["kind"], spec["bias"],
-                                spec["min_periods"])
-    else:
-        scanned, sfxs = _decayed_sums(
-            base, "__ewm_x__", [F.col(_PID)], lam, alpha,
-            spec["adjust"], spec["ignore_nulls"], need_var,
-            prior_empty=prior_empty)
-        powers = {"s0": 1, "s1": 1, "s2": 1, "sq": 2}
-        sfx_cols = [(f"__ewm_{s}__", powers[s]) for s in sfxs]
-        comb = _combine(spec["kind"], spec["bias"], spec["min_periods"])
-    # min_periods / first-row masks need the GLOBAL non-null count
-    scanned = scanned.withColumn(
-        "__ewm_m__", F.col("__ewm_m__") + F.col("__ewm_prior__"))
-    # pass 2 (O(partitions) rows): each series' decayed total at the pid's
-    # last row; compose the affine maps v -> decay(len)*v + total exactly
-    # driver-side to get each pid's incoming carry
-    aggs = [F.count(F.lit(1)).alias("__n_rows__"),
-            F.count("__ewm_x__").alias("__n_nn__")]
-    if reset_form:
-        aggs.append(F.max("__ewm_L__").alias("__dL__"))
-    for c, _p in sfx_cols:
-        aggs.append(F.max_by(F.col(c), F.col(ROW_IDX)).alias(f"__q_{c}"))
-    bounds = sorted(scanned.groupBy(_PID).agg(*aggs).collect(),
-                    key=lambda row: row[_PID])
-    state = {c: 0.0 for c, _p in sfx_cols}
-    carry_rows = []
-    for row in bounds:
-        carry_rows.append((row[_PID],) + tuple(state[c] for c, _p in sfx_cols))
-        if reset_form:
-            dL = row["__dL__"] or 0.0
-            decays = {c: math.exp(-p * dL) for c, p in sfx_cols}
-        else:
-            length = (row["__n_nn__"] if spec["ignore_nulls"]
-                      else row["__n_rows__"])
-            decays = {c: lam ** (p * length) for c, p in sfx_cols}
-        for c, _p in sfx_cols:
-            q = row[f"__q_{c}"]
-            state[c] = decays[c] * state[c] + (q if q is not None else 0.0)
-    carry_schema = T.StructType(
-        [T.StructField(_PID, T.IntegerType())]
-        + [T.StructField(f"__c_{c}", T.DoubleType()) for c, _p in sfx_cols])
-    carry_sdf = spark.createDataFrame(carry_rows, schema=carry_schema)
-    joined = scanned.join(F.broadcast(carry_sdf), _PID, "left")
-    if reset_form:
-        decay_of = {c: F.exp(-F.col("__ewm_L__") * p) for c, p in sfx_cols}
-    else:
-        j1 = (F.col("__ewm_j__") + 1).cast("double")
-        decay_of = {c: F.pow(F.lit(lam), j1 * p) for c, p in sfx_cols}
-    merged = joined.withColumns({
-        c: F.col(c) + decay_of[c] * F.coalesce(F.col(f"__c_{c}"), F.lit(0.0))
-        for c, _p in sfx_cols})
-    out = merged.withColumn(out_name, comb)
-    drops = ([_PID, "__ewm_x__", "__ewm_prior__", "__ewm_prevbnd__"]
-             + [f"__c_{c}" for c, _p in sfx_cols]
-             + [c for c in _EWM_DROPS if c in out.columns])
-    return out.drop(*drops).sortWithinPartitions(ROW_IDX)

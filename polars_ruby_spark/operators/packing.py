@@ -31,8 +31,8 @@ def pack_greedy(sdf: DataFrame, token_col: str, id_col: str = "doc_id",
     # localCheckpoint pins ONE sampled range layout: `local` is consumed by
     # both the output join and the offsets branch — as separate subtrees
     # each would re-execute the range exchange with its own sampled
-    # boundaries, corrupting the pid→offset mapping (the attach_global_cum
-    # bug class, row_index.py:132)
+    # boundaries, corrupting the pid→offset mapping (the bug class
+    # row_index.attach_global_cum_multi documents)
     ordered = sdf.select(F.col(id_col), F.col(token_col).alias("n_tokens")) \
         .repartitionByRange(id_col).sortWithinPartitions(id_col) \
         .localCheckpoint(eager=False) \

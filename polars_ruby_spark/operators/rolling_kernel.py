@@ -681,18 +681,6 @@ def make_sliding_kernel(plan, key_names, out_names, out_types):
     return kern
 
 
-def attach_rolling_by(sdf, inner, by_e, key_exprs, span_us: int,
-                      closed: str, kind):
-    """Single-aggregate convenience wrapper over
-    :func:`attach_rolling_by_multi` — see there."""
-    from ..exprs import _next_gord_name
-
-    helper = _next_gord_name()
-    out = attach_rolling_by_multi(sdf, by_e, key_exprs, span_us, closed,
-                                  [(inner, kind, helper)])
-    return out, helper
-
-
 def attach_rolling_by_multi(sdf, by_e, key_exprs, span_us: int,
                             closed: str, entries, row_frame=None,
                             entry_frames=None):

@@ -113,19 +113,12 @@ def with_row_index(sdf: DataFrame, name: str = ROW_IDX, offset: int = 0) -> Data
         # spark_partition_id order BY CONSTRUCTION (index = pid offset +
         # local position), and — when the input was checkpointed above —
         # the physical layout is PINNED (no sampled range boundaries).
-        # Downstream partition-prefix consumers (attach_ewm_global*) read
-        # the tag to skip their own repartitionByRange + localCheckpoint:
+        # Downstream partition-prefix consumers (attach_ewm_global_multi)
+        # read the tag to skip their own repartitionByRange + localCheckpoint:
         # a redundant sampling job, full shuffle and materialization on
         # top of an input that already has the layout they build.
         out._plsq_idx_pinned = pinned
     return out
-
-
-def ensure_row_index(sdf: DataFrame) -> DataFrame:
-    """Idempotently attach the hidden order column."""
-    if ROW_IDX in sdf.columns:
-        return sdf
-    return with_row_index(sdf, ROW_IDX)
 
 
 def strip_row_index(sdf: DataFrame) -> DataFrame:
@@ -200,67 +193,27 @@ def chunked_by_index(sdf: DataFrame, n_chunks: int | None = None):
     return base.withColumn(_CHK, chunk).drop(mn, mx)
 
 
-def attach_global_cum(sdf: DataFrame, value_fn, kind: str, reverse: bool,
-                      out_name: str) -> DataFrame:
-    """Attach an ungrouped cumulative aggregate over global row order.
+def attach_global_cum_multi(sdf: DataFrame, items: list) -> DataFrame:
+    """Ungrouped cumulative aggregates over global row order, batched
+    (round-6): ALL same-frame cum_* bindings share ONE chunk exchange,
+    ONE per-chunk totals aggregate and ONE broadcast offsets join —
+    each binding paid all of them on its own before (q107: three chained
+    attaches → one).  A lone binding is a one-item batch.
+    ``items``: ``[(value_fn, kind, reverse, out), …]``.
 
-    Two-pass partition-prefix (the with_row_index construction): range-
-    repartition by ROW_IDX so partitions hold contiguous index ranges, local
-    prefix-aggregate inside each partition, combine per-partition totals into
-    exclusive offsets via a window over the O(partitions)-row totals table,
-    broadcast-join the offsets back and merge.  No single-task window.
+    Two-pass chunk prefix (the with_row_index construction): contiguous
+    ROW_IDX chunks, a local prefix aggregate inside each chunk, per-chunk
+    totals combined into exclusive offsets by a window over the
+    O(chunks)-row totals table, broadcast-joined back and merged.  No
+    single-task window.
     """
     assert ROW_IDX in sdf.columns
-    aggf, comb = _CUM_AGG[kind], _CUM_COMBINE[kind]
     # DETERMINISTIC chunk ids (round-7): the former repartitionByRange +
     # localCheckpoint pinned one SAMPLED layout for both branches (divergent
     # boundaries corrupted the offsets, surfaced at sf0.1) but paid ~1 s of
     # physical planning at every plan construction plus a materialization.
     # Chunk ids are a pure row function, so the data branch and the
     # column-pruned totals branch agree by construction — no pin needed.
-    base = chunked_by_index(sdf)
-    c = value_fn(base)
-    dirn = F.col(ROW_IDX).desc() if reverse else F.col(ROW_IDX).asc()
-    local = aggf(c).over(
-        Window.partitionBy(_CHK).orderBy(dirn)
-        .rowsBetween(Window.unboundedPreceding, 0))
-    totals = base.groupBy(_CHK).agg(aggf(c).alias("__gc_tot__"))
-    pdir = F.col(_CHK).desc() if reverse else F.col(_CHK).asc()
-    offsets = totals.select(
-        _CHK,
-        comb(F.col("__gc_tot__")).over(
-            Window.orderBy(pdir).rowsBetween(Window.unboundedPreceding, -1)
-        ).alias(_OFF))
-    joined = base.join(F.broadcast(offsets), _CHK, "left")
-    off = F.col(_OFF)
-    if kind == "min":
-        res = F.least(local, off)          # least/greatest skip nulls
-    elif kind == "max":
-        res = F.greatest(local, off)
-    elif kind == "count":
-        res = (local + F.coalesce(off, F.lit(0))).cast("long")
-    elif kind == "product":
-        res = F.when(local.isNull() & off.isNull(), F.lit(None)).otherwise(
-            F.coalesce(local, F.lit(1.0)) * F.coalesce(off, F.lit(1.0)))
-    else:  # sum
-        res = F.when(local.isNull() & off.isNull(), F.lit(None)).otherwise(
-            F.coalesce(local, F.lit(0)) + F.coalesce(off, F.lit(0)))
-    # the chunk window's hash exchange scrambles physical row order; the
-    # caller marks the frame order-dirty and the deferred restore sorts at
-    # polars-semantics exports (driver handoffs legitimately skip it)
-    return joined.withColumn(out_name, res).drop(_CHK, _OFF)
-
-
-def attach_global_cum_multi(sdf: DataFrame, items: list) -> DataFrame:
-    """Batched ungrouped cumulative attaches (round-6): ALL same-frame
-    cum_* bindings share ONE range-partition pin, ONE checkpoint, ONE
-    per-partition totals aggregate and ONE broadcast offsets join —
-    each binding paid all four on its own before (q107: three chained
-    attaches → one).  ``items``: ``[(value_fn, kind, reverse, out), …]``.
-    """
-    assert ROW_IDX in sdf.columns
-    # deterministic chunk ids replace the range pin + checkpoint (round-7;
-    # see attach_global_cum / chunked_by_index)
     base = chunked_by_index(sdf)
     tot_aggs, off_cols = [], []
     locals_ = {}
@@ -350,10 +303,10 @@ def attach_global_rle_id(sdf: DataFrame, value_fn, out_name: str) -> DataFrame:
     lag'd and broadcast back, so each partition's first row compares against
     its predecessor partition's last value; the change flags then prefix-sum
     through the same two-pass partition-offset construction as
-    attach_global_cum."""
+    attach_global_cum_multi."""
     assert ROW_IDX in sdf.columns
     # deterministic chunk ids replace the range pin + checkpoint (round-7;
-    # see attach_global_cum / chunked_by_index): the change-flag and totals
+    # see attach_global_cum_multi / chunked_by_index): the change-flag and totals
     # branches agree on chunk membership as a pure row function
     base = chunked_by_index(sdf)
     c = value_fn(base)
@@ -435,19 +388,6 @@ def attach_grouped_rank_zip(sdf: DataFrame, value_fn, key_fns, out_name: str,
     # round-7: order left dirty for the caller's deferred restore (hook
     # binds mark the frame scrambled; exports sort, driver handoffs skip)
     return joined.drop(*drop)
-
-
-def attach_global_rank(sdf: DataFrame, value_fn, method: str,
-                       descending: bool, out_name: str) -> DataFrame:
-    """UNGROUPED value rank without the keyless window (round-9).
-
-    ``rank()`` with no ``over`` keys previously compiled to
-    ``F.rank().over(Window.orderBy(v))`` — a window with NO partitionBy,
-    which funnels the whole frame into ONE task.  Thin wrapper over
-    :func:`attach_global_rank_multi` (round-10 batching), which see.
-    """
-    return attach_global_rank_multi(sdf, value_fn,
-                                    [(method, descending, out_name)])
 
 
 def _global_rank_prefix_tab(counts: DataFrame) -> DataFrame:
@@ -595,22 +535,6 @@ def attach_global_rank_multi(sdf: DataFrame, value_fn, items: list) -> DataFrame
         res_cols[out_name] = F.when(F.col("__gr_v__").isNotNull(), r)
     out = joined.withColumns(res_cols)
     return out.select(*sdf.columns, *[o for _m, _d, o in items])
-
-
-def attach_global_fill(sdf: DataFrame, value_fn, backward: bool,
-                       out_name: str) -> DataFrame:
-    """UNGROUPED unbounded forward/backward fill without the keyless
-    window (round-9).  Thin wrapper over the unified fill-family batch
-    (round-10), which see."""
-    return attach_global_fill_multi(
-        sdf, [(value_fn, "bf" if backward else "ff", out_name)])
-
-
-def attach_global_interpolate(sdf: DataFrame, value_fn, method: str,
-                              out_name: str) -> DataFrame:
-    """UNGROUPED interpolate without the keyless window (round-9).  Thin
-    wrapper over the unified fill-family batch (round-10), which see."""
-    return attach_global_fill_multi(sdf, [(value_fn, method, out_name)])
 
 
 def attach_global_fill_multi(sdf: DataFrame, items: list) -> DataFrame:

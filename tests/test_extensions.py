@@ -500,6 +500,71 @@ def test_ngram_dup_coverage_copied_doc(spark):
     assert rows[1]["n_grams"] == 30 - 13 + 1
 
 
+def test_ngram_dup_coverage_salted_matches_plain(spark, monkeypatch):
+    """The salted two-level gram aggregate (forced with
+    SPARK_GRAFT_GRAM_SALT=16) must return bit-equal coverage to the plain
+    single-key shape (=0) — the salt derives from the doc id, so
+    bucket-local distinct doc counts add exactly."""
+    boiler = " ".join(f"b{i}" for i in range(15))
+    rows = []
+    for i in range(24):
+        own = " ".join(f"d{i}_{j}" for j in range(10 + i % 7))
+        # a hot boilerplate run in two thirds of the docs, a copied pair,
+        # unique docs and one doc too short to produce a 13-gram
+        rows.append((i, f"{boiler} {own}" if i % 3 else own))
+    rows += [(100, rows[5][1]), (101, "too short")]
+    df = spark.createDataFrame(rows, ["doc_id", "text"])
+
+    salted_calls = []
+    orig = dedup._salted_doc_counts
+    monkeypatch.setattr(
+        dedup, "_salted_doc_counts",
+        lambda *a, **k: salted_calls.append(a[4]) or orig(*a, **k))
+
+    def run(salt):
+        monkeypatch.setenv("SPARK_GRAFT_GRAM_SALT", salt)
+        return sorted(tuple(r) for r in
+                      dedup.ngram_dup_coverage(df, n=13).collect())
+
+    salted = run("16")
+    assert salted_calls == [16], "salted branch not taken"
+    plain = run("0")
+    assert salted_calls == [16], "plain branch took the salted path"
+    assert salted == plain
+    assert any(r[3] > 0 for r in plain) and any(r[3] == 0 for r in plain)
+
+
+def test_hot_gram_salt_rejects_malformed_env(spark, monkeypatch):
+    """A non-integer SPARK_GRAFT_GRAM_SALT fails with a message naming
+    the variable instead of a bare int() parse error."""
+    import pytest
+
+    grams = spark.createDataFrame([(1,)], ["gh"])
+    monkeypatch.setenv("SPARK_GRAFT_GRAM_SALT", "true")
+    with pytest.raises(ValueError, match="SPARK_GRAFT_GRAM_SALT"):
+        dedup._hot_gram_salt(grams, "gh")
+    monkeypatch.setenv("SPARK_GRAFT_GRAM_SALT", "1")
+    assert dedup._hot_gram_salt(grams, "gh") == 0
+    monkeypatch.setenv("SPARK_GRAFT_GRAM_SALT", "8")
+    assert dedup._hot_gram_salt(grams, "gh") == 8
+
+
+def test_connected_components_unpersists_on_error(spark):
+    """The persisted edge table is released even when the stats aggregate
+    fails: the persistent-RDD registry returns to its earlier size."""
+    import pytest
+
+    jsc = spark.sparkContext._jsc
+    edges = spark.createDataFrame(
+        [(2, 1), (2, 3), (10, 11)], ["id_a", "id_b"]).select(
+        F.when(F.col("id_a") > 0, F.raise_error(F.lit("cc boom")))
+        .cast("long").alias("id_a"), F.col("id_b"))
+    before = jsc.getPersistentRDDs().size()
+    with pytest.raises(Exception, match="cc boom"):
+        dedup.connected_components(edges)
+    assert jsc.getPersistentRDDs().size() == before
+
+
 def test_weighted_sample_rate_tracks_weight(spark):
     from polars_ruby_spark.operators import sampling
 

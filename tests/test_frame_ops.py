@@ -2491,8 +2491,11 @@ def test_ewm_kernel_multipartition_carry(spark):
     scan + carry fold must agree with the single-partition result across
     a REAL multi-partition pinned layout (the local suites otherwise run
     one partition, leaving the cross-partition composition unexercised).
-    Covers the three kernel forms (adjust x ignore_nulls minus reset),
-    mean and std, with nulls straddling partition boundaries."""
+    Covers the three kernel forms (adjust x ignore_nulls minus reset) and
+    the reset form (adjust=False, ignore_nulls=False — the JVM block-scan
+    path with its two driver collects), mean and std, with nulls
+    straddling partition boundaries.  Each form also runs as a one-item
+    batch — the shape a lone ungrouped ewm binding attaches with."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import functions as F
@@ -2511,7 +2514,11 @@ def test_ewm_kernel_multipartition_carry(spark):
     single = sdf.coalesce(1).localCheckpoint(eager=False)
     single._plsq_idx_pinned = True
 
-    for adjust, ign in [(True, True), (True, False), (False, True)]:
+    def r9(v):
+        return None if v is None else round(v, 9)
+
+    for adjust, ign in [(True, True), (True, False), (False, True),
+                        (False, False)]:
         spec_m = {"kind": "mean", "alpha": 0.4, "lam": 0.6, "adjust": adjust,
                   "ignore_nulls": ign, "bias": False, "min_periods": 1}
         spec_s = dict(spec_m, kind="std")
@@ -2521,11 +2528,13 @@ def test_ewm_kernel_multipartition_carry(spark):
             .orderBy(ROW_IDX).select("em", "es").collect()
         got_1 = attach_ewm_global_multi(single, items) \
             .orderBy(ROW_IDX).select("em", "es").collect()
-        gm = [(None if r["em"] is None else round(r["em"], 9),
-               None if r["es"] is None else round(r["es"], 9)) for r in got_m]
-        g1 = [(None if r["em"] is None else round(r["em"], 9),
-               None if r["es"] is None else round(r["es"], 9)) for r in got_1]
+        gm = [(r9(r["em"]), r9(r["es"])) for r in got_m]
+        g1 = [(r9(r["em"]), r9(r["es"])) for r in got_1]
         assert gm == g1, f"adjust={adjust} ign={ign}"
+        solo = attach_ewm_global_multi(multi, items[:1]) \
+            .orderBy(ROW_IDX).select("em").collect()
+        assert [r9(r["em"]) for r in solo] == [m for m, _s in gm], \
+            f"one-item batch adjust={adjust} ign={ign}"
         # and both match pandas
         s = pd.Series([np.nan if v is None else v for v in vals])
         ew = s.ewm(alpha=0.4, adjust=adjust, ignore_na=ign, min_periods=1)

@@ -585,7 +585,7 @@ def test_collect_window_index_reading_agg_still_pinned(spark):
 @pytest.mark.parametrize("closed", CLOSED)
 def test_rolling_by_kernel_attach_differential(spark, closed):
     """Round-9 expr-level attach: rolling_{min,median,quantile,std}_by
-    bind through the sliding kernel (attach_rolling_by) instead of the
+    bind through the sliding kernel (attach_rolling_by_multi) instead of the
     O(n·w) JVM range frame.  Differential vs the plain window route
     (rolling_mean_by keeps it — same WindowSpec semantics) and vs brute
     force, grouped via over() and ungrouped, all 4 closed modes; export
@@ -851,7 +851,7 @@ def test_rank_random_seeded_permutation(spark):
 def test_ungrouped_rank_distinct_prefix_attach(spark):
     """Round-9: ungrouped rank() compiled to a window with NO partitionBy
     (one task for the frame).  The distinct-value prefix attach
-    (row_index.attach_global_rank) must reproduce every method exactly —
+    (row_index.attach_global_rank_multi) must reproduce every method exactly —
     heavy ties, nulls unranked, descending — with no keyless data window
     in the plan, and grouped over(keys) must keep the partitioned rank."""
     rng = np.random.RandomState(41)

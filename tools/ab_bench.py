@@ -74,6 +74,14 @@ def main():
         return out
 
     mins = {lab: min_per_query(rs) for lab, rs in runs.items()}
+    # a run whose headline did not parse contributes nothing to its tree's
+    # min: record how many runs each min actually covers, and say so when
+    # it is fewer than asked for
+    parsed = {lab: sum(1 for r in rs if r["doc"]) for lab, rs in runs.items()}
+    for lab, n in parsed.items():
+        if n < RUNS:
+            print(f"WARNING: {lab}: only {n} of {RUNS} runs produced a "
+                  "parsed headline; its min-of-N is over those", flush=True)
     common = sorted(set(mins[LABEL_A]) & set(mins[LABEL_B]))
     per_query = {}
     for q in common:
@@ -93,6 +101,8 @@ def main():
         "cpus": os.environ.get("SPARK_GRAFT_CPUS", "32"),
         "sf_dir": os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"),
         "only": ONLY,
+        "runs_per_tree": RUNS,
+        "parsed_runs": parsed,
         "total_min_" + LABEL_A: tot_a,
         "total_min_" + LABEL_B: tot_b,
         "total_speedup_vs_" + LABEL_B: round(tot_b / tot_a, 3) if tot_a else None,
@@ -104,7 +114,7 @@ def main():
         json.dump(doc, f, indent=1)
     print(json.dumps({k: doc[k] for k in
                       ("total_min_" + LABEL_A, "total_min_" + LABEL_B,
-                       "total_speedup_vs_" + LABEL_B)}))
+                       "total_speedup_vs_" + LABEL_B, "parsed_runs")}))
     n_reg = sum(1 for v in per_query.values() if v["status"] == "regressed")
     n_imp = sum(1 for v in per_query.values() if v["status"] == "improved")
     print(f"regressed={n_reg} improved={n_imp} of {len(common)}")

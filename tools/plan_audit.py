@@ -57,7 +57,7 @@ def single_partition_violations(plan: str) -> int:
         if ("Aggregate(keys=[__rix_chk__" in child
                 or "Aggregate(key=[__rix_chk__" in child):
             # the O(chunks)-row deterministic-chunk totals table (round-7
-            # attach_global_cum/rle_id shape) — chunk count is bounded by
+            # attach_global_cum_multi/rle_id shape) — chunk count is bounded by
             # the configured chunk target, same class as __rix_pid__; the
             # AGGREGATE is required so a full-data exchange that merely
             # carries the chunk column stays flagged
