@@ -9,17 +9,14 @@ column.
 
 Design for 100 TB: we do NOT use ``row_number().over(Window.orderBy(...))``
 with no partition key — that funnels the whole table through one task.
-Instead:
+Instead the index is ONE plan node: ``distributed_sequence_id()`` (the
+expression behind pandas-on-Spark's default index) plans to Spark's
+``AttachDistributedSequence``, which runs ``zipWithIndex`` over the
+child's partitions — a per-partition count job, then ``offset + local
+position`` assigned in place, with no shuffle and no join.  The output
+keeps the child's partitions, each a contiguous ascending index range in
+partition order.
 
-1. ``monotonically_increasing_id()`` encodes ``partition_id << 33 | local
-   position`` (Spark contract, see its scaladoc), giving us the local
-   position without any shuffle;
-2. per-partition row counts (a tiny aggregate — one row per partition) are
-   turned into cumulative offsets with a window over that *tiny* frame;
-3. a broadcast join maps ``partition_id → offset`` back onto the data, so
-   ``row_idx = offset + local_position``.
-
-Net cost: one extra column scan + a broadcast of O(num_partitions) rows.
 After an ``orderBy``, Spark's range partitioner emits globally sorted
 partitions, so this same construction yields the *sorted* row index — which
 is why sort() simply drops and re-derives the index.
@@ -29,94 +26,73 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.internal import InternalFunction
 
 from ..session import ROW_IDX
 
-_LOCAL_BITS_MASK = (1 << 33) - 1
 _PID = "__rix_pid__"
-_MONO = "__rix_mono__"
 _OFF = "__rix_off__"
 
 
-def _has_global_sort(sdf: DataFrame) -> bool:
-    """True when the plan ends in a global Sort (logical ``Sort [...], true``)."""
-    try:
-        plan = sdf._jdf.queryExecution().optimizedPlan().toString()
-    except Exception:
-        return False
+def _has_global_sort(plan: str) -> bool:
+    """True when the optimized plan holds a global Sort (``Sort [...], true``)."""
     return any("Sort [" in line and "], true" in line
                for line in plan.splitlines())
 
 
 # logical nodes whose re-evaluation may land on a DIFFERENT partition
-# layout (AQE coalescing, broadcast materialization, parallelize splits):
-# the two-pass index below evaluates its input twice (pid+mono data path
-# vs per-pid counts), and a layout flip between the passes mismatches the
-# pid join — observed as null indices on join/LocalRelation inputs
-# (round-11).  Narrow chains over file scans (Relation/Filter/Project/
-# Generate) recompute identically and skip the pin.
+# layout or row order (AQE coalescing, broadcast materialization,
+# parallelize splits): every plan branch that reads the index evaluates
+# the sequence over its own copy of the input, and a layout flip between
+# two copies gives one row two indices — observed as mismatched
+# self-joins on join/LocalRelation inputs (round-11).  Narrow chains over
+# file scans (Relation/Filter/Project/Generate) recompute identically and
+# skip the pin.
 _UNSTABLE_NODES = ("Join", "Aggregate", "Window", "Sort", "Repartition",
                    "LocalRelation", "GlobalLimit", "Sample", "Union",
                    "Deduplicate", "MapInArrow", "ArrowEvalPython",
                    "FlatMapGroupsInArrow", "CollectMetrics", "Expand")
 
 
-def _layout_unstable(sdf: DataFrame) -> bool:
-    try:
-        plan = sdf._jdf.queryExecution().optimizedPlan().toString()
-    except Exception:
-        return True  # cannot prove stability -> pin
+def _layout_unstable(plan: str) -> bool:
     return any(node in plan for node in _UNSTABLE_NODES)
 
 
 def with_row_index(sdf: DataFrame, name: str = ROW_IDX, offset: int = 0) -> DataFrame:
-    """Add a 0-based (plus ``offset``) Long row index in current plan order.
+    """Add a 0-based (plus ``offset``) Long row index in current plan order,
+    as the first column.
 
     Parity: ``LazyFrame#with_row_index`` (``lazy_frame.rb:2124``), except the
     dtype is Long (Spark has no UInt32 — SURVEY §1.3).
+
+    One plan node: ``distributed_sequence_id`` plans to Spark's
+    ``AttachDistributedSequence`` (``zipWithIndex`` over the child's
+    partitions), so each partition holds a contiguous ascending index range
+    in partition order.  Sorted and layout-unstable inputs are pinned by a
+    lazy ``localCheckpoint`` first: every downstream branch that
+    re-evaluates the index then reads the same materialized partitions and
+    sees the same index.
     """
     if name in sdf.columns:
         sdf = sdf.drop(name)
-    pinned = _has_global_sort(sdf) or _layout_unstable(sdf)
+    try:
+        plan = sdf._jdf.queryExecution().optimizedPlan().toString()
+    except Exception:
+        plan = None
+    pinned = plan is None or _has_global_sort(plan) or _layout_unstable(plan)
     if pinned:
-        # The two passes below (per-partition counts + the data path) would
-        # each recompute the upstream sort: column pruning narrows the counts
-        # branch's scan, so Catalyst's ReuseExchange never fires and a sorted
-        # input pays scan+range-shuffle TWICE.  A lazy localCheckpoint
-        # materializes the sorted partitions once and both passes read them
-        # back (the same trade connected_components already makes; measured
-        # ~1.7× on sorted-ordinal queries at sf0.1, and at cluster scale it
-        # replaces a full second scan+shuffle with local reads).  Unsorted
-        # inputs skip this: their recompute is a plain scan, cheaper than a
-        # materialization.
         sdf = sdf.localCheckpoint(eager=False)
-    base = sdf.withColumn(_MONO, F.monotonically_increasing_id()).withColumn(
-        _PID, F.spark_partition_id()
-    )
-    counts = base.groupBy(_PID).agg(F.count(F.lit(1)).alias("__rix_cnt__"))
-    w = Window.orderBy(_PID).rowsBetween(Window.unboundedPreceding, -1)
-    offsets = counts.select(
-        _PID, F.coalesce(F.sum("__rix_cnt__").over(w), F.lit(0)).alias(_OFF)
-    )
-    local_pos = F.col(_MONO).bitwiseAND(F.lit(_LOCAL_BITS_MASK))
-    out = (
-        base.join(F.broadcast(offsets), _PID, "left")
-        .withColumn(name, (F.col(_OFF) + local_pos + F.lit(offset)).cast("long"))
-        .drop(_PID, _MONO, _OFF)
-    )
-    # Keep the new index first like the reference does.
-    cols = [name] + [c for c in sdf.columns]
-    out = out.select(*cols)
+    idx = InternalFunction.distributed_sequence_id()
+    if offset:
+        idx = idx + F.lit(offset)
+    out = sdf.select(idx.alias(name), "*")
     if name == ROW_IDX:
         # Plan-level provenance tag (round-8): this exact DataFrame's
-        # partitions are contiguous ROW_IDX ranges in ascending
-        # spark_partition_id order BY CONSTRUCTION (index = pid offset +
-        # local position), and — when the input was checkpointed above —
-        # the physical layout is PINNED (no sampled range boundaries).
-        # Downstream partition-prefix consumers (attach_ewm_global_multi)
-        # read the tag to skip their own repartitionByRange + localCheckpoint:
-        # a redundant sampling job, full shuffle and materialization on
-        # top of an input that already has the layout they build.
+        # partitions are contiguous ascending ROW_IDX ranges in
+        # spark_partition_id order, and when ``pinned`` the layout they
+        # come from is materialized once.  Partition-prefix consumers
+        # (chunked_by_index, the ewm attaches) read the tag to use the
+        # partition id as their chunk key instead of building one.
         out._plsq_idx_pinned = pinned
     return out
 
@@ -131,11 +107,9 @@ def strip_row_index(sdf: DataFrame) -> DataFrame:
 #
 # Ungrouped cum_*/reverse/shuffle previously built Window.partitionBy()
 # (empty) .orderBy(ROW_IDX) — the whole table funnels through ONE task.
-# These helpers give each a multi-task plan built from the same primitives
-# as with_row_index: range-partition on the row index (contiguous ranges in
-# ascending partition-id order), per-partition local work, an O(partitions)-
-# row offset table combined with a window over that tiny frame, and a
-# broadcast join back.
+# These helpers give each a multi-task plan: contiguous ROW_IDX chunks
+# (chunked_by_index), per-chunk local work, an O(chunks)-row offset table
+# combined with a window over that tiny frame, and a broadcast join back.
 
 _CUM_AGG = {"sum": F.sum, "min": F.min, "max": F.max,
             "count": F.count, "product": F.product}
@@ -150,30 +124,32 @@ _CHK_STATS = ("__rix_mn__", "__rix_mx__")
 def chunked_by_index(sdf: DataFrame, n_chunks: int | None = None):
     """Attach a DETERMINISTIC contiguous-range chunk id over ROW_IDX.
 
-    ``chunk = floor((idx - min) * C / (max - min + 1))`` with min/max
-    attached as a broadcast one-row aggregate: a pure row function of the
-    data, so every consumer branch computes IDENTICAL chunk values with no
-    shared physical layout — this replaces the repartitionByRange +
-    localCheckpoint pin (round-7).  The checkpoint existed because the
-    range exchange SAMPLES boundaries per execution and two consuming
-    subtrees diverged; it cost ~0.5-1 s of physical planning at every plan
-    construction and a full materialization at execution.  Chunk ids are
-    sampling-free, so the two-branch prefix constructions below are
-    layout-independent by construction.
+    Every consumer branch must compute IDENTICAL chunk values, so the id is
+    never a sampled range layout (round-7 dropped the repartitionByRange +
+    localCheckpoint pin that diverged between branches).  Two sources:
 
-    Balance caveat (documented trade): chunks are equal INDEX-WIDTH, not
-    equal row count — on a frame whose surviving rows concentrate in a
-    narrow index range after filtering, occupancy skews (worst case one
-    chunk = one task, i.e. the naive global-window shape, never wrong).
-    Dense or uniformly-gapped indexes — every with_row_index output and
-    all slice/head/tail forms — stay balanced within ±1 row.
+    * a fresh pinned ``with_row_index`` output (``_plsq_idx_pinned``): its
+      partitions are already contiguous ascending ROW_IDX ranges read back
+      from one materialized layout, so the chunk id is
+      ``spark_partition_id()`` — no stats aggregate, no join;
+    * anything else: ``chunk = floor((idx - min) / width)`` with
+      ``width = ceil((max - min + 1) / C)`` and min/max attached as a
+      broadcast one-row aggregate — a pure row function of the data.
+
+    Balance caveat (documented trade) for the stats form: chunks are equal
+    INDEX-WIDTH, not equal row count — on a frame whose surviving rows
+    concentrate in a narrow index range after filtering, occupancy skews
+    (worst case one chunk = one task, i.e. the naive global-window shape,
+    never wrong).  Dense or uniformly-gapped indexes stay balanced within
+    ±1 row.
 
     The two consuming branches each recompute the (column-pruned) input —
-    measured cheaper here than either a lazy localCheckpoint (~0.5-1 s of
-    eager physical planning per plan CONSTRUCTION plus a full-width
-    materialization) or a persist(MEMORY_ONLY) hint (caches the full
-    width; the pruned totals branch reads 2 columns).
+    measured cheaper than a lazy localCheckpoint or a persist(MEMORY_ONLY)
+    hint, which both hold the full width where the totals branch reads two
+    columns.
     """
+    if getattr(sdf, "_plsq_idx_pinned", False):
+        return sdf.withColumn(_CHK, F.spark_partition_id())
     if n_chunks is None:
         try:
             n_chunks = int(sdf.sparkSession.conf.get(
@@ -201,11 +177,10 @@ def attach_global_cum_multi(sdf: DataFrame, items: list) -> DataFrame:
     attaches → one).  A lone binding is a one-item batch.
     ``items``: ``[(value_fn, kind, reverse, out), …]``.
 
-    Two-pass chunk prefix (the with_row_index construction): contiguous
-    ROW_IDX chunks, a local prefix aggregate inside each chunk, per-chunk
-    totals combined into exclusive offsets by a window over the
-    O(chunks)-row totals table, broadcast-joined back and merged.  No
-    single-task window.
+    Two-pass chunk prefix: contiguous ROW_IDX chunks, a local prefix
+    aggregate inside each chunk, per-chunk totals combined into exclusive
+    offsets by a window over the O(chunks)-row totals table,
+    broadcast-joined back and merged.  No single-task window.
     """
     assert ROW_IDX in sdf.columns
     # DETERMINISTIC chunk ids (round-7): the former repartitionByRange +
@@ -282,8 +257,8 @@ def attach_global_reverse(sdf: DataFrame, value_fn, out_name: str) -> DataFrame:
 def attach_global_shuffle(sdf: DataFrame, value_fn, seed, out_name: str) -> DataFrame:
     """Attach a seed-deterministic global permutation of the column: sort the
     (key, value) projection by a per-row hash (range-partitioned sort), derive
-    the destination index with the two-pass row-index construction, and join
-    back on the original index.  All stages multi-task."""
+    the destination index with ``with_row_index`` over the sorted frame,
+    and join back on the original index.  All stages multi-task."""
     assert ROW_IDX in sdf.columns
     c = value_fn(sdf)
     key = (F.xxhash64(F.col(ROW_IDX), F.lit(seed)) if seed is not None
@@ -302,7 +277,7 @@ def attach_global_rle_id(sdf: DataFrame, value_fn, out_name: str) -> DataFrame:
     boundaries: a per-partition last-value table (O(partitions) rows) is
     lag'd and broadcast back, so each partition's first row compares against
     its predecessor partition's last value; the change flags then prefix-sum
-    through the same two-pass partition-offset construction as
+    through the same chunk-offset construction as
     attach_global_cum_multi."""
     assert ROW_IDX in sdf.columns
     # deterministic chunk ids replace the range pin + checkpoint (round-7;
@@ -393,9 +368,9 @@ def attach_grouped_rank_zip(sdf: DataFrame, value_fn, key_fns, out_name: str,
 def _global_rank_prefix_tab(counts: DataFrame) -> DataFrame:
     """Distinct-value ``(__gr_v__, __gr_c__)`` counts → the rank prefix
     table ``(__gr_v__, __gr_c__, __gr_d__ dense ordinal, __gr_b__
-    strict-lesser prefix)`` via the same two-pass partition-offset
-    pattern ``with_row_index`` uses (sort the much smaller distinct
-    table, per-partition prefix sums, broadcast offsets).  Shared by
+    strict-lesser prefix)`` via a partition-offset prefix (sort the much
+    smaller distinct table, index it, per-partition prefix sums,
+    broadcast offsets).  Shared by
     :func:`attach_global_rank_multi` and the ungrouped-spearman rank
     join (round-11)."""
     sc = with_row_index(counts.orderBy(F.col("__gr_v__").asc()), "__gr_d__")
@@ -452,10 +427,10 @@ def attach_global_rank_multi(sdf: DataFrame, value_fn, items: list) -> DataFrame
     1. ``counts = groupBy(v).count()`` over the non-null values (hash
        agg, parallel);
     2. sort the counts ASCENDING by value (range exchange over the much
-       smaller distinct table) and compute, with the same two-pass
-       partition-offset pattern ``with_row_index`` uses, each distinct
-       value's ``before`` (rows with strictly-lesser value — exclusive
-       prefix sum of the counts) and ``dense`` ordinal;
+       smaller distinct table) and compute, with a partition-offset
+       prefix over it, each distinct value's ``before`` (rows with
+       strictly-lesser value — exclusive prefix sum of the counts) and
+       ``dense`` ordinal;
     3. join back on the value (AQE picks broadcast when the distinct
        table is small) and derive every method locally:
        min = before+1, max = before+cnt, dense = ordinal+1,

@@ -29,44 +29,142 @@ def _schema_arg(schema):
     return schema
 
 
-def _ns_timestamp_cols(source) -> list[str]:
-    """Columns stored as parquet TIMESTAMP(NANOS) — Spark 4 refuses them
-    unless read as Long (spark.sql.legacy.parquet.nanosAsLong); we then cast
-    ns→µs ourselves (polars Datetime('ns') → Spark µs, SURVEY §1.3)."""
+def _footer_file(source) -> tuple[str | None, bool]:
+    """The parquet file whose footer describes ``source`` (a file, a
+    directory of ``*.parquet`` files or a glob; the first in sorted order),
+    and whether that one footer gives Spark's WHOLE schema.  It does not
+    when ``source`` holds subdirectories or ``key=value`` path segments
+    (hive partitioning adds columns no footer carries), or files Spark
+    reads that the ``*.parquet`` probe skips."""
     import glob as _glob
     import os as _os
 
     path = str(source)
-    probe = path
+    whole = "=" not in path
     if _os.path.isdir(path):
-        files = sorted(_glob.glob(_os.path.join(path, "*.parquet")))
-        if not files:
-            return []
-        probe = files[0]
+        names = [n for n in _os.listdir(path) if not n.startswith(("_", "."))]
+        whole = whole and all(
+            n.endswith(".parquet") and _os.path.isfile(_os.path.join(path, n))
+            for n in names)
+        files = sorted(_os.path.join(path, n) for n in names
+                       if n.endswith(".parquet"))
     elif any(ch in path for ch in "*?["):
         files = sorted(_glob.glob(path))
-        if not files:
-            return []
-        probe = files[0]
+        whole = whole and all(_os.path.isfile(f) and "=" not in f
+                              for f in files)
+    else:
+        files = [path]
+    return (files[0] if files else None), whole
+
+
+def _open_footer(probe: str | None):
+    if probe is None:
+        return None
     try:
         import pyarrow.parquet as pq
 
         pf = pq.ParquetFile(probe)
-        # physical schema check: INT96 timestamps (Spark's own default output)
-        # also surface as timestamp[ns] in arrow but Spark reads them natively
-        # — only INT64/TIMESTAMP(NANOS) columns need the long+cast workaround
-        phys = {pf.schema.column(i).name: pf.schema.column(i).physical_type
-                for i in range(len(pf.schema))}
-        return [f.name for f in pf.schema_arrow
-                if str(f.type) == "timestamp[ns]" and phys.get(f.name) == "INT64"]
+        pf.schema_arrow         # parses the stored arrow schema, if any
+        return pf
     except Exception:
-        return []
+        return None
+
+
+def _physical_types(pf) -> dict[str, str]:
+    """Parquet physical type per column path (a top-level column's path is
+    its name)."""
+    cols = (pf.schema.column(i) for i in range(len(pf.schema)))
+    return {c.path: c.physical_type for c in cols}
+
+
+def _ns_cols_of(pf) -> list[str]:
+    # physical schema check: INT96 timestamps (Spark's own default output)
+    # also surface as timestamp[ns] in arrow but Spark reads them natively
+    # — only INT64/TIMESTAMP(NANOS) columns need the long+cast workaround
+    phys = _physical_types(pf)
+    return [f.name for f in pf.schema_arrow
+            if str(f.type) == "timestamp[ns]" and phys.get(f.name) == "INT64"]
+
+
+def _ns_timestamp_cols(source) -> list[str]:
+    """Columns stored as parquet TIMESTAMP(NANOS) — Spark 4 refuses them
+    unless read as Long (spark.sql.legacy.parquet.nanosAsLong); we then cast
+    ns→µs ourselves (polars Datetime('ns') → Spark µs, SURVEY §1.3)."""
+    pf = _open_footer(_footer_file(source)[0])
+    return _ns_cols_of(pf) if pf is not None else []
+
+
+def _arrow_to_spark(t, phys: str | None, ntz: bool):
+    """Spark's parquet type for arrow type ``t`` (``phys``: the parquet
+    physical type of a top-level column, None when nested).  Raises
+    ValueError where the arrow type does not pin Spark's choice."""
+    import pyarrow.types as pat
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import from_arrow_type
+
+    if pat.is_timestamp(t):
+        if phys is None:
+            raise ValueError("nested timestamp")
+        if phys == "INT96" or t.tz is not None:
+            return T.TimestampType()
+        if t.unit == "ns":
+            return T.LongType()         # nanosAsLong; scan_parquet casts
+        # Spark reads a tz-naive (isAdjustedToUTC=false) timestamp as NTZ;
+        # the arrow mapping would say TimestampType
+        return T.TimestampNTZType() if ntz else T.TimestampType()
+    if pat.is_dictionary(t):
+        return _arrow_to_spark(t.value_type, phys, ntz)
+    if pat.is_list(t) or pat.is_large_list(t):
+        return T.ArrayType(_arrow_to_spark(t.value_type, None, ntz), True)
+    if pat.is_struct(t):
+        return T.StructType([T.StructField(f.name, _arrow_to_spark(
+            f.type, None, ntz), True) for f in t])
+    if pat.is_map(t):
+        return T.MapType(_arrow_to_spark(t.key_type, None, ntz),
+                         _arrow_to_spark(t.item_type, None, ntz), True)
+    if (pat.is_boolean(t) or pat.is_signed_integer(t) or pat.is_float32(t)
+            or pat.is_float64(t) or pat.is_string(t)
+            or pat.is_large_string(t) or pat.is_date32(t)
+            or pat.is_decimal128(t)):
+        return from_arrow_type(t)
+    # unsigned ints, binary (spark.sql.parquet.binaryAsString), durations,
+    # times, float16, nulls: parquet and arrow disagree or a conf decides
+    raise ValueError(f"no footer mapping for {t}")
+
+
+def _footer_schema(pf, spark: SparkSession):
+    """Spark's inferred schema, rebuilt from an opened pyarrow footer so the
+    read skips Spark's schema-inference job; None where Spark must infer
+    (files Spark wrote carry their own schema metadata, or a type has no
+    unambiguous mapping).  Every field is nullable, as Spark makes every
+    file-source field."""
+    import pyarrow.types as pat
+    from pyspark.sql import types as T
+
+    if b"org.apache.spark.sql.parquet.row.metadata" in (
+            pf.metadata.metadata or {}):
+        return None
+    phys = _physical_types(pf)
+    ntz = True
+    if any(pat.is_timestamp(f.type) and f.type.tz is None
+           for f in pf.schema_arrow):
+        ntz = spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled",
+                             "true").lower() == "true"
+    try:
+        return T.StructType([
+            T.StructField(f.name, _arrow_to_spark(f.type, phys.get(f.name),
+                                                  ntz), True)
+            for f in pf.schema_arrow])
+    except ValueError:
+        return None
 
 
 def scan_parquet(source, hive_partitioning: bool = True, n_rows: int | None = None,
                  row_index_name: str | None = None, spark=None, **kw):
     """io/parquet.rb:163 — lazy parquet scan; stats pruning / hive partitions /
-    globs are Spark-native."""
+    globs are Spark-native.  The schema comes from the footer pyarrow
+    already opens (no Spark inference job) wherever one footer gives it;
+    hive directories and unreadable footers keep Spark's inference."""
     from pyspark.sql import functions as F
 
     from ..frame import LazyFrame
@@ -74,10 +172,14 @@ def scan_parquet(source, hive_partitioning: bool = True, n_rows: int | None = No
 
     s = _spark(spark)
     source = _materialize_source(source, ".parquet")
-    ns_cols = _ns_timestamp_cols(source)
+    probe, whole = _footer_file(source)
+    pf = _open_footer(probe)
+    ns_cols = _ns_cols_of(pf) if pf is not None else []
     if ns_cols:
         s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    sdf = s.read.parquet(str(source))
+    schema = _footer_schema(pf, s) if pf is not None and whole else None
+    reader = s.read if schema is None else s.read.schema(schema)
+    sdf = reader.parquet(str(source))
     for c in ns_cols:
         # integer `div` keeps full precision (double division would lose
         # sub-µs bits on ~1e18 nanosecond epochs)

@@ -1698,7 +1698,7 @@ def test_row_order_preserved_after_ordered_windows(spark):
 def test_sort_key_window_fast_path(spark):
     """Round-3: after an explicit sort(keys), order-safe window binds order
     by the SORT KEYS directly — the plan contains no row-index
-    materialization (no monotonically_increasing_id / range re-sort) — while
+    materialization (no sequence index / range re-sort) — while
     producing identical values and row order to the index-backed path."""
     import polars_ruby_spark as pl
 
@@ -1716,6 +1716,7 @@ def test_sort_key_window_fast_path(spark):
     )
     plan = lf._sdf_raw._jdf.queryExecution().optimizedPlan().toString()
     assert "monotonically_increasing_id" not in plan
+    assert "distributed_sequence_id" not in plan
     assert "__row_idx__" not in plan
 
     rows = lf.collect().rows()
@@ -1804,6 +1805,7 @@ def test_group_agg_order_dependent_fast_path(spark):
         pl.col("x").first().alias("f"), pl.col("x").last().alias("l"))
     plan = lf._sdf_raw._jdf.queryExecution().optimizedPlan().toString()
     assert "monotonically_increasing_id" not in plan
+    assert "distributed_sequence_id" not in plan
     assert sorted(lf.collect().rows()) == [("a", 5, 2), ("b", 4, 4),
                                            ("c", 3, 1)]
 
@@ -2578,3 +2580,139 @@ def test_spearman_over_defers_order_restore(spark):
     # per-group spearman of group a: ranks align except the (2,1) swap
     a_sp = [r["sp"] for r in rows if r["g"] == "a"]
     assert len(set(a_sp)) == 1
+
+
+def _row_index_inputs(spark):
+    from pyspark.sql import functions as F
+
+    rng = spark.range(0, 100, numPartitions=7).select(
+        F.col("id"), (F.col("id") * 3 % 11).alias("p"))
+    # tied sort keys: the order among ties is arbitrary, so only the pin
+    # makes every branch see the same index
+    srt = spark.range(0, 120, numPartitions=5).select(
+        (F.col("id") % 4).alias("id"), (F.col("id") * 7).alias("p")) \
+        .orderBy("id")
+    left = spark.range(0, 90, numPartitions=4)
+    right = spark.range(0, 90, numPartitions=3).select(
+        F.col("id"), (F.col("id") + 1000).alias("p"))
+    jn = left.join(right, "id")
+    return [("range", rng, 5, 100), ("sorted", srt, 0, 120),
+            ("join", jn, 0, 90)]
+
+
+def test_with_row_index_one_node_branches_agree(spark):
+    """with_row_index is one sequence node: the index is 0..n-1 + offset
+    in plan order, placed first, and two branches of one plan (a
+    self-join on the index) see the same index for the same row — on a
+    plain multi-partition input, a sorted input with tied keys and a
+    join input (the last two are pinned)."""
+    from pyspark.sql import functions as F
+
+    from polars_ruby_spark.operators.row_index import with_row_index
+
+    for label, sdf, offset, n in _row_index_inputs(spark):
+        out = with_row_index(sdf, "ix", offset=offset)
+        assert out.columns == ["ix", "id", "p"], label
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        assert "distributed_sequence_id" in plan, label
+        assert "monotonically_increasing_id" not in plan, label
+        rows = out.collect()
+        assert sorted(r["ix"] for r in rows) == \
+            list(range(offset, offset + n)), label
+        if label == "range":
+            # partition order of a range is id order
+            assert all(r["ix"] == r["id"] + offset for r in rows)
+        if label == "sorted":
+            keys = [r["id"] for r in sorted(rows, key=lambda r: r["ix"])]
+            assert keys == sorted(keys)
+        other = out.select(F.col("ix"), F.col("id").alias("id2"),
+                           F.col("p").alias("p2"))
+        pairs = out.join(other, "ix").collect()
+        assert len(pairs) == n, label
+        assert all(r["id"] == r["id2"] and r["p"] == r["p2"]
+                   for r in pairs), label
+
+
+def test_with_row_index_releases_sequence_cache(spark):
+    """The sequence node persists its child while it assigns the index;
+    once the frames are collected and dropped, every RDD they added to
+    the persistent-RDD registry is gone again."""
+    import gc
+    import time
+
+    from polars_ruby_spark.operators.row_index import with_row_index
+
+    jsc = spark.sparkContext._jsc
+
+    def persisted():
+        return set(jsc.getPersistentRDDs().keySet())
+
+    before = persisted()
+
+    def run():
+        for _label, sdf, offset, _n in _row_index_inputs(spark):
+            with_row_index(sdf, "ix", offset=offset).collect()
+
+    run()
+    assert persisted() - before         # the sequence caches exist
+    # the session keeps the most recent query's plan reachable until the
+    # next one runs
+    spark.range(1).collect()
+    gc.collect()
+    for _ in range(30):
+        # Python proxies are released by py4j's finalizer thread about
+        # once a second; the JVM gc then drops the weakly-held RDDs
+        time.sleep(1)
+        spark._jvm.System.gc()
+        if not persisted() - before:
+            break
+    assert not persisted() - before
+
+
+def test_chunked_attaches_partition_and_stats_paths(spark, tmp_path):
+    """cum_sum, forward_fill and rle_id match pandas over both chunk
+    sources: a sorted multi-partition frame (its fresh pinned index
+    chunks by partition id) and an unsorted parquet scan (min/max stats
+    chunks).  Only the scan's plan carries the ``__rix_mn__`` aggregate."""
+    import numpy as np
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    n = 240
+    rng = np.random.RandomState(11)
+    k = rng.permutation(n)
+    x = [None if i % 7 == 3 else float(i % 13) for i in range(n)]
+    r = [int(i // 5) % 3 for i in range(n)]
+    pdf = pd.DataFrame({"k": k, "x": x, "r": r})
+    srt = pdf.sort_values("k").reset_index(drop=True)
+    rows = [(int(a), b, int(c)) for a, b, c in zip(k, x, r)]
+    sorted_sdf = (spark.createDataFrame(rows, "k long, x double, r long")
+                  .repartitionByRange(7, F.col("k"))
+                  .sortWithinPartitions("k"))
+    path = str(tmp_path / "unsorted.parquet")
+    pq.write_table(pa.Table.from_pandas(pdf, preserve_index=False), path)
+    cases = [("sorted", pl.LazyFrame(sorted_sdf), srt),
+             ("scan", pl.scan_parquet(path, spark=spark), pdf)]
+    exprs = {
+        "cs": (pl.col("r").cum_sum(), lambda d: d["r"].cumsum()),
+        "ff": (pl.col("x").forward_fill(), lambda d: d["x"].ffill()),
+        "rid": (pl.col("r").rle_id(),
+                lambda d: (d["r"] != d["r"].shift()).cumsum() - 1),
+    }
+
+    def same(a, b):
+        return (a is None and pd.isna(b)) or (
+            a is not None and not pd.isna(b) and float(a) == float(b))
+
+    for label, lf, expect in cases:
+        for name, (e, fn) in exprs.items():
+            out = lf.with_columns(e.alias(name))
+            plan = out._sdf_raw._jdf.queryExecution() \
+                .optimizedPlan().toString()
+            assert ("__rix_mn__" in plan) == (label == "scan"), (label, name)
+            got = [row[name] for row in out.collect().to_a()]
+            want = fn(expect).tolist()
+            assert len(got) == n
+            assert all(same(a, b) for a, b in zip(got, want)), (label, name)

@@ -304,6 +304,64 @@ def test_batch_ops_compose_on_streams(spark, tmp_path, sf_dir):
     assert got == expected and len(got) > 0
 
 
+def test_scan_parquet_types_from_footer(spark, tmp_path, sf_dir):
+    """scan_parquet builds the schema from the pyarrow footer: for every
+    table of the sf0.01 test set it equals Spark's own inference, and the
+    scan launches no Spark job.  A hive-partitioned directory keeps
+    Spark's inference (the partition column is in no footer)."""
+    import glob
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from polars_ruby_spark.sources import io
+
+    tables = sorted(glob.glob(os.path.join(
+        os.path.dirname(sf_dir), "sf0.01", "*.parquet")))
+    assert len(tables) == 10
+    sc = spark.sparkContext
+    for p in tables:
+        probe, whole = io._footer_file(p)
+        assert whole, p
+        derived = io._footer_schema(io._open_footer(probe), spark)
+        assert derived == spark.read.parquet(p).schema, p
+        sc.setJobGroup("footer-scan", p)
+        try:
+            lf = pl.scan_parquet(p, spark=spark)
+        finally:
+            sc._jsc.clearJobGroup()
+        assert list(sc.statusTracker().getJobIdsForGroup("footer-scan")) \
+            == [], p
+        assert lf._sdf.schema == derived, p
+
+    hive = str(tmp_path / "hive")
+    pq.write_to_dataset(pa.table({"k": [1, 1, 2], "v": [1.0, 2.0, 3.0]}),
+                        hive, partition_cols=["k"])
+    assert io._footer_file(hive)[1] is False
+    inferred = spark.read.parquet(hive).schema
+    assert "k" in inferred.fieldNames()
+    assert pl.scan_parquet(hive, spark=spark)._sdf.schema == inferred
+
+
+def test_scan_parquet_footer_nanos_as_micros(spark, tmp_path):
+    """A tz-naive TIMESTAMP(NANOS) column is typed Long from the footer
+    (Spark's nanosAsLong read) and cast back to µs timestamps."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    p = str(tmp_path / "ns.parquet")
+    ts = [1_700_000_000_123_456_789, None, 1_600_000_000_000_001_000]
+    pq.write_table(pa.table({"t": pa.array(ts, pa.timestamp("ns")),
+                             "v": [1, 2, 3]}), p, version="2.6")
+    got = pl.scan_parquet(p, spark=spark).collect().to_a()
+    assert got[0]["t"] == dt.datetime(2023, 11, 14, 22, 13, 20, 123456)
+    assert got[1]["t"] is None
+    assert got[2]["t"] == dt.datetime(2020, 9, 13, 12, 26, 40, 1)
+    assert [r["v"] for r in got] == [1, 2, 3]
+
+
 def test_hive_partition_pruning(spark, tmp_path, sf_dir):
     """partition_by write → scan with a partition-column filter prunes at
     the file index (PartitionFilters in the scan node), the 100 TB

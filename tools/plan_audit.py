@@ -3,8 +3,8 @@
 For each query in __spark_entry__.queries(), builds the physical plan at a
 small SF (analysis only — nothing executes) and flags:
 
-- ``Exchange SinglePartition`` NOT fed by the row-index offset aggregate
-  (the one sanctioned O(partitions)-row single-partition exchange);
+- ``Exchange SinglePartition`` NOT fed by an O(partitions)- or O(chunks)-row
+  totals aggregate or a keyless/limit-bounded input;
 - ``CartesianProduct``/``BroadcastNestedLoopJoin`` outside queries that are
   cross joins by definition;
 - parquet scans with no pruned ReadSchema.
@@ -38,7 +38,8 @@ SKIP = {"q51_streaming_window", "q71_stream_dedup",
 
 def single_partition_violations(plan: str) -> int:
     """SinglePartition exchanges that move FULL data.  Sanctioned children:
-    - the row-index partition-count table (O(partitions) rows);
+    - a per-partition totals table keyed on ``__rix_pid__`` (O(partitions)
+      rows);
     - a keyless merge/partial aggregate (global agg: the exchange carries
       one pre-aggregated row per partition, the canonical two-phase plan).
     """
@@ -48,11 +49,11 @@ def single_partition_violations(plan: str) -> int:
         if "Exchange SinglePartition" not in line:
             continue
         child = "\n".join(lines[i + 1:i + 3])
-        if "__rix_pid__" in child and ("Aggregate(" in child
-                                       or "__rix_cnt__" in child):
-            # the O(partitions)-row row-index counts/offsets table — NOT any
-            # full-data exchange that merely sits above the row-index join
-            # (that leak previously sanctioned q27's single-task rle window)
+        if "__rix_pid__" in child and "Aggregate(" in child:
+            # the O(partitions)-row per-partition totals table (the rank
+            # prefix table's offsets) — NOT any full-data exchange that
+            # merely sits above its join (that leak previously sanctioned
+            # q27's single-task rle window)
             continue
         if ("Aggregate(keys=[__rix_chk__" in child
                 or "Aggregate(key=[__rix_chk__" in child):
