@@ -1823,7 +1823,7 @@ def q132_ewm_single_series(spark, sf_dir):
     (§2.5) — the round-2 scale-killer regression gate: the old plan
     materialized every row's full prefix (O(n²) cells); the new
     block-segmented prescaled scan (operators/ewm.py) is O(n), multi-task,
-    pure JVM windows + a driver-composed O(partitions) carry."""
+    a per-partition Arrow kernel + a lazily folded O(partitions) carry."""
     import polars_ruby_spark as pl
 
     ev = _t(spark, sf_dir, "events").sort(["ts", "event_id"])

@@ -565,37 +565,49 @@ def np_cumeval_arrays_udf(prog, elem_t: str, out_t: str, min_p: int):
 _EWM_FOLD_CACHE = {}
 
 
-def ewm_kernel_fold_udf(n_items: int, cols):
-    """Carry composition for the round-8 Arrow-kernel ungrouped ewm: folds
-    the pid-sorted O(partitions) summary array (one mapInArrow row per
-    partition) into each partition's INCOMING per-series carry + prior
-    non-null counts.
+def ewm_kernel_fold_udf(specs: list):
+    """Carry composition for the Arrow-kernel ungrouped ewm
+    (``operators/ewm.py``): folds the pid-sorted O(partitions) summary
+    array (one mapInArrow row per partition) into each partition's
+    INCOMING per-series carry ``c{j}``, prior non-null count ``p{i}`` and,
+    for a reset-form binding, the rows ``g{i}`` since its last
+    observation.
 
-    ``cols``: tuple of ``(item_idx, power, lam, ignore_nulls)`` per series
-    in global ``q{j}`` order.  Each summary row carries TWO totals per
-    series — ``q{j}`` computed as if no observation precedes the partition
-    and ``qa{j}`` otherwise; they differ only for adjust=false, where the
-    GLOBAL first non-null keeps weight 1 — and the fold picks by the
-    running prior count, mirroring the JVM path's driver loop exactly.
+    A standard-form series composes ``v -> lam^(p*len) * v + total``,
+    taking ``q{j}`` while no observation precedes the partition and
+    ``qa{j}`` after (they differ only for adjust=false, where the GLOBAL
+    first non-null keeps weight 1).  A reset-form binding first takes its
+    partition's first observation step over the true gap, then applies
+    the partition's map ``v -> e^(-p*dl) * v + q{j}``.
     """
-    key = (n_items, tuple(cols))
+    key = tuple(tuple(sorted(spec.items())) for spec in specs)
     cached = _EWM_FOLD_CACHE.get(key)
     if cached is not None:
         return cached
 
+    import math
+
     import pyarrow as pa
     from pyspark.sql.functions import arrow_udf
+    from pyspark.sql.pandas.types import to_arrow_type
     from pyspark.sql import types as T
 
+    from .operators.ewm import (_is_reset_form, _item_series,
+                                _reset_decrement_np, _reset_inputs_np)
+
+    layout, ns = [], 0     # per binding: (spec, reset form, [(j, power)])
+    for spec in specs:
+        powers = [p for _sfx, p in _item_series(spec)]
+        layout.append((spec, _is_reset_form(spec),
+                       [(ns + k, p) for k, p in enumerate(powers)]))
+        ns += len(powers)
+    resets = [i for i, (_s, reset, _js) in enumerate(layout) if reset]
     out_struct = T.StructType(
         [T.StructField("pid", T.IntegerType())]
-        + [T.StructField(f"c{j}", T.DoubleType())
-           for j in range(len(cols))]
-        + [T.StructField(f"p{i}", T.LongType()) for i in range(n_items)])
-    pa_struct = pa.struct(
-        [("pid", pa.int32())]
-        + [(f"c{j}", pa.float64()) for j in range(len(cols))]
-        + [(f"p{i}", pa.int64()) for i in range(n_items)])
+        + [T.StructField(f"c{j}", T.DoubleType()) for j in range(ns)]
+        + [T.StructField(f"p{i}", T.LongType()) for i in range(len(specs))]
+        + [T.StructField(f"g{i}", T.LongType()) for i in resets])
+    pa_type = to_arrow_type(T.ArrayType(out_struct))
 
     @arrow_udf(T.ArrayType(out_struct))
     def _udf(xa: pa.Array) -> pa.Array:
@@ -603,29 +615,36 @@ def ewm_kernel_fold_udf(n_items: int, cols):
             xa = xa.combine_chunks()
         out = []
         for row in xa.to_pylist():
-            if row is None:
-                out.append(None)
-                continue
-            entries = sorted(row, key=lambda e: e["pid"])
-            s = [0.0] * len(cols)
-            n = [0] * n_items
+            s, n, g = [0.0] * ns, [0] * len(specs), [1] * len(specs)
             rows = []
-            for e in entries:
-                rec = {"pid": e["pid"]}
-                for j in range(len(cols)):
-                    rec[f"c{j}"] = s[j]
-                for i in range(n_items):
-                    rec[f"p{i}"] = n[i]
-                rows.append(rec)
-                for j, (i, p, lam, ign) in enumerate(cols):
-                    length = e[f"nn{i}"] if ign else e["nr"]
-                    q = e[f"q{j}"] if n[i] == 0 else e[f"qa{j}"]
-                    s[j] = (lam ** (p * length)) * s[j] \
-                        + (q if q is not None else 0.0)
-                for i in range(n_items):
-                    n[i] += e[f"nn{i}"]
+            for e in sorted(row, key=lambda e: e["pid"]):
+                rows.append({"pid": e["pid"],
+                             **{f"c{j}": v for j, v in enumerate(s)},
+                             **{f"p{i}": v for i, v in enumerate(n)},
+                             **{f"g{i}": g[i] for i in resets}})
+                for i, (spec, reset, js) in enumerate(layout):
+                    nn = e[f"nn{i}"]
+                    if reset and nn:
+                        d0, a0 = (_reset_decrement_np(
+                            float(g[i] + e[f"f{i}"]), spec["lam"],
+                            spec["alpha"]) if n[i] else (0.0, 1.0))
+                        b0 = _reset_inputs_np(e[f"x{i}"], a0, spec)
+                        for (j, p), b in zip(js, b0):
+                            y0 = math.exp(-p * d0) * s[j] + b
+                            s[j] = (math.exp(-p * e[f"dl{i}"]) * y0
+                                    + e[f"q{j}"])
+                        g[i] = e["nr"] - e[f"l{i}"]
+                    elif reset:
+                        g[i] += e["nr"]
+                    else:
+                        length = nn if spec["ignore_nulls"] else e["nr"]
+                        for j, p in js:
+                            q = e[f"q{j}"] if n[i] == 0 else e[f"qa{j}"]
+                            s[j] = (spec["lam"] ** (p * length)) * s[j] \
+                                + (q if q is not None else 0.0)
+                    n[i] += nn
             out.append(rows)
-        return pa.array(out, type=pa.list_(pa_struct))
+        return pa.array(out, type=pa_type)
 
     _EWM_FOLD_CACHE[key] = _udf
     return _udf

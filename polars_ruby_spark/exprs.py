@@ -4424,11 +4424,11 @@ class Expr:
         """Shared ewm builder (expr.rb:6381-6482 ewm_mean/ewm_std/ewm_var).
 
         Scale path: the block-segmented prescaled scan in operators/ewm.py —
-        O(n) per group, pure JVM window aggregates, no per-row prefix arrays
-        (the round-2 verdict's one O(n²) plan).  Attached through the frame
-        hooks: ``_grouped_remap_fn`` for ``.over(keys)``,
+        O(n) per group, no per-row prefix arrays (the round-2 verdict's one
+        O(n²) plan).  Attached through the frame hooks:
+        ``_grouped_remap_fn`` for ``.over(keys)`` (JVM window aggregates),
         ``_global_ordinal_fn`` for the ungrouped select/with_columns binding
-        (two-pass partition-prefix with driver-composed affine carries).
+        (a per-partition Arrow kernel with lazily folded affine carries).
 
         A window-based fallback ``_fn`` (expanding weighted sums over a
         RANGE of the non-null index — still O(n²) per group, but exact)
@@ -4559,8 +4559,8 @@ class Expr:
                 sdf, [(lambda df: inner._fn(df, None), spec, tmp)]), tmp
 
         # batch metadata: the frame binder coalesces SAME-FRAME ewm
-        # bindings into one attach_ewm_global_multi call (one range pin,
-        # one checkpoint, two collects for all bindings — round-6)
+        # bindings into one attach_ewm_global_multi call (one kernel pass
+        # and one carry fold for all bindings — round-6)
         gfn._ewm_batch = {"value": (lambda df: inner._fn(df, None)),
                           "spec": spec, "post": []}
         e._global_ordinal_fn = gfn

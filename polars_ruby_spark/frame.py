@@ -364,9 +364,8 @@ class LazyFrame:
                 return sdf
 
             if not (context == "select" and all_agg) and not unplanned_agg:
-                # SAME-FRAME ewm bindings batch into ONE attach: one range
-                # pin + checkpoint + two O(partitions) collects for all of
-                # them (each binding paid all four on its own before)
+                # SAME-FRAME ewm bindings batch into ONE attach: one
+                # kernel pass and one carry fold for all of them
                 ewm_ks = [
                     (k, e._global_ordinal_fn._ewm_batch)
                     for k, (name, e) in enumerate(expanded)

@@ -10,6 +10,12 @@ from polars_ruby_spark.session import configure
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 
 
+def pytest_configure(config):
+    # pytest-timeout is optional; register its marker so it is known
+    config.addinivalue_line(
+        "markers", "timeout(seconds): per-test time limit (pytest-timeout)")
+
+
 @pytest.fixture(scope="session")
 def spark():
     builder = configure(

@@ -1342,6 +1342,22 @@ def test_ewm_scale_safe_all_modes(spark):
                     assert [gv for _, gv in items] == exp, \
                         f"grouped {kind} adjust={adjust} ign={ign} g={g}"
 
+    # a null gap long enough that lam^k underflows to 0: the reset step's
+    # log-decrement stays finite and the next value restarts the mean
+    for a, gap in [(0.999, 110), (0.4, 1500)]:
+        gvals = [1.0, 2.0, 3.0] + [None] * gap + [10.0, 11.0, 12.0]
+        gdf = pl.DataFrame({"x": gvals, "g": ["a"] * len(gvals)})
+        s = pd.Series([np.nan if v is None else v for v in gvals])
+        exp = s.ewm(alpha=a, adjust=False, ignore_na=False).mean().tolist()
+        e = pl.col("x").ewm_mean(alpha=a, adjust=False, ignore_nulls=False)
+        ungrouped = gdf.select(e.alias("v")).to_series().to_list()
+        grouped = [r["v"] for r in
+                   gdf.with_columns(e.over("g").alias("v")).to_a()]
+        for label, got in [("ungrouped", ungrouped), ("grouped", grouped)]:
+            assert len(got) == len(exp)
+            assert all(abs(g - x) < 1e-9 for g, x in zip(got, exp)), \
+                f"{label} alpha={a} gap={gap}: {got[-3:]} vs {exp[-3:]}"
+
 
 def test_calendar_hopping_rolling_datapoint(spark):
     """Round-3 dynamic-window closures (lazy_frame.rb:1416-1458, 1161):
@@ -2489,15 +2505,18 @@ def test_collect_based_aggs_under_over(spark):
 
 
 def test_ewm_kernel_multipartition_carry(spark):
-    """Round-8 Arrow-kernel ungrouped ewm: the per-partition numpy block
-    scan + carry fold must agree with the single-partition result across
-    a REAL multi-partition pinned layout (the local suites otherwise run
+    """Round-8 Arrow-kernel ungrouped ewm: the per-partition numpy scans
+    + carry fold must agree with the single-partition result across a
+    REAL multi-partition pinned layout (the local suites otherwise run
     one partition, leaving the cross-partition composition unexercised).
-    Covers the three kernel forms (adjust x ignore_nulls minus reset) and
-    the reset form (adjust=False, ignore_nulls=False — the JVM block-scan
-    path with its two driver collects), mean and std, with nulls
+    Covers all four forms (adjust x ignore_nulls; the reset form is
+    adjust=False, ignore_nulls=False), mean and std, with nulls
     straddling partition boundaries.  Each form also runs as a one-item
-    batch — the shape a lone ungrouped ewm binding attaches with."""
+    batch — the shape a lone ungrouped ewm binding attaches with.  The
+    reset form is then checked against pandas on hand-cut partitions: an
+    all-null partition, an observation gap spanning two partition
+    boundaries, a batch mixing it with a standard form, min_periods=3
+    with bias=True, and an index left gapped (gaps count rows)."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import functions as F
@@ -2554,6 +2573,98 @@ def test_ewm_kernel_multipartition_carry(spark):
                     assert es == 0.0
                 else:
                     assert abs(es - float(exp_s.iloc[i])) < 1e-6
+
+    def sliced(values, n_slices, step=1):
+        # parallelize cuts the list into contiguous, equal slices
+        rdd = spark.sparkContext.parallelize(
+            [(i * step, v) for i, v in enumerate(values)], n_slices)
+        frame = spark.createDataFrame(rdd, f"{ROW_IDX} long, x double")
+        frame._plsq_idx_pinned = True
+        return frame
+
+    def check(frame, values, specs):
+        items = [(lambda df: F.col("x"), spec, f"o{i}")
+                 for i, spec in enumerate(specs)]
+        got = attach_ewm_global_multi(frame, items).orderBy(ROW_IDX) \
+            .collect()
+        assert len(got) == len(values)
+        s = pd.Series([np.nan if v is None else v for v in values])
+        for i, spec in enumerate(specs):
+            ew = s.ewm(alpha=spec["alpha"], adjust=spec["adjust"],
+                       ignore_na=spec["ignore_nulls"],
+                       min_periods=spec["min_periods"])
+            if spec["kind"] == "mean":
+                exp = ew.mean()
+            else:
+                exp = ew.var(bias=spec["bias"])
+                if spec["kind"] == "std":
+                    exp = np.sqrt(exp)
+            for r, e in zip(got, exp):
+                if np.isnan(e):
+                    assert r[f"o{i}"] is None, spec
+                else:
+                    assert abs(r[f"o{i}"] - e) < 1e-9, spec
+
+    reset = {"kind": "mean", "alpha": 0.4, "lam": 0.6, "adjust": False,
+             "ignore_nulls": False, "bias": False, "min_periods": 1}
+    # rows 0-8 observed, 9-25 null, 26-47 observed but for 40 and 44: in
+    # four slices of 12, slice 1 holds no observation and the gap from
+    # row 8 to row 26 spans two partition boundaries
+    gappy = ([round(float(v), 3) for v in rng.randn(9)] + [None] * 17
+             + [round(float(v), 3) for v in rng.randn(22)])
+    gappy[40] = gappy[44] = None
+    frame = sliced(gappy, 4)
+    assert [sum(r["x"] is not None for r in part)
+            for part in frame.rdd.glom().collect()] == [9, 0, 10, 10]
+    near_reset = dict(reset, alpha=0.999, lam=1 - 0.999)
+    check(frame, gappy, [reset, near_reset])
+    # mixed batch: one standard-form item beside the reset item
+    check(frame, gappy, [dict(reset, adjust=True), reset])
+    check(sliced(gappy, 4, step=3), gappy, [reset])
+    # std/var on dense input (right after a near-reset gap the closed form
+    # (s2 - s1^2)/(1 - sq) is ill-conditioned); alpha 0.95 crosses log
+    # blocks inside each partition
+    dense = [round(float(v), 3) for v in rng.randn(400)]
+    check(sliced(dense, 4), dense,
+          [dict(reset, kind="std", alpha=0.95, lam=1 - 0.95, bias=True,
+                min_periods=3),
+           dict(reset, kind="var", min_periods=3)])
+
+
+def test_ewm_reset_attach_launches_no_job(spark):
+    """Building an ungrouped reset-form ewm attach over a pinned index is
+    lazy: construction starts no Spark job; the carries are folded when
+    the result executes."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from polars_ruby_spark.operators.ewm import attach_ewm_global_multi
+    from polars_ruby_spark.session import ROW_IDX
+
+    vals = [1.0, None, 3.0, 2.5, None, None, 8.0, 0.5, 4.0, None, 7.5, 6.0]
+    sdf = spark.createDataFrame(
+        spark.sparkContext.parallelize(list(enumerate(vals)), 3),
+        f"{ROW_IDX} long, x double")
+    sdf._plsq_idx_pinned = True
+    spec = {"kind": "std", "alpha": 0.4, "lam": 0.6, "adjust": False,
+            "ignore_nulls": False, "bias": True, "min_periods": 1}
+    items = [(lambda df: F.col("x"), dict(spec, kind="mean"), "em"),
+             (lambda df: F.col("x"), spec, "es")]
+    sc = spark.sparkContext
+    sc.setJobGroup("ewm-reset-attach", "construct")
+    try:
+        out = attach_ewm_global_multi(sdf, items)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert list(sc.statusTracker().getJobIdsForGroup(
+        "ewm-reset-attach")) == []
+    rows = out.orderBy(ROW_IDX).collect()
+    ew = pd.Series([np.nan if v is None else v for v in vals]).ewm(
+        alpha=0.4, adjust=False, ignore_na=False)
+    for r, m, v in zip(rows, ew.mean(), ew.var(bias=True)):
+        assert abs(r["em"] - m) < 1e-12
+        assert abs(r["es"] - np.sqrt(v)) < 1e-12
 
 
 def test_spearman_over_defers_order_restore(spark):
