@@ -4423,12 +4423,14 @@ class Expr:
              min_periods, ignore_nulls):
         """Shared ewm builder (expr.rb:6381-6482 ewm_mean/ewm_std/ewm_var).
 
-        Scale path: the block-segmented prescaled scan in operators/ewm.py —
-        O(n) per group, no per-row prefix arrays (the round-2 verdict's one
-        O(n²) plan).  Attached through the frame hooks:
-        ``_grouped_remap_fn`` for ``.over(keys)`` (JVM window aggregates),
-        ``_global_ordinal_fn`` for the ungrouped select/with_columns binding
-        (a per-partition Arrow kernel with lazily folded affine carries).
+        Scale path: the block-segmented prescaled numpy scan in
+        operators/ewm.py — O(n) per group, no per-row prefix arrays (the
+        round-2 verdict's one O(n²) plan).  Attached through the frame
+        hooks: ``_grouped_remap_fn`` for ``.over(keys)`` (one Arrow kernel
+        over the frame partitioned on the keys and sorted by keys and row
+        order), ``_global_ordinal_fn`` for the ungrouped
+        select/with_columns binding (a per-partition Arrow kernel with
+        lazily folded affine carries).
 
         A window-based fallback ``_fn`` (expanding weighted sums over a
         RANGE of the non-null index — still O(n²) per group, but exact)
@@ -4455,7 +4457,7 @@ class Expr:
                 # periods after the previous, y = (lam^k*y + a*x)/(lam^k+a)
                 # — normalized weights sum to 1 at every step, so history
                 # rescales per observation and no fixed weight-product
-                # model exists (operators/ewm.py _varying_scan).  Run the
+                # model exists (operators/ewm.py, reset form).  Run the
                 # same recursion on (s1, s2, sq) sequentially in the HOF.
                 arr = F.collect_list(
                     F.struct(c.cast("double").alias("v"))).over(

@@ -543,9 +543,11 @@ class LazyFrame:
                         # where one runs in ~0.5 s).  A LAZY localCheckpoint
                         # between attaches materializes each stage once,
                         # making chains linear (q166 execute 19.3 s →
-                        # 0.75 s); the ~1 s of physical planning it costs
-                        # per stage at construction is a local[*] constant
-                        # a long-lived cluster amortizes, and the measured
+                        # 0.75 s).  It is not free at construction: under
+                        # AQE the lazy checkpoint builds its RDD through
+                        # queryExecution.toRdd, which runs every upstream
+                        # shuffle stage (and a sort's range sampler) right
+                        # away — Spark jobs, not planning.  The measured
                         # alternative (persist) saves construct but pays
                         # it back with cache-write overhead at execute.
                         # Paid only from the SECOND hook on, so

@@ -408,56 +408,33 @@ def decontaminate_flags(train: DataFrame, bench: DataFrame,
                     F.coalesce("__hit__", F.lit(False)).alias("contaminated")))
 
 
-def _hot_gram_salt(grams: DataFrame, gh_col: str,
-                   probe_rows: int = 65536, share: float = 0.05,
-                   n_salt: int = 16) -> int:
-    """Decide whether the shared gram exchange needs a salted split
-    (round-12, guide §2.5; VERDICT r11 ask #3).  Returns 0 (uniform — keep
-    the plain ``repartition(gh)``) or a salt modulus.
-
-    The probe is one bounded job at plan-construct: the first
-    ``probe_rows`` gram instances (LocalLimit short-circuits the scan, so
-    only the leading partitions' gram build executes), grouped by gram
-    hash — if any single gram owns ≥ ``share`` of the sampled instances,
-    the corpus is hot-key shaped and the exchange splits each gram across
-    ``n_salt`` reducers.  A prefix sample can miss an adversary that sorts
-    its duplicates to the tail; ``SPARK_GRAFT_GRAM_SALT`` forces the
-    decision both ways (0/1 = off, >1 = salt modulus, unset = probe).
-    """
-    import os
-
-    env = os.environ.get("SPARK_GRAFT_GRAM_SALT", "").strip()
-    if env:
-        try:
-            v = int(env)
-        except ValueError:
-            raise ValueError(
-                f"SPARK_GRAFT_GRAM_SALT must be an integer (0/1 = off, "
-                f">1 = salt modulus), got {env!r}") from None
-        return 0 if v <= 1 else v
-    top, tot = (grams.select(F.col(gh_col).alias("__g__"))
-                .where(F.col("__g__").isNotNull())  # short-doc null grams
-                .limit(probe_rows)                  # are not a hot KEY
-                .groupBy("__g__").agg(F.count(F.lit(1)).alias("__c__"))
-                .agg(F.max("__c__"), F.sum("__c__")).first())
-    if not tot or (top or 0) < share * tot:
-        return 0
-    return n_salt
+#: salts of the shared gram exchange: a gram's instances spread over up to
+#: this many reducers, split by their doc id
+_GRAM_SALTS = 16
 
 
-def _salted_doc_counts(grams: DataFrame, gh_col: str, count_col,
-                       out_name: str, n_salt: int, salt_col: str,
-                       distinct_first: bool = False) -> DataFrame:
-    """Two-level aggregate over a (gh, salt)-partitioned gram table: the
-    partial level groups on (gh, salt) — satisfied by the shared exchange,
-    so a hot gram's rows reduce on ``n_salt`` tasks — and a second TINY
+def _salted_gram_counts(flat: DataFrame, gh_col: str, id_col: str,
+                        count_col, out_name: str,
+                        distinct_first: bool = False):
+    """The one gram-exchange shape of the n-gram flag-join family: returns
+    ``flat`` behind ONE exchange keyed on (gram, salt) — the salt is
+    ``pmod(xxhash64(doc id), 16)``, so a hot gram (boilerplate shared by
+    much of the corpus) reduces on up to 16 tasks — and the per-gram
+    ``count_col`` as a two-level aggregate over it: the partial level
+    groups on (gh, salt), satisfied by the shared exchange, and a second
     exchange (one row per (gram, salt) bucket) sums per gram.  Exact
     because the salt derives from the doc id: each distinct doc lands in
-    exactly one bucket, so bucket-local distinct counts add."""
+    exactly one bucket, so bucket-local distinct counts add.  No job runs
+    at construction to pick a shape.  The price is on uniform corpora,
+    where grams are mostly singletons: there are about as many buckets as
+    grams, so the second level is a full-size aggregate."""
+    grams = (flat.withColumn("__gsalt", F.pmod(F.xxhash64(F.col(id_col)),
+                                               F.lit(_GRAM_SALTS)))
+             .repartition(gh_col, "__gsalt"))
     g = grams.distinct() if distinct_first else grams
-    part = g.groupBy(F.col(gh_col), F.col(salt_col)).agg(
+    part = g.groupBy(F.col(gh_col), F.col("__gsalt")).agg(
         count_col.alias("__d1__"))
-    return part.groupBy(gh_col).agg(F.sum("__d1__").alias(out_name))
+    return grams, part.groupBy(gh_col).agg(F.sum("__d1__").alias(out_name))
 
 
 def ngram_dup_coverage(sdf: DataFrame, n: int = 13, text_col: str = "text",
@@ -485,16 +462,19 @@ def ngram_dup_coverage(sdf: DataFrame, n: int = 13, text_col: str = "text",
     position side never re-shuffles on the gram hash).  Per-doc coverage
     is then a map-side-combined groupBy on the id.
 
-    The gram table is pinned behind ONE explicit gram-hash exchange that
-    both consumers (the doc-count branch and the flag-join instance side)
+    The gram table is pinned behind ONE explicit exchange that both
+    consumers (the doc-count branch and the flag-join instance side)
     reuse (round-11; guide §2.4/§7.2): without it the broadcast join left
     no exchange to share and the explode + md5 subtree EXECUTED TWICE —
     the per-position gram build is the dominant stage (measured 3.8 s of
     the query's 12.7 s at sf1.0, ×2).  AQE stage reuse collapses the two
-    reads into one computation; the count-distinct's partial aggregate
-    sits above the exchange, where partition-local combine does the same
-    reduction the pre-shuffle combine did (13-gram hashes are singleton-
-    dominated either way).
+    reads into one computation.  The exchange keys on (gram, salt of the
+    doc id) (``_salted_gram_counts``), so a boilerplate gram shared by
+    much of the corpus reduces on up to 16 tasks, and the doc count is
+    the exact two-level aggregate: a count-distinct per (gram, salt)
+    above the exchange, then a sum per gram over one row per bucket.
+    That one shape serves every corpus; no job runs at construction to
+    pick it.
     """
     toks = _tokens(F.col(text_col))
     base = (sdf.select(F.col(id_col), toks.alias("__toks"))
@@ -508,23 +488,10 @@ def ngram_dup_coverage(sdf: DataFrame, n: int = 13, text_col: str = "text",
                     F.xxhash64(F.array_join(
                         F.slice(F.col("__toks"), F.col("__pos"), F.lit(n)), " "))
                      .alias("__gh")))
-    # skew-hardened split (round-12, guide §2.5): when the probe detects a
-    # hot gram, the shared exchange keys on (gram, salt-of-doc-id) so the
-    # hot gram's instances spread across n_salt reducers, and the doc
-    # count becomes a two-level aggregate (exact — the salt derives from
-    # the doc id).  Uniform corpora keep the round-11 single-key shape.
-    n_salt = _hot_gram_salt(flat, "__gh")
-    if n_salt:
-        grams = (flat.withColumn(
-                     "__gsalt", F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_salt)))
-                 .repartition("__gh", "__gsalt"))
-        docs = _salted_doc_counts(
-            grams, "__gh", F.count_distinct(F.col(id_col)), "__docs",
-            n_salt, "__gsalt")
-    else:
-        grams = flat.repartition("__gh")
-        docs = grams.groupBy("__gh").agg(
-            F.count_distinct(F.col(id_col)).alias("__docs"))
+    # skew-hardened split (round-12, guide §2.5): the shared exchange keys
+    # on (gram, salt-of-doc-id) and the doc count is a two-level aggregate
+    grams, docs = _salted_gram_counts(
+        flat, "__gh", id_col, F.count_distinct(F.col(id_col)), "__docs")
     shared = (docs.where(F.col("__docs") > 1)
               .select(F.col("__gh").alias("__gh2"), F.lit(1).alias("__dup")))
     # eqNullSafe, deliberately: a plain equi-join INFERS isnotnull(__gh) on

@@ -18,35 +18,38 @@ power (1 for the weighted sums, 2 for the squared-weight sum used by the
 
 The naive plan (collect the whole prefix per row) is O(n^2) per group —
 round-2 VERDICT's one scale-killer.  This module computes S in O(n) via a
-*block-segmented prescaled scan*:
+*block-segmented prescaled scan* in numpy, run inside Arrow kernels:
 
-1. split each group's decay index into blocks of ``B`` positions, with
-   ``B`` chosen so ``lam^(-2B) <= 1e200`` never overflows a double;
+1. the scan axis is cut into *segments* (one group's rows, or one
+   partition's), and each segment's decay index into blocks of ``B``
+   positions, with ``B`` chosen so ``lam^(-2B) <= 1e200`` never overflows
+   a double;
 2. within a block, ``S_local = lam^(p*r) * running_sum(c * lam^(-p*r))``
-   — one ``sum().over(rowsBetween(unboundedPreceding, 0))`` per series,
-   an O(1)-state running aggregate in WindowExec (NOT a per-row array);
-3. across blocks, the carry from block b-1 (and b-2) is reached with a
-   RANGE frame on the block id (``rangeBetween(-1, -1)``) over the group
-   keys — contributions from >= 3 blocks back carry weight
-   ``lam^(3B) <= 1e-300`` and are dropped (documented truncation: below
-   any representable effect unless the data spans ~600 orders of
-   magnitude; polars' own sequential f64 recurrence rounds far above it);
-4. for the UNGROUPED frame, the same block scan runs in numpy inside a
-   per-partition Arrow kernel over contiguous ROW_IDX ranges, and the
-   per-partition boundary states — O(num_partitions) rows — are composed
-   by a lazy fold (the affine maps ``v -> lam^len * v + total`` compose
-   associatively); see the kernel note below.
+   — one ordered running sum per series; one call scans every segment of
+   an Arrow batch at once;
+3. across blocks, the totals of block b-1 (and b-2) of the same segment
+   are carried in at their decay — contributions from >= 3 blocks back
+   carry weight ``lam^(3B) <= 1e-300`` and are dropped (documented
+   truncation: below any representable effect unless the data spans ~600
+   orders of magnitude; polars' own sequential f64 recurrence rounds far
+   above it);
+4. for the UNGROUPED frame, the scan runs per partition over contiguous
+   ROW_IDX ranges, and the per-partition boundary states —
+   O(num_partitions) rows — are composed by a lazy fold (the affine maps
+   ``v -> lam^len * v + total`` compose associatively); see the kernel
+   note below.  GROUPED ewm (``over(keys)``) hash-partitions on the keys
+   and sorts by (keys, ROW_IDX) within partitions, so one streaming pass
+   restarts the scan at every key change (see ``attach_ewm_grouped``).
 
-Grouped ewm (``over(keys)``) is pure JVM window aggregates; the ungrouped
-path is two Arrow passes.  Neither collects to the driver, and neither
-builds a single-partition window over data-sized input.
+Neither path collects to the driver, and neither builds a single-partition
+window over data-sized input.
 """
 
 from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..session import ROW_IDX
@@ -68,107 +71,29 @@ def _block_size(lam: float) -> int:
     return max(1, min(1 << 30, int(_MAX_PRESCALE_LOG10 / neg_log10)))
 
 
-def _series_coefs(x, alpha: float, adjust: bool, first, need_var: bool):
-    """Per-row coefficient columns for each decayed series.
-
-    Returns ``[(suffix, coef_col, decay_power), ...]`` — s0/s1 always,
-    s2/sq only for the variance path.
-    """
-    nn = x.isNotNull()
-    if adjust:
-        base = F.when(nn, F.lit(1.0)).otherwise(F.lit(0.0))
-        base_sq = base
-    else:
-        base = F.when(~nn, F.lit(0.0)).when(first, F.lit(1.0)).otherwise(
-            F.lit(float(alpha)))
-        base_sq = base * base
-    xd = x.cast("double")
-    series = [("s0", base, 1), ("s1", base * F.coalesce(xd, F.lit(0.0)), 1)]
-    if need_var:
-        x2 = F.coalesce(xd * xd, F.lit(0.0))
-        series.append(("s2", base * x2, 1))
-        series.append(("sq", base_sq, 2))
-    return series
-
-
-def _decayed_sums(sdf: DataFrame, x_name: str, keys: list, lam: float,
-                  alpha: float, adjust: bool, ignore_nulls: bool,
-                  need_var: bool) -> DataFrame:
-    """Attach per-row decayed sums ``__ewm_s0/s1[/s2/sq]__`` plus the
-    non-null count ``__ewm_m__`` and decay index ``__ewm_j__``, scanning
-    within ``keys`` groups in ROW_IDX order.  Pure window plan (two
-    exchanges: keys, keys+block)."""
-    B = _block_size(lam)
-    x = F.col(x_name)
-    wk = Window.partitionBy(*keys).orderBy(F.col(ROW_IDX).asc())
-    upto = wk.rowsBetween(Window.unboundedPreceding, 0)
-    m = F.count(x).over(upto)
-    if ignore_nulls:
-        j = m - F.lit(1)
-    else:
-        j = F.row_number().over(wk) - F.lit(1)
-    sdf = sdf.withColumn("__ewm_m__", m).withColumn("__ewm_j__", j)
-    j = F.col("__ewm_j__")
-    first = x.isNotNull() & (F.col("__ewm_m__") == 1)
-    blk = F.floor(j.cast("double") / F.lit(float(B))).cast("long")
-    r = (j - blk * F.lit(B)).cast("double")
-    sdf = sdf.withColumn("__ewm_blk__", blk).withColumn("__ewm_r__", r)
-    r = F.col("__ewm_r__")
-
-    series = _series_coefs(x, alpha, adjust, first, need_var)
-    pre_cols = {}
-    for sfx, coef, p in series:
-        pre_cols[f"__ewm_pre_{sfx}__"] = coef * F.pow(F.lit(lam), -(r * p))
-    sdf = sdf.withColumns(pre_cols)
-
-    wb = (Window.partitionBy(*keys, F.col("__ewm_blk__"))
-          .orderBy(F.col(ROW_IDX).asc())
-          .rowsBetween(Window.unboundedPreceding, 0))
-    wblk = Window.partitionBy(*keys).orderBy(F.col("__ewm_blk__").asc())
-    out_cols = {}
-    for sfx, _coef, p in series:
-        pre = F.col(f"__ewm_pre_{sfx}__")
-        local = F.pow(F.lit(lam), r * p) * F.sum(pre).over(wb)
-        # carry from the previous (complete, length-B) one/two blocks:
-        # their totals measured at their own last position are
-        # lam^(p*(B-1)) * sum(pre); weight into this row is lam^(p*(r+1))
-        # per block crossed.  >=3 blocks back: weight <= lam^(3B) -> dropped.
-        t1 = F.coalesce(
-            F.sum(pre).over(wblk.rangeBetween(-1, -1)), F.lit(0.0))
-        t2 = F.coalesce(
-            F.sum(pre).over(wblk.rangeBetween(-2, -2)), F.lit(0.0))
-        end_scale = F.pow(F.lit(lam), F.lit(float((B - 1) * p)))
-        carry = end_scale * (t1 + F.pow(F.lit(lam), F.lit(float(B * p))) * t2)
-        out_cols[f"__ewm_{sfx}__"] = (
-            local + F.pow(F.lit(lam), (r + 1) * p) * carry)
-    sdf = sdf.withColumns(out_cols)
-    return sdf.drop("__ewm_blk__", "__ewm_r__", *pre_cols)
-
-
-def _combine(kind: str, bias: bool, min_periods: int, sfx: str = ""):
-    """Final expression over the attached ``__ewm_*__`` sum columns
-    (``sfx`` names one binding's columns in the batched multi-attach)."""
+def _combine(spec: dict, sfx: str):
+    """Final expression over one binding's attached ``__ewm_*{sfx}__``
+    sum columns.  The reset form's normalized weights sum to 1, so its
+    s0 is the literal 1 (the mean IS s1)."""
     m = F.col(f"__ewm_m{sfx}__")
-    s0, s1 = F.col(f"__ewm_s0{sfx}__"), F.col(f"__ewm_s1{sfx}__")
-    if kind == "mean":
-        return F.when(m >= max(min_periods, 1), s1 / s0)
+    s0 = F.lit(1.0) if _is_reset_form(spec) else F.col(f"__ewm_s0{sfx}__")
+    mean = F.col(f"__ewm_s1{sfx}__") / s0
+    ok = m >= max(spec["min_periods"], 1)
+    if spec["kind"] == "mean":
+        return F.when(ok, mean)
     s2, sq = F.col(f"__ewm_s2{sfx}__"), F.col(f"__ewm_sq{sfx}__")
-    mean = s1 / s0
     # a single observation's variance is exactly 0 (guard the catastrophic
     # cancellation in s2/s0 - mean^2, and polars' 0.0-at-first-row
     # convention for the unbiased form: expr.rb:6398 doctest)
     var = F.greatest(s2 / s0 - mean * mean, F.lit(0.0))
-    if not bias:
+    if not spec["bias"]:
         denom = s0 * s0 - sq
         var = F.when(denom > 0, var * s0 * s0 / denom).otherwise(F.lit(0.0))
     var = F.when(m == 1, F.lit(0.0)).otherwise(var)
-    out = F.when(m >= max(min_periods, 1), var)
-    if kind == "std":
-        out = F.sqrt(out)
-    return out
+    return F.when(ok, F.sqrt(var) if spec["kind"] == "std" else var)
 
 
-# -- varying-multiplier scan (adjust=false & ignore_nulls=false) -------------
+# -- reset form (adjust=false & ignore_nulls=false) --------------------------
 #
 # pandas/polars implement that combination with a RESET normalization
 # (polars-arrow ewm kernels mirror pandas window_aggregations.pyx): at each
@@ -182,10 +107,10 @@ def _combine(kind: str, bias: bool, min_periods: int, sfx: str = ""):
 # with the block id derived from the ACCUMULATED log-decay instead of the
 # position: L_t = sum of d_i, with d = -ln(m) taken in log space as
 # ln(lam^k + alpha) - k*ln(lam) (finite where lam^k underflows to 0 after
-# a long null gap), blk = floor(L/T), so exp factors stay in
-# [e^-T, 1] within a block and cross-block carries use e^-T / e^-2T range
-# frames (>= 3 blocks back: < 1e-200, dropped).  exp/log round-trip costs
-# ~1e-15 relative precision — far inside the 9dp oracle bar.
+# a long null gap), blk = floor(L/T), so exp factors stay in [e^-T, 1]
+# within a block and cross-block carries enter at e^-T / e^-2T (>= 3
+# blocks back: < 1e-200, dropped).  exp/log round-trip costs ~1e-15
+# relative precision — far inside the 9dp oracle bar.
 
 #: log-decay span per block: e^T = 1e100 never overflows prescaled doubles
 _LOG_BLOCK = 230.0
@@ -201,102 +126,6 @@ def _ln(lam: float) -> float:
     return math.log(lam) if lam > 0 else -math.inf
 
 
-def _varying_scan(sdf: DataFrame, series: list, lam_col_name: str,
-                  keys: list):
-    """Scan ``v -> m*v + b`` per series over keys in ROW_IDX order.
-
-    ``series``: ``[(out_col, b_col_name, scale), ...]`` where scale doubles
-    the log-decay for squared-weight series.  ``lam_col_name`` holds the
-    per-row log-decrement d = -ln(m) (0 on null rows and the first obs).
-    """
-    d = F.col(lam_col_name)
-    wk = Window.partitionBy(*keys).orderBy(F.col(ROW_IDX).asc())
-    upto = wk.rowsBetween(Window.unboundedPreceding, 0)
-    sdf = sdf.withColumn("__ewm_L__", F.sum(d).over(upto))
-    for out_col, b_name, scale in series:
-        L = F.col("__ewm_L__") * scale
-        blk = F.floor(L / _LOG_BLOCK).cast("long")
-        off = L - blk.cast("double") * F.lit(_LOG_BLOCK)
-        bc, oc = f"__ewm_vb_{out_col}__", f"__ewm_vo_{out_col}__"
-        pc = f"__ewm_vp_{out_col}__"
-        sdf = (sdf.withColumn(bc, blk).withColumn(oc, off)
-               .withColumn(pc, F.col(b_name) * F.exp(F.col(oc))))
-        wb = (Window.partitionBy(*keys, F.col(bc))
-              .orderBy(F.col(ROW_IDX).asc())
-              .rowsBetween(Window.unboundedPreceding, 0))
-        wblk = Window.partitionBy(*keys).orderBy(F.col(bc).asc())
-        s = F.sum(pc).over(wb)
-        p1 = F.coalesce(F.sum(pc).over(wblk.rangeBetween(-1, -1)), F.lit(0.0))
-        p2 = F.coalesce(F.sum(pc).over(wblk.rangeBetween(-2, -2)), F.lit(0.0))
-        v = F.exp(-F.col(oc)) * (
-            s + F.lit(math.exp(-_LOG_BLOCK)) * p1
-            + F.lit(math.exp(-2 * _LOG_BLOCK)) * p2)
-        sdf = sdf.withColumn(out_col, v).drop(bc, oc, pc)
-    return sdf
-
-
-def _varying_inputs(sdf: DataFrame, x_name: str, keys: list, lam: float,
-                    alpha: float, need_var: bool):
-    """Per-row log-decrement + scan inputs for the reset form, ``k``
-    (periods since the previous observation) counted in within-group
-    positions."""
-    x = F.col(x_name)
-    nn = x.isNotNull()
-    wk = Window.partitionBy(*keys).orderBy(F.col(ROW_IDX).asc())
-    upto = wk.rowsBetween(Window.unboundedPreceding, 0)
-    m_cnt = F.count(x).over(upto)
-    sdf = sdf.withColumn("__ewm_pos__", F.row_number().over(wk))
-    pos = F.col("__ewm_pos__")
-    prev_idx = F.last(F.when(nn, pos), ignorenulls=True).over(
-        wk.rowsBetween(Window.unboundedPreceding, -1))
-    first = nn & prev_idx.isNull()
-    k = (pos - prev_idx).cast("double")
-    lamk = F.pow(F.lit(lam), k)           # may underflow to 0 for huge k
-    denom = lamk + F.lit(alpha)
-    d = F.least(F.log(denom) - k * F.lit(_ln(lam)), F.lit(_D_CAP))
-    d = F.when(nn & ~first, d).otherwise(F.lit(0.0))
-    aprime = F.when(first, F.lit(1.0)).otherwise(F.lit(alpha) / denom)
-    xd = x.cast("double")
-    sdf = (sdf.withColumn("__ewm_m__", m_cnt)
-           .withColumn("__ewm_d__", d)
-           .withColumn("__ewm_b1__",
-                       F.when(nn, aprime * xd).otherwise(F.lit(0.0))))
-    series = [("__ewm_s1__", "__ewm_b1__", 1)]
-    if need_var:
-        sdf = (sdf.withColumn("__ewm_b2__",
-                              F.when(nn, aprime * xd * xd).otherwise(
-                                  F.lit(0.0)))
-               .withColumn("__ewm_bq__",
-                           F.when(nn, aprime * aprime).otherwise(F.lit(0.0))))
-        series += [("__ewm_s2__", "__ewm_b2__", 1),
-                   ("__ewm_sq__", "__ewm_bq__", 2)]
-    return sdf, series
-
-
-def _combine_varying(kind: str, bias: bool, min_periods: int,
-                     sfx: str = ""):
-    """Final expression for the reset-normalized scan: weights sum to 1,
-    so the mean IS s1; the reliability correction uses sq = sum(u_i^2)."""
-    m = F.col(f"__ewm_m{sfx}__")
-    mean = F.col(f"__ewm_s1{sfx}__")
-    if kind == "mean":
-        return F.when(m >= max(min_periods, 1), mean)
-    var = F.greatest(F.col(f"__ewm_s2{sfx}__") - mean * mean, F.lit(0.0))
-    if not bias:
-        denom = F.lit(1.0) - F.col(f"__ewm_sq{sfx}__")
-        var = F.when(denom > 0, var / denom).otherwise(F.lit(0.0))
-    var = F.when(m == 1, F.lit(0.0)).otherwise(var)
-    out = F.when(m >= max(min_periods, 1), var)
-    if kind == "std":
-        out = F.sqrt(out)
-    return out
-
-
-_EWM_DROPS = ["__ewm_m__", "__ewm_j__", "__ewm_L__", "__ewm_d__",
-              "__ewm_pos__", "__ewm_s0__", "__ewm_s1__", "__ewm_s2__",
-              "__ewm_sq__", "__ewm_b1__", "__ewm_b2__", "__ewm_bq__"]
-
-
 def _is_reset_form(spec: dict) -> bool:
     return not spec["adjust"] and not spec["ignore_nulls"]
 
@@ -307,19 +136,17 @@ def _is_reset_form(spec: dict) -> bool:
 # strictly per-partition: ONE ``mapInArrow`` pass computes every binding's
 # sums with vectorized numpy — zero shuffles, zero sorts, O(n/P) per task —
 # after a tiny pass that emits one summary row per partition for the lazy
-# O(partitions) carry fold.  The standard forms' numpy block scan mirrors
-# ``_decayed_sums``'s arithmetic exactly (same prescale, same sequential
-# accumulation order), so values agree with the grouped path to the ulp.
+# O(partitions) carry fold.  Each partition is one scan segment.
 #
 # The reset form (adjust=false & ignore_nulls=false) has data-dependent
 # block widths, so it scans the observation axis with blocks cut at
-# floor(L/T) as in ``_varying_scan``.  Its summary row cannot take the
-# partition's first step, whose gap reaches back across earlier
-# partitions: it carries the map from the state just after the first
-# observation to the state at the last, that observation's value and
-# position, and the last observation's position, and the fold takes the
-# first step with the true gap.  Gaps count rows, not ROW_IDX values, so
-# an index left gapped by a filter still measures the frame's own rows.
+# floor(L/T).  Its summary row cannot take the partition's first step,
+# whose gap reaches back across earlier partitions: it carries the map
+# from the state just after the first observation to the state at the
+# last, that observation's value and position, and the last observation's
+# position, and the fold takes the first step with the true gap.  Gaps
+# count rows, not ROW_IDX values, so an index left gapped by a filter
+# still measures the frame's own rows.
 
 
 def _item_series(spec: dict) -> list:
@@ -331,102 +158,130 @@ def _item_series(spec: dict) -> list:
     return out
 
 
-def _series_coefs_np(xs, vm, spec: dict, prior_empty: bool):
-    """numpy mirror of ``_series_coefs`` on the dense scan axis."""
+def _scan_fields(spec: dict, sfx: str) -> list:
+    """The kernel's output columns for one binding: the running non-null
+    count ``__ewm_m{sfx}__`` and one decayed sum per series."""
+    from pyspark.sql import types as T
+
+    return [T.StructField(f"__ewm_m{sfx}__", T.LongType())] + [
+        T.StructField(f"__ewm_{s}{sfx}__", T.DoubleType())
+        for s, _p in _item_series(spec)]
+
+
+def _runs(key):
+    """Start index and length of each run of equal values in ``key``
+    (non-empty)."""
     import numpy as np
 
-    alpha, adjust = spec["alpha"], spec["adjust"]
-    if adjust:
-        base = vm.astype("float64")
-        base_sq = base
-    else:
-        base = np.where(vm, float(alpha), 0.0)
-        if prior_empty:
-            nzi = np.flatnonzero(vm)
-            if len(nzi):
-                base[nzi[0]] = 1.0  # global first non-null keeps weight 1
-        base_sq = base * base
-    x0 = np.where(vm, xs, 0.0)          # coalesce(xd, 0); NaN values stay
-    series = [base, base * x0]
-    if spec["kind"] in ("var", "std"):
-        series += [base * x0 * x0, base_sq]
-    return series
+    starts = np.flatnonzero(np.r_[True, key[1:] != key[:-1]])
+    return starts, np.diff(np.append(starts, len(key)))
 
 
-def _block_scan_np(c, p: int, lam: float, B: int, carry: float):
-    """Dense block-segmented prescaled scan — numpy mirror of the JVM
-    windows in ``_decayed_sums`` (same prescale bounds, same sequential
-    accumulation order via ``np.cumsum``), merged with the incoming carry
-    at decay ``lam^(p*(j+1))``."""
+def _seg_count(v, seg):
+    """Running integer sum of ``v`` restarting at every segment of the
+    (non-decreasing) segment ids ``seg``."""
     import numpy as np
 
-    n = len(c)
-    if n == 0:
+    c = np.cumsum(v)
+    if seg[0] == seg[-1]:
         return c
-    j = np.arange(n, dtype="float64")
-    if B >= n:                           # single block — no padding arrays
-        pre = c * lam ** (-(j * p))
-        s = lam ** (j * p) * np.cumsum(pre)
-    else:
-        nblk = (n + B - 1) // B
-        r = j % B
-        pre = c * lam ** (-(r * p))
-        pad = nblk * B - n
-        if pad:
-            pre = np.concatenate([pre, np.zeros(pad)])
-        lc = np.cumsum(pre.reshape(nblk, B), axis=1)
-        t = lc[:, -1]
-        cb = np.zeros(nblk)
-        # carry from the previous one/two (complete) blocks — same
-        # truncation as the JVM range frames (>=3 back: < lam^(3B))
-        t2 = np.concatenate([[0.0], t[:-2]]) if nblk > 2 else \
-            np.zeros(nblk - 1)
-        cb[1:] = lam ** ((B - 1) * p) * (t[:-1] + (lam ** (B * p)) * t2)
-        s = (lam ** (r * p) * lc.reshape(-1)[:n]
-             + lam ** ((r + 1) * p) * np.repeat(cb, B)[:n])
-    if carry:
-        s = s + lam ** ((j + 1) * p) * carry
-    return s
+    starts, lens = _runs(seg)
+    return c - np.repeat((c - v)[starts], lens)
 
 
-def _rows_np(s, mloc, carry: float):
-    """Observation-axis scan values back on the rows: a null row shares
-    the previous observation's value; rows before any observation keep
-    the incoming ``carry`` undecayed."""
+def _seg_cumsum(v, starts, lens):
+    """Running sum of ``v`` restarting at every run (``starts``, ``lens``
+    from ``_runs``), in the sequential order of ``np.cumsum``: runs of
+    like length (rounded up to a power of two) are summed row-wise in one
+    2-D array padded to the longest of them, so the padding at most
+    doubles the work.  Not a global cumsum minus run offsets: the
+    e^T-scaled totals of earlier blocks would swamp a block's first
+    terms."""
     import numpy as np
 
-    if not len(s):
-        return np.full(len(mloc), float(carry))
-    idx = mloc - 1
-    sr = s[np.clip(idx, 0, None)]
-    if idx[0] < 0:
-        sr = np.where(idx < 0, carry, sr)
-    return sr
+    if len(starts) <= 1:
+        return np.cumsum(v)
+    cls = np.ceil(np.log2(lens)).astype("int64")
+    out = np.empty(len(v))
+    for c in np.unique(cls):
+        st, ln = starts[cls == c], lens[cls == c]
+        cols = np.arange(ln.max())
+        idx = st[:, None] + cols
+        if ln.min() == len(cols):           # runs of one length: no padding
+            out[idx] = np.cumsum(v[idx], axis=1)
+            continue
+        inside = cols < ln[:, None]
+        idx = np.where(inside, idx, 0)
+        out[idx[inside]] = np.cumsum(np.where(inside, v[idx], 0.0),
+                                     axis=1)[inside]
+    return out
 
 
-def _scan_item_np(x, valid, spec: dict, prior_nn: int, carries: list):
-    """Per-row merged decayed sums for one standard-form binding over one
-    partition.  ``x``: float64 (nulls NaN-filled), ``valid``: null mask (NaN VALUES are
-    valid, matching ``isNotNull``).  ``carries``: incoming per-series carry
-    (same order as ``_item_series``).  Returns (m_rows, [s_rows...])."""
+def _blocks(blk, seg):
+    """Block layout of a scan axis: the runs of each block ``blk`` of each
+    segment ``seg``, and per block the index of the block one and two ids
+    earlier in the same segment (-1 where absent; older blocks are
+    dropped).  Block ids are spread three apart per segment, so none
+    carries into another."""
     import numpy as np
 
-    mloc = np.cumsum(valid.astype("int64"))
-    lam, B = spec["lam"], _block_size(spec["lam"])
-    if spec["ignore_nulls"]:
-        xs, vm = x[valid], np.ones(int(valid.sum()), dtype=bool)
-    else:
-        xs, vm = x, valid
-    coefs = _series_coefs_np(xs, vm, spec, prior_nn == 0)
+    key = blk + seg * (blk.max() + 3)
+    starts, lens = _runs(key)
+    ids = key[starts]
+    prev = []
+    for back in (1, 2):
+        at = np.minimum(np.searchsorted(ids, ids - back), len(ids) - 1)
+        prev.append(np.where(ids[at] == ids - back, at, -1))
+    return starts, lens, prev
+
+
+def _block_sums(pre, blocks):
+    """Running sums of ``pre`` within each block of ``blocks``, and the
+    totals of the previous one and two blocks (0 where absent)."""
+    import numpy as np
+
+    starts, lens, prev = blocks
+    s = _seg_cumsum(pre, starts, lens)
+    tot = np.append(s[starts + lens - 1], 0.0)     # index -1: no block
+    return s, np.repeat(tot[prev[0]], lens), np.repeat(tot[prev[1]], lens)
+
+
+def _block_scan_np(coefs, powers, lam: float, B: int, seg, carries):
+    """Block-segmented prescaled scan of each series in ``coefs`` (decay
+    power in ``powers``) restarting at every segment of ``seg`` (the decay
+    index j is the position in the segment), with the series' incoming
+    carry merged into segment 0 at decay ``lam^(p*(j+1))``."""
+    import numpy as np
+
+    if not len(seg):
+        return coefs
+    j = _seg_count(np.ones(len(seg), dtype="int64"), seg) - 1
+    blk = j // B
+    r = (j - blk * B).astype("float64")
+    blocks = _blocks(blk, seg)
+    decay = {p: (lam ** (-(r * p)), lam ** (r * p), lam ** ((r + 1) * p))
+             for p in set(powers)}
     out = []
-    for (sfx, p), c, carry in zip(_item_series(spec), coefs, carries):
-        s = _block_scan_np(c, p, lam, B, carry)
-        if spec["ignore_nulls"]:
-            # the non-null-axis scan back on the rows (same j, same block
-            # at a null row) — exactly the JVM per-row semantics
-            s = _rows_np(s, mloc, carry)
+    for c, p, carry in zip(coefs, powers, carries):
+        pre, here, nxt = decay[p]
+        lc, t1, t2 = _block_sums(c * pre, blocks)
+        s = here * lc + nxt * (
+            lam ** ((B - 1) * p) * (t1 + lam ** (B * p) * t2))
+        if carry:
+            s = s + np.where(seg == 0, lam ** ((j + 1.0) * p) * carry, 0.0)
         out.append(s)
-    return mloc + int(prior_nn), out
+    return out
+
+
+def _rows_np(s, valid, mloc, seg, carry: float):
+    """Observation-axis scan values back on the rows: a null row shares
+    the previous observation's value; rows before their segment's first
+    observation hold the incoming ``carry`` undecayed in segment 0, and 0
+    elsewhere."""
+    import numpy as np
+
+    sr = s[np.maximum(np.cumsum(valid) - 1, 0)] if len(s) else 0.0
+    return np.where(mloc > 0, sr, np.where(seg == 0, float(carry), 0.0))
 
 
 def _reset_decrement_np(k, lam: float, alpha: float):
@@ -450,7 +305,7 @@ def _reset_inputs_np(xo, ap, spec: dict) -> list:
 
 
 def _reset_obs_np(x, valid, spec: dict, gap: int):
-    """Observation axis of one partition: positions, values and each
+    """Observation axis of one run of rows: positions, values and each
     step's (d, a'); the first step spans ``gap`` rows before row 0."""
     import numpy as np
 
@@ -460,51 +315,73 @@ def _reset_obs_np(x, valid, spec: dict, gap: int):
     return pos, x[pos], d, ap
 
 
-def _reset_scan_np(d, b, carry: float):
-    """``v -> e^-d * v + b`` over the observation axis from ``carry``: the
-    numpy form of ``_varying_scan`` — blocks cut at floor(L/T) of the
-    accumulated decay L, a running sum within each block, and the
-    previous two block ids' totals carried at e^-T / e^-2T (older blocks
-    dropped)."""
+def _reset_scan_np(d, b, seg, carry: float):
+    """``v -> e^-d * v + b`` over the observation axis, restarting at
+    every segment of ``seg``, with segment 0 continuing from ``carry``:
+    blocks cut at floor(L/T) of each segment's accumulated decay L, a
+    running sum within each block, and the previous two blocks' totals
+    carried at e^-T / e^-2T (older blocks dropped)."""
     import numpy as np
-    import pandas as pd
 
     if not len(d):
         return d
-    L = np.cumsum(d)
+    L = _seg_cumsum(d, *_runs(seg))
     blk = np.floor(L / _LOG_BLOCK)
     off = L - blk * _LOG_BLOCK
-    pre = b * np.exp(off)
-    # a segmented sum, not a global cumsum minus block offsets: the
-    # e^T-scaled totals of earlier blocks would swamp a block's first terms
-    s = pd.Series(pre).groupby(blk, sort=False).cumsum(skipna=False) \
-        .to_numpy()
-    ids, starts = np.unique(blk, return_index=True)
-    tot = np.add.reduceat(pre, starts)
-    for back in (1, 2):
-        at = np.minimum(np.searchsorted(ids, blk - back), len(ids) - 1)
-        s = s + math.exp(-back * _LOG_BLOCK) * np.where(
-            ids[at] == blk - back, tot[at], 0.0)
-    return np.exp(-off) * s + np.exp(-L) * carry
+    s, t1, t2 = _block_sums(b * np.exp(off), _blocks(blk, seg))
+    s = np.exp(-off) * (s + math.exp(-_LOG_BLOCK) * t1
+                        + math.exp(-2 * _LOG_BLOCK) * t2)
+    if carry:
+        s = s + np.where(seg == 0, np.exp(-L) * carry, 0.0)
+    return s
 
 
-def _scan_reset_np(x, valid, spec: dict, prior_nn: int, carries: list,
-                   gap: int):
-    """Per-row reset-form sums for one binding over one partition, from
-    the incoming state ``carries`` whose last observation lies ``gap``
-    rows before row 0 (with ``prior_nn == 0`` there is none, and the
-    first observation enters with weight 1).  Returns like
-    ``_scan_item_np``."""
+def _scan_np(x, valid, spec: dict, prior_nn: int, carries: list, gap: int,
+             starts):
+    """Per-row decayed sums for one binding over a batch of rows cut into
+    segments at ``starts`` (ascending, first 0).  ``x``: float64 (nulls
+    NaN-filled), ``valid``: null mask (NaN VALUES are valid, matching
+    ``isNotNull``).  Segment 0 continues a state of ``prior_nn``
+    observations with per-series ``carries`` (``_item_series`` order),
+    whose last observation (reset form) lies ``gap`` rows before row 0;
+    every later segment starts empty, and a segment's first observation
+    with no state before it takes weight 1.  Returns (m_rows, [s_rows])."""
     import numpy as np
 
-    mloc = np.cumsum(valid.astype("int64"))
-    _pos, xo, d, ap = _reset_obs_np(x, valid, spec, gap)
-    if prior_nn == 0:
-        d[:1], ap[:1] = 0.0, 1.0
-    out = [_rows_np(_reset_scan_np(d * p, b, carry), mloc, carry)
-           for (_sfx, p), b, carry in zip(
-               _item_series(spec), _reset_inputs_np(xo, ap, spec), carries)]
-    return mloc + int(prior_nn), out
+    mark = np.zeros(len(x), dtype="int64")
+    mark[starts[1:]] = 1
+    seg = np.cumsum(mark)
+    mloc = _seg_count(valid.astype("int64"), seg)
+    first = valid & (mloc == 1) & ((seg > 0) | (prior_nn == 0))
+    series = _item_series(spec)
+    if _is_reset_form(spec):
+        pos, xo, d, ap = _reset_obs_np(x, valid, spec, gap)
+        d[first[pos]], ap[first[pos]] = 0.0, 1.0
+        out = [_rows_np(_reset_scan_np(d * p, b, seg[pos], carry), valid,
+                        mloc, seg, carry)
+               for (_sfx, p), b, carry in zip(
+                   series, _reset_inputs_np(xo, ap, spec), carries)]
+    else:
+        ign = spec["ignore_nulls"]
+        on = valid if ign else slice(None)   # the scan (decay) axis
+        vm = valid[on]
+        if spec["adjust"]:
+            base = base_sq = vm.astype("float64")
+        else:
+            base = np.where(first[on], 1.0,
+                            np.where(vm, float(spec["alpha"]), 0.0))
+            base_sq = base * base
+        x0 = np.where(vm, x[on], 0.0)       # coalesce(xd, 0); NaN stays
+        coefs = [base, base * x0] + (
+            [base * x0 * x0, base_sq] if len(series) > 2 else [])
+        out = _block_scan_np(coefs, [p for _sfx, p in series], spec["lam"],
+                             _block_size(spec["lam"]), seg[on], carries)
+        if ign:
+            # the non-null-axis scan back on the rows (same j, same block
+            # at a null row)
+            out = [_rows_np(s, valid, mloc, seg, carry)
+                   for s, carry in zip(out, carries)]
+    return mloc + np.where(seg == 0, int(prior_nn), 0), out
 
 
 def _sorted_table(batches):
@@ -561,6 +438,7 @@ def _summary_schema(specs: list):
 def _make_summary_kernel(specs: list, xs: list, schema):
     """One ``_summary_schema`` row per partition."""
     def gen(batches):
+        import numpy as np
         import pyarrow as pa
         from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -569,6 +447,7 @@ def _make_summary_kernel(specs: list, xs: list, schema):
             return
         row = {"pid": int(tbl.column(_PID)[0].as_py()),
                "nr": tbl.num_rows}
+        one = np.zeros(1, dtype="int64")
         jglob = 0
         for i, spec in enumerate(specs):
             x, valid = _col_np(tbl, xs[i])
@@ -583,13 +462,14 @@ def _make_summary_kernel(specs: list, xs: list, schema):
                 row[f"dl{i}"] = float(d[1:].sum())
                 for k, ((_sfx, p), b) in enumerate(
                         zip(series, _reset_inputs_np(xo, ap, spec))):
-                    q = _reset_scan_np(d[1:] * p, b[1:], 0.0)
+                    q = _reset_scan_np(d[1:] * p, b[1:],
+                                       np.zeros(len(b[1:]), "int64"), 0.0)
                     row[f"q{jglob + k}"] = float(q[-1]) if len(q) else 0.0
             else:
                 zero = [0.0] * len(series)
-                _m, s_rows = _scan_item_np(x, valid, spec, 0, zero)
+                _m, s_rows = _scan_np(x, valid, spec, 0, zero, 1, one)
                 alts = s_rows if spec["adjust"] else \
-                    _scan_item_np(x, valid, spec, 1, zero)[1]
+                    _scan_np(x, valid, spec, 1, zero, 1, one)[1]
                 for k in range(len(series)):
                     row[f"q{jglob + k}"] = float(s_rows[k][-1])
                     row[f"qa{jglob + k}"] = float(alts[k][-1])
@@ -603,6 +483,7 @@ def _make_scan_kernel(specs: list, xs: list, out_names: list):
     """Full per-partition pass: appends per-binding ``__ewm_m_{i}__`` and
     merged ``__ewm_{sfx}_{i}__`` columns; emits rows ROW_IDX-sorted."""
     def gen(batches):
+        import numpy as np
         import pyarrow as pa
 
         tbl = _sorted_table(batches)
@@ -611,23 +492,18 @@ def _make_scan_kernel(specs: list, xs: list, out_names: list):
         cols = {n: tbl.column(n) for n in tbl.schema.names}
 
         def carried(name, default):
-            v = cols[name][0].as_py()
+            v = cols[name][0].as_py() if name in cols else None
             return default if v is None else v
 
         jglob = 0
         for i, spec in enumerate(specs):
-            prior = carried(f"__ewm_p{i}__", 0)
             series = _item_series(spec)
-            carries = [carried(f"__ewm_c{jglob + k}__", 0.0)
-                       for k in range(len(series))]
             x, valid = _col_np(tbl, xs[i])
-            if _is_reset_form(spec):
-                m_rows, s_rows = _scan_reset_np(
-                    x, valid, spec, prior, carries,
-                    carried(f"__ewm_g{i}__", 1))
-            else:
-                m_rows, s_rows = _scan_item_np(x, valid, spec, prior,
-                                               carries)
+            m_rows, s_rows = _scan_np(
+                x, valid, spec, carried(f"__ewm_p{i}__", 0),
+                [carried(f"__ewm_c{jglob + k}__", 0.0)
+                 for k in range(len(series))],
+                carried(f"__ewm_g{i}__", 1), np.zeros(1, dtype="int64"))
             cols[f"__ewm_m_{i}__"] = pa.array(m_rows, type=pa.int64())
             for k, (sfx, _p) in enumerate(series):
                 cols[f"__ewm_{sfx}_{i}__"] = pa.array(
@@ -637,34 +513,98 @@ def _make_scan_kernel(specs: list, xs: list, out_names: list):
     return gen
 
 
+def _key_breaks(keys, last):
+    """Per row of the key batch ``keys``: does its key differ from the
+    previous row's?  ``last`` is the previous batch's final key row (None:
+    row 0 breaks).  Nulls equal nulls and NaN equals NaN, as the sort
+    groups them."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    def np_(a):
+        return a.to_numpy(zero_copy_only=False)
+
+    brk = np.zeros(keys.num_rows, dtype=bool)
+    for i in range(keys.num_columns):
+        col = keys.column(i)
+        if last is not None:
+            col = pa.concat_arrays([last.column(i), col])
+        a, b = col.slice(1), col.slice(0, len(col) - 1)
+        try:
+            ne = np_(pc.fill_null(pc.not_equal(a, b), False))
+        except pa.ArrowNotImplementedError:      # nested key types
+            ne = np.array([u != v for u, v in
+                           zip(a.to_pylist(), b.to_pylist())], dtype=bool)
+        d = ne | (np_(pc.is_null(a)) != np_(pc.is_null(b)))
+        if pa.types.is_floating(col.type):
+            d &= ~np_(pc.fill_null(
+                pc.and_(pc.is_nan(a), pc.is_nan(b)), False))
+        brk[keys.num_rows - len(d):] |= d
+    if last is None:
+        brk[0] = True
+    return brk
+
+
+def _make_grouped_kernel(spec: dict, kn: list, out_names: list):
+    """Streaming pass over one partition sorted by (keys, ROW_IDX): each
+    Arrow batch is one scan call whose segments start at its key changes;
+    the count, sums and gap at a batch's last row carry into the next
+    batch when its first row continues the same key."""
+    def gen(batches):
+        import numpy as np
+        import pyarrow as pa
+
+        last, state = None, None
+        for rb in batches:
+            n = rb.num_rows
+            if n == 0:
+                continue
+            keys = rb.select(kn)
+            brk = _key_breaks(keys, last)
+            if brk[0]:
+                state = (0, [0.0] * len(_item_series(spec)), 1)
+            starts = np.flatnonzero(np.r_[True, brk[1:]])
+            x, valid = _col_np(rb, "__ewm_x__")
+            m_rows, s_rows = _scan_np(x, valid, spec, *state, starts)
+            obs = np.flatnonzero(valid[starts[-1]:])
+            state = (int(m_rows[-1]), [float(s[-1]) for s in s_rows],
+                     n - starts[-1] - obs[-1] if len(obs) else state[2] + n)
+            last = keys.slice(n - 1)
+            yield pa.RecordBatch.from_arrays(
+                rb.columns + [pa.array(m_rows, type=pa.int64())]
+                + [pa.array(s, type=pa.float64()) for s in s_rows],
+                names=out_names)
+    return gen
+
+
 def attach_ewm_grouped(sdf: DataFrame, value_fn, key_fns, spec: dict,
                        out_name: str) -> DataFrame:
-    """ewm under ``over(keys)``: block-segmented scan within each group.
+    """ewm under ``over(keys)``: ``repartition(keys)``, then
+    ``sortWithinPartitions(keys, ROW_IDX)``, then one ``mapInArrow`` that
+    streams each partition and restarts the numpy scan at every key
+    change (null keys form one group; see ``_make_grouped_kernel``).  A
+    key never spans partitions, so there is no summary pass or fold, and
+    memory per task is one Arrow batch.
 
-    Round-7: order left dirty (the keys/blk exchanges scatter it) — hook
+    Round-7: order left dirty (the keys exchange scatters it) — hook
     binds mark the frame scrambled and the deferred restore sorts at
     polars-semantics exports, same contract as attach_grouped_rank_zip.
     """
+    from pyspark.sql import types as T
+
     assert ROW_IDX in sdf.columns
     keys = key_fns(sdf)
     kn = [f"__ewm_k{i}__" for i in range(len(keys))]
     base = sdf.select("*", *[k.alias(n) for k, n in zip(keys, kn)],
-                      value_fn(sdf).alias("__ewm_x__"))
-    need_var = spec["kind"] in ("var", "std")
-    kcols = [F.col(n) for n in kn]
-    if _is_reset_form(spec):
-        prepped, series = _varying_inputs(
-            base, "__ewm_x__", kcols, spec["lam"], spec["alpha"], need_var)
-        scanned = _varying_scan(prepped, series, "__ewm_d__", kcols)
-        comb = _combine_varying(spec["kind"], spec["bias"],
-                                spec["min_periods"])
-    else:
-        scanned = _decayed_sums(
-            base, "__ewm_x__", kcols, spec["lam"],
-            spec["alpha"], spec["adjust"], spec["ignore_nulls"], need_var)
-        comb = _combine(spec["kind"], spec["bias"], spec["min_periods"])
-    return scanned.withColumn(out_name, comb) \
-        .drop(*kn, "__ewm_x__", *_EWM_DROPS)
+                      value_fn(sdf).cast("double").alias("__ewm_x__"))
+    scan = _scan_fields(spec, "")
+    out_schema = T.StructType(list(base.schema.fields) + scan)
+    out = (base.repartition(*kn).sortWithinPartitions(*kn, ROW_IDX)
+           .mapInArrow(_make_grouped_kernel(spec, kn, out_schema.names),
+                       out_schema))
+    return out.withColumn(out_name, _combine(spec, "")).drop(
+        *kn, "__ewm_x__", *[f.name for f in scan])
 
 
 def attach_ewm_global_multi(sdf: DataFrame, items: list) -> DataFrame:
@@ -710,16 +650,13 @@ def attach_ewm_global_multi(sdf: DataFrame, items: list) -> DataFrame:
                            for c in carry_cols]))
     joined = base.join(F.broadcast(carry_tab), _PID, "left")
 
-    scan_cols = [f"__ewm_{sfx}_{i}__" for i, spec in enumerate(specs)
-                 for sfx in ["m"] + [sfx for sfx, _p in _item_series(spec)]]
-    out_schema = T.StructType(list(joined.schema.fields) + [
-        T.StructField(c, T.LongType() if c.startswith("__ewm_m_")
-                      else T.DoubleType()) for c in scan_cols])
+    scan = [f for i, spec in enumerate(specs)
+            for f in _scan_fields(spec, f"_{i}")]
+    out_schema = T.StructType(list(joined.schema.fields) + scan)
     out_frame = joined.mapInArrow(
         _make_scan_kernel(specs, xs, out_schema.names), out_schema)
     for i, (_vf, spec, out_name) in enumerate(items):
-        comb = (_combine_varying if _is_reset_form(spec) else _combine)(
-            spec["kind"], spec["bias"], spec["min_periods"], f"_{i}")
-        out_frame = out_frame.withColumn(out_name, comb)
+        out_frame = out_frame.withColumn(out_name, _combine(spec, f"_{i}"))
     return out_frame.drop(
-        _PID, *xs, *[f"__ewm_{c}__" for c in carry_cols], *scan_cols)
+        _PID, *xs, *[f"__ewm_{c}__" for c in carry_cols],
+        *[f.name for f in scan])

@@ -500,11 +500,11 @@ def test_ngram_dup_coverage_copied_doc(spark):
     assert rows[1]["n_grams"] == 30 - 13 + 1
 
 
-def test_ngram_dup_coverage_salted_matches_plain(spark, monkeypatch):
-    """The salted two-level gram aggregate (forced with
-    SPARK_GRAFT_GRAM_SALT=16) must return bit-equal coverage to the plain
-    single-key shape (=0) — the salt derives from the doc id, so
-    bucket-local distinct doc counts add exactly."""
+def test_ngram_dup_coverage_salted_matches_python(spark):
+    """The salted two-level gram aggregate (the only shape) returns the
+    exact coverage of a pure-Python count on a hot-boilerplate corpus: the
+    salt derives from the doc id, so bucket-local distinct doc counts
+    add, and a gram shared by most docs is still counted once per doc."""
     boiler = " ".join(f"b{i}" for i in range(15))
     rows = []
     for i in range(24):
@@ -515,38 +515,22 @@ def test_ngram_dup_coverage_salted_matches_plain(spark, monkeypatch):
     rows += [(100, rows[5][1]), (101, "too short")]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
 
-    salted_calls = []
-    orig = dedup._salted_doc_counts
-    monkeypatch.setattr(
-        dedup, "_salted_doc_counts",
-        lambda *a, **k: salted_calls.append(a[4]) or orig(*a, **k))
+    n = 13
+    grams = {d: [" ".join(t.split(" ")[p:p + n])
+                 for p in range(len(t.split(" ")) - n + 1)]
+             for d, t in rows}
+    docs_of = {}
+    for d, gs in grams.items():
+        for gm in gs:
+            docs_of.setdefault(gm, set()).add(d)
+    expected = sorted(
+        (d, len(gs), sum(len(docs_of[gm]) > 1 for gm in gs),
+         round(sum(len(docs_of[gm]) > 1 for gm in gs) / len(gs), 4))
+        for d, gs in grams.items() if gs)
 
-    def run(salt):
-        monkeypatch.setenv("SPARK_GRAFT_GRAM_SALT", salt)
-        return sorted(tuple(r) for r in
-                      dedup.ngram_dup_coverage(df, n=13).collect())
-
-    salted = run("16")
-    assert salted_calls == [16], "salted branch not taken"
-    plain = run("0")
-    assert salted_calls == [16], "plain branch took the salted path"
-    assert salted == plain
-    assert any(r[3] > 0 for r in plain) and any(r[3] == 0 for r in plain)
-
-
-def test_hot_gram_salt_rejects_malformed_env(spark, monkeypatch):
-    """A non-integer SPARK_GRAFT_GRAM_SALT fails with a message naming
-    the variable instead of a bare int() parse error."""
-    import pytest
-
-    grams = spark.createDataFrame([(1,)], ["gh"])
-    monkeypatch.setenv("SPARK_GRAFT_GRAM_SALT", "true")
-    with pytest.raises(ValueError, match="SPARK_GRAFT_GRAM_SALT"):
-        dedup._hot_gram_salt(grams, "gh")
-    monkeypatch.setenv("SPARK_GRAFT_GRAM_SALT", "1")
-    assert dedup._hot_gram_salt(grams, "gh") == 0
-    monkeypatch.setenv("SPARK_GRAFT_GRAM_SALT", "8")
-    assert dedup._hot_gram_salt(grams, "gh") == 8
+    got = sorted(tuple(r) for r in dedup.ngram_dup_coverage(df, n=n).collect())
+    assert got == expected
+    assert any(r[3] > 0 for r in got) and any(r[3] == 0 for r in got)
 
 
 def test_connected_components_unpersists_on_error(spark):

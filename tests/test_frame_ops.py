@@ -2667,6 +2667,117 @@ def test_ewm_reset_attach_launches_no_job(spark):
         assert abs(r["es"] - np.sqrt(v)) < 1e-12
 
 
+def test_ewm_grouped_kernel_matches_pandas(spark):
+    """ewm under over(keys) is one mapInArrow over the frame hash-
+    partitioned on the keys and sorted by (keys, ROW_IDX) within
+    partitions.  Every adjust x ignore_nulls form of mean/var/std matches
+    pandas per group, on 3 input partitions whose ROW_IDX order is
+    shuffled, with 7-row Arrow batches (so a key spans many batches), a
+    null key and a two-column key; an array key (compared element-wise
+    in Python) groups like the two columns it packs, and a float key
+    groups NaN with NaN and -0.0 with 0.0.  The plan has no
+    Window, one Exchange and one MapInArrow, and construction starts no
+    Spark job."""
+    import itertools
+
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from polars_ruby_spark.operators.ewm import attach_ewm_grouped
+    from polars_ruby_spark.session import ROW_IDX
+
+    rng = np.random.RandomState(11)
+    n = 300
+    g = rng.choice(["a", "b", "c", None], n, p=[0.6, 0.2, 0.1, 0.1])
+    h = [None if rng.rand() < 0.2 else int(rng.randint(2)) for _ in range(n)]
+    x = [None if rng.rand() < 0.25 else round(float(rng.randn()), 3)
+         for _ in range(n)]
+    rows = list(zip(range(n), g.tolist(), h, x))
+    rng.shuffle(rows)
+    sdf = spark.createDataFrame(spark.sparkContext.parallelize(rows, 3),
+                                f"{ROW_IDX} long, g string, h int, x double")
+    pdf = pd.DataFrame(sorted(rows), columns=[ROW_IDX, "g", "h", "x"])
+    forms = list(itertools.product(["mean", "var", "std"], [True, False],
+                                   [True, False]))
+
+    def spec(kind, adjust, ign):
+        return {"kind": kind, "alpha": 0.3, "lam": 0.7, "adjust": adjust,
+                "ignore_nulls": ign, "bias": False, "min_periods": 1}
+
+    def attach(frame, keys, form, name):
+        return attach_ewm_grouped(
+            frame, lambda df: F.col("x"),
+            lambda df: [F.col(k) for k in keys] if isinstance(keys, list)
+            else [keys], spec(*form), name)
+
+    sc = spark.sparkContext
+    sc.setJobGroup("ewm-grouped-attach", "construct")
+    try:
+        one = attach(sdf, ["g"], forms[0], "e")
+    finally:
+        sc._jsc.clearJobGroup()
+    assert list(sc.statusTracker().getJobIdsForGroup(
+        "ewm-grouped-attach")) == []
+    plan = one._jdf.queryExecution().executedPlan().toString()
+    assert "Window" not in plan
+    assert plan.count("Exchange") == 1 and plan.count("MapInArrow") == 1
+
+    prev = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
+    try:
+        for keys in (["g"], ["g", "h"]):
+            out = sdf
+            for i, form in enumerate(forms):
+                out = attach(out, keys, form, f"e{i}")
+            if len(keys) == 2:
+                packed = F.array(F.col("g"), F.col("h").cast("string"))
+                out = attach(out, packed, forms[-1], "arr")
+            got = pd.DataFrame(out.collect(), columns=out.columns) \
+                .sort_values(ROW_IDX).reset_index(drop=True)
+            if len(keys) == 2:
+                np.testing.assert_allclose(
+                    got["arr"].astype(float), got[f"e{len(forms) - 1}"]
+                    .astype(float), rtol=0, atol=0)
+            grp = pdf.groupby(keys, dropna=False, sort=False)["x"]
+            seen = grp.transform(lambda s: s.notna().cumsum())
+            for i, (kind, adjust, ign) in enumerate(forms):
+                ew = grp.transform(lambda s: getattr(s.ewm(
+                    alpha=0.3, adjust=adjust, ignore_na=ign), kind)())
+                # a lone observation's variance is 0, as in polars
+                exp = ew.where(ew.notna() | (seen == 0), 0.0)
+                np.testing.assert_allclose(
+                    got[f"e{i}"].astype(float), exp, rtol=1e-12,
+                    atol=1e-12, err_msg=f"{keys} {kind} {adjust} {ign}")
+        # float keys: NaN is one group, -0.0 joins 0.0, null is its own
+        nan = float("nan")
+        kv = [0.0, -0.0, nan, 1.0, nan, None, 0.0, None, -0.0, 1.0]
+        fl = spark.createDataFrame(
+            [(i, k, float(i)) for i, k in enumerate(kv)],
+            f"{ROW_IDX} long, k double, x double")
+        got = attach(fl, ["k"], forms[0], "e").orderBy(ROW_IDX).collect()
+        lab = ["null" if k is None else "nan" if k != k else str(abs(k))
+               for k in kv]
+        exp = pd.Series(np.arange(10.0)).groupby(lab).transform(
+            lambda s: s.ewm(alpha=0.3).mean())
+        np.testing.assert_allclose([r["e"] for r in got], exp, rtol=1e-12)
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
+
+
+def test_ewm_reset_form_keeps_inf(spark):
+    """An infinite observation keeps the reset form's running mean
+    infinite, ungrouped and under over(), as pandas does: the scan's
+    block sums are plain sequential sums (a compensated running sum
+    turns inf into NaN at the next step)."""
+    inf = float("inf")
+    df = pl.DataFrame({"g": ["a"] * 4, "x": [1.0, inf, 2.0, 3.0]})
+    e = pl.col("x").ewm_mean(alpha=0.5, adjust=False, ignore_nulls=False)
+    rows = df.with_columns(e.alias("u"), e.over("g").alias("o")).to_a()
+    assert [r["u"] for r in rows] == [1.0, inf, inf, inf]
+    assert [r["o"] for r in rows] == [1.0, inf, inf, inf]
+
+
 def test_spearman_over_defers_order_restore(spark):
     """round-11: the spearman .over(keys) hook must NOT eagerly range-sort
     back to row order mid-plan — sibling binds in the same with_columns

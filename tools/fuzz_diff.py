@@ -1052,41 +1052,50 @@ def _run_seed_inner(pl, spark, duck, seed: int) -> list[str]:
 
     # 30. ewm_mean (round-7): TWO ungrouped bindings (exercises the
     # batched multi-attach + the arrow carry fold) plus one grouped
-    # binding, vs an O(n²) weighted self-join oracle (adjust=True,
-    # ignore_nulls=True: weight = lam^(nonnull-count distance); a null
-    # row emits the previous mean — its pair set is unchanged)
+    # binding over a many-key grouping with a null key (b: ~20 keys, or
+    # g x h), vs an O(n²) weighted self-join oracle (ignore_nulls=True:
+    # weight = lam^(nonnull-count distance), times alpha except at the
+    # group's first non-null when adjust=False; a null row emits the
+    # previous mean — its pair set is unchanged)
     lam30 = rng.choice([0.5, 0.8, 0.9])
     al30 = round(1 - lam30, 6)
     kw30 = dict(alpha=al30, adjust=True, ignore_nulls=True, min_periods=1)
+    adj30 = rng.choice([True, False])
+    keys30 = rng.choice([["b"], ["g", "h"]])
     q30 = (df.lazy().sort("idx")
            .with_columns(
                pl.col("x").ewm_mean(**kw30).alias("e1"),
                pl.col("y").ewm_mean(**kw30).alias("e2"),
-               pl.col("x").ewm_mean(**kw30).over("g").alias("eg"))
+               pl.col("x").ewm_mean(**dict(kw30, adjust=adj30))
+               .over(keys30).alias("eg"))
            .select("idx", pl.col("e1").round(6).alias("e1"),
                    pl.col("e2").round(6).alias("e2"),
                    pl.col("eg").round(6).alias("eg")))
     L = repr(1.0 - al30)
-    sql = (f"WITH s AS (SELECT idx, g, x, y, "
+    gw = "1.0" if adj30 else f"CASE WHEN b.cgx = 1 THEN 1.0 ELSE {al30} END"
+    gon = " AND ".join(f"b.{k} IS NOT DISTINCT FROM a.{k}" for k in keys30)
+    sql = (f"WITH s AS (SELECT idx, {', '.join(keys30)}, x, y, "
            "count(x) OVER (ORDER BY idx) AS cx, "
            "count(y) OVER (ORDER BY idx) AS cy, "
-           "count(x) OVER (PARTITION BY g ORDER BY idx) AS cgx FROM t), "
+           f"count(x) OVER (PARTITION BY {', '.join(keys30)} ORDER BY idx) "
+           "AS cgx FROM t), "
            f"e1 AS (SELECT a.idx, sum(pow({L}, a.cx - b.cx) * b.x) "
            f"/ sum(pow({L}, a.cx - b.cx)) AS v FROM s a LEFT JOIN s b "
            "ON b.idx <= a.idx AND b.x IS NOT NULL GROUP BY a.idx, a.cx), "
            f"e2 AS (SELECT a.idx, sum(pow({L}, a.cy - b.cy) * b.y) "
            f"/ sum(pow({L}, a.cy - b.cy)) AS v FROM s a LEFT JOIN s b "
            "ON b.idx <= a.idx AND b.y IS NOT NULL GROUP BY a.idx, a.cy), "
-           f"eg AS (SELECT a.idx, sum(pow({L}, a.cgx - b.cgx) * b.x) "
-           f"/ sum(pow({L}, a.cgx - b.cgx)) AS v FROM s a LEFT JOIN s b "
-           "ON b.g = a.g AND b.idx <= a.idx AND b.x IS NOT NULL "
+           f"eg AS (SELECT a.idx, sum(pow({L}, a.cgx - b.cgx) * {gw} * b.x) "
+           f"/ sum(pow({L}, a.cgx - b.cgx) * {gw}) AS v FROM s a "
+           f"LEFT JOIN s b ON {gon} AND b.idx <= a.idx AND b.x IS NOT NULL "
            "GROUP BY a.idx, a.cgx) "
            "SELECT s.idx, round(e1.v, 6) AS e1, round(e2.v, 6) AS e2, "
            "round(eg.v, 6) AS eg FROM s "
            "LEFT JOIN e1 ON e1.idx = s.idx "
            "LEFT JOIN e2 ON e2.idx = s.idx "
            "LEFT JOIN eg ON eg.idx = s.idx")
-    compare(f"ewm_mean_{lam30}", q30.collect().to_spark(), sql)
+    compare(f"ewm_mean_{lam30}_adjust{adj30}_over{keys30}",
+            q30.collect().to_spark(), sql)
 
     # 31. Avro OCF round-trip (round-8, VERDICT r7 #7): random frames
     # through write_avro → read_avro must reproduce the in-memory values
