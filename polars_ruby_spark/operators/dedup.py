@@ -408,35 +408,6 @@ def decontaminate_flags(train: DataFrame, bench: DataFrame,
                     F.coalesce("__hit__", F.lit(False)).alias("contaminated")))
 
 
-#: salts of the shared gram exchange: a gram's instances spread over up to
-#: this many reducers, split by their doc id
-_GRAM_SALTS = 16
-
-
-def _salted_gram_counts(flat: DataFrame, gh_col: str, id_col: str,
-                        count_col, out_name: str,
-                        distinct_first: bool = False):
-    """The one gram-exchange shape of the n-gram flag-join family: returns
-    ``flat`` behind ONE exchange keyed on (gram, salt) — the salt is
-    ``pmod(xxhash64(doc id), 16)``, so a hot gram (boilerplate shared by
-    much of the corpus) reduces on up to 16 tasks — and the per-gram
-    ``count_col`` as a two-level aggregate over it: the partial level
-    groups on (gh, salt), satisfied by the shared exchange, and a second
-    exchange (one row per (gram, salt) bucket) sums per gram.  Exact
-    because the salt derives from the doc id: each distinct doc lands in
-    exactly one bucket, so bucket-local distinct counts add.  No job runs
-    at construction to pick a shape.  The price is on uniform corpora,
-    where grams are mostly singletons: there are about as many buckets as
-    grams, so the second level is a full-size aggregate."""
-    grams = (flat.withColumn("__gsalt", F.pmod(F.xxhash64(F.col(id_col)),
-                                               F.lit(_GRAM_SALTS)))
-             .repartition(gh_col, "__gsalt"))
-    g = grams.distinct() if distinct_first else grams
-    part = g.groupBy(F.col(gh_col), F.col("__gsalt")).agg(
-        count_col.alias("__d1__"))
-    return grams, part.groupBy(gh_col).agg(F.sum("__d1__").alias(out_name))
-
-
 def ngram_dup_coverage(sdf: DataFrame, n: int = 13, text_col: str = "text",
                        id_col: str = "doc_id") -> DataFrame:
     """Exact-substring duplication coverage: for each document with ≥ n
@@ -462,19 +433,21 @@ def ngram_dup_coverage(sdf: DataFrame, n: int = 13, text_col: str = "text",
     position side never re-shuffles on the gram hash).  Per-doc coverage
     is then a map-side-combined groupBy on the id.
 
-    The gram table is pinned behind ONE explicit exchange that both
-    consumers (the doc-count branch and the flag-join instance side)
+    The gram table is pinned behind ONE explicit gram-hash exchange that
+    both consumers (the doc-count branch and the flag-join instance side)
     reuse (round-11; guide §2.4/§7.2): without it the broadcast join left
     no exchange to share and the explode + md5 subtree EXECUTED TWICE —
     the per-position gram build is the dominant stage (measured 3.8 s of
     the query's 12.7 s at sf1.0, ×2).  AQE stage reuse collapses the two
-    reads into one computation.  The exchange keys on (gram, salt of the
-    doc id) (``_salted_gram_counts``), so a boilerplate gram shared by
-    much of the corpus reduces on up to 16 tasks, and the doc count is
-    the exact two-level aggregate: a count-distinct per (gram, salt)
-    above the exchange, then a sum per gram over one row per bucket.
-    That one shape serves every corpus; no job runs at construction to
-    pick it.
+    reads into one computation; the count-distinct's partial aggregate
+    sits above the exchange, where partition-local combine does the same
+    reduction the pre-shuffle combine did (13-gram hashes are singleton-
+    dominated either way).  One shape serves every corpus and no job runs
+    at construction.  A gram shared by most documents reduces on one
+    task; a (gram, salt-of-doc-id) split would spread it, but its second
+    aggregate has one row per distinct gram, and on the uniform sf0.1
+    corpus it cost more than it saved (q128's shape, local[4]: 1.37 s
+    → 1.77 s).
     """
     toks = _tokens(F.col(text_col))
     base = (sdf.select(F.col(id_col), toks.alias("__toks"))
@@ -488,10 +461,9 @@ def ngram_dup_coverage(sdf: DataFrame, n: int = 13, text_col: str = "text",
                     F.xxhash64(F.array_join(
                         F.slice(F.col("__toks"), F.col("__pos"), F.lit(n)), " "))
                      .alias("__gh")))
-    # skew-hardened split (round-12, guide §2.5): the shared exchange keys
-    # on (gram, salt-of-doc-id) and the doc count is a two-level aggregate
-    grams, docs = _salted_gram_counts(
-        flat, "__gh", id_col, F.count_distinct(F.col(id_col)), "__docs")
+    grams = flat.repartition("__gh")
+    docs = grams.groupBy("__gh").agg(
+        F.count_distinct(F.col(id_col)).alias("__docs"))
     shared = (docs.where(F.col("__docs") > 1)
               .select(F.col("__gh").alias("__gh2"), F.lit(1).alias("__dup")))
     # eqNullSafe, deliberately: a plain equi-join INFERS isnotnull(__gh) on

@@ -513,11 +513,26 @@ def _make_scan_kernel(specs: list, xs: list, out_names: list):
     return gen
 
 
+_NAN = object()
+
+
+def _nan_free(v):
+    """A nested key value with every float NaN swapped for one sentinel,
+    so Python ``!=`` groups NaN with NaN as the sort does."""
+    if isinstance(v, float) and v != v:
+        return _NAN
+    if isinstance(v, (list, tuple)):
+        return [_nan_free(u) for u in v]
+    if isinstance(v, dict):
+        return {k: _nan_free(u) for k, u in v.items()}
+    return v
+
+
 def _key_breaks(keys, last):
     """Per row of the key batch ``keys``: does its key differ from the
     previous row's?  ``last`` is the previous batch's final key row (None:
-    row 0 breaks).  Nulls equal nulls and NaN equals NaN, as the sort
-    groups them."""
+    row 0 breaks).  Nulls equal nulls and NaN equals NaN, also inside
+    nested keys, as the sort groups them."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -534,7 +549,7 @@ def _key_breaks(keys, last):
         try:
             ne = np_(pc.fill_null(pc.not_equal(a, b), False))
         except pa.ArrowNotImplementedError:      # nested key types
-            ne = np.array([u != v for u, v in
+            ne = np.array([_nan_free(u) != _nan_free(v) for u, v in
                            zip(a.to_pylist(), b.to_pylist())], dtype=bool)
         d = ne | (np_(pc.is_null(a)) != np_(pc.is_null(b)))
         if pa.types.is_floating(col.type):

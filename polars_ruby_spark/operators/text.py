@@ -412,14 +412,13 @@ def dup_ngram_fraction(sdf: DataFrame, n: int = 3, text_col: str = "text",
     *instances* that are duplicated.
 
     Scale shape: n-grams built JVM-side (``transform`` over an index
-    sequence — no Python), exploded once into one shared exchange keyed on
-    (gram, salt of the doc id) (``dedup._salted_gram_counts``); the
-    docs-per-ngram table comes from a distinct and the two-level salted
-    count over it and is FILTERED to
-    ``n_docs >= min_docs`` before the flag join — natural-text distinct
-    grams are singleton-dominated (Zipf), so the surviving duplicated set
-    is a small fraction and AQE broadcasts it at runtime (the instance
-    side never re-shuffles on the gram key).  The join key is ``xxhash64(ngram)`` (round-11: the
+    sequence — no Python), exploded once into one gram exchange; the
+    docs-per-ngram table comes from one distinct + hash agg over it and is
+    FILTERED to ``n_docs >= min_docs`` before the flag join — natural-text
+    distinct grams are singleton-dominated (Zipf), so the surviving
+    duplicated set is a small fraction and AQE broadcasts it at runtime
+    (the instance side never re-shuffles on the gram key).  No job runs at
+    construction.  The join key is ``xxhash64(ngram)`` (round-11: the
     long-documented 100 TB knob is now the default — 8-byte shuffle rows
     instead of full n-gram strings; 2^-64 collision odds merge two grams,
     shifting a count by one; oracle parity verified empirically at
@@ -428,7 +427,7 @@ def dup_ngram_fraction(sdf: DataFrame, n: int = 3, text_col: str = "text",
     short-doc contract (n_ngrams=0 rows survive) is untouched —
     ``xxhash64(NULL)`` would otherwise fold nulls into the seed value.
     """
-    from ..operators.dedup import _salted_gram_counts, shingles
+    from ..operators.dedup import shingles
 
     # shingles() IS the n-gram constructor, with the transform-over-
     # singleton binding that evaluates split() once per row — building the
@@ -453,14 +452,11 @@ def dup_ngram_fraction(sdf: DataFrame, n: int = 3, text_col: str = "text",
             .select(F.col("id"),
                     F.when(F.col("__gs__").isNotNull(),
                            F.xxhash64(F.col("__gs__"))).alias("gram")))
-    # skew-hardened split (round-12, guide §2.5): see ngram_dup_coverage —
-    # the shared exchange keys on (gram, salt-of-doc-id) and the doc count
-    # is a two-level aggregate (exact: the salt derives from the doc id,
-    # and the distinct runs over (id, gram, salt) — the salt adds no new
-    # (id, gram) pairs)
-    ng, counts = _salted_gram_counts(
-        flat, "gram", "id", F.count(F.when(F.col("gram").isNotNull(), 1)),
-        "n_docs", distinct_first=True)
+    ng = flat.repartition("gram")
+    counts = (ng.distinct()
+              .groupBy("gram")
+              .agg(F.count(F.when(F.col("gram").isNotNull(), 1))
+                   .alias("n_docs")))
     # n_docs > 0 keeps the null group out even for a
     # min_docs <= 0 caller; an aggregate-output predicate,
     # so it cannot push below the shared exchange
@@ -531,20 +527,17 @@ def boilerplate_signals(sdf: DataFrame, text_col: str = "text",
     boilerplate; each doc gets the fraction of its (distinct) shingles that
     are boilerplate.
 
-    Scale shape (100 TB): per-doc DISTINCT shingles explode partition-local
-    into ONE shared exchange keyed on (shingle, salt of the doc id)
-    (``dedup._salted_gram_counts``: a shingle in most documents reduces
-    on up to 16 tasks); document frequencies are the two-level salted
-    count over it (per (shingle, salt), then summed
-    over one row per bucket), FILTERED to ``df > threshold`` before the
-    join — the Zipf head is tiny relative to the gram table, so AQE
-    converts the per-doc flag join to a broadcast at runtime (the gram side never re-shuffles; an
+    Scale shape (100 TB): per-doc DISTINCT shingles explode partition-local;
+    ONE hash-agg shuffle computes document frequencies (map-side combined)
+    and is FILTERED to ``df > threshold`` before the join — the Zipf head is
+    tiny relative to the gram table, so AQE converts the per-doc flag join
+    to a broadcast at runtime (the gram side never re-shuffles; an
     adversarial corpus whose frequent set outgrows the broadcast limit
     degrades to a shuffle join against the filtered — still much smaller —
     side, never the full df table).  Both shapes avoid any driver
     materialization.
     """
-    from ..operators.dedup import _salted_gram_counts, shingles
+    from ..operators.dedup import shingles
 
     # one explicit gram exchange shared by the df branch and the flag-join
     # gram side (round-11; guide §2.4/§7.2 — the broadcast join left no
@@ -561,9 +554,8 @@ def boilerplate_signals(sdf: DataFrame, text_col: str = "text",
     flat = (sdf.select(F.col(id_col), F.explode(F.array_distinct(
         shingles(F.col(text_col), k))).alias("__gs__"))
             .select(F.col(id_col), F.xxhash64(F.col("__gs__")).alias("gram")))
-    # skew-hardened split (round-12, guide §2.5): see ngram_dup_coverage
-    g, dfreq = _salted_gram_counts(
-        flat, "gram", id_col, F.count_distinct(F.col(id_col)), "df")
+    g = flat.repartition("gram")
+    dfreq = g.groupBy("gram").agg(F.countDistinct(id_col).alias("df"))
     frequent = (dfreq.filter(F.col("df") > df_threshold)
                 .select(F.col("gram").alias("__g2__"), F.lit(1).alias("_frequent")))
     flag = F.coalesce(F.col("_frequent"), F.lit(0))

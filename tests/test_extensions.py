@@ -500,11 +500,14 @@ def test_ngram_dup_coverage_copied_doc(spark):
     assert rows[1]["n_grams"] == 30 - 13 + 1
 
 
-def test_ngram_dup_coverage_salted_matches_python(spark):
-    """The salted two-level gram aggregate (the only shape) returns the
-    exact coverage of a pure-Python count on a hot-boilerplate corpus: the
-    salt derives from the doc id, so bucket-local distinct doc counts
-    add, and a gram shared by most docs is still counted once per doc."""
+def test_ngram_dup_coverage_hot_gram_matches_python(spark):
+    """The one gram-exchange shape returns the exact coverage of a
+    pure-Python count on a hot-boilerplate corpus (a gram shared by most
+    docs is counted once per doc), and none of the three gram operators
+    starts a Spark job at construction."""
+    from polars_ruby_spark.operators.text import (boilerplate_signals,
+                                                  dup_ngram_fraction)
+
     boiler = " ".join(f"b{i}" for i in range(15))
     rows = []
     for i in range(24):
@@ -514,6 +517,15 @@ def test_ngram_dup_coverage_salted_matches_python(spark):
         rows.append((i, f"{boiler} {own}" if i % 3 else own))
     rows += [(100, rows[5][1]), (101, "too short")]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
+    sc = spark.sparkContext
+    sc.setJobGroup("gram-construct", "construct")
+    try:
+        for op in (dedup.ngram_dup_coverage, dup_ngram_fraction,
+                   boilerplate_signals):
+            op(df)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert list(sc.statusTracker().getJobIdsForGroup("gram-construct")) == []
 
     n = 13
     grams = {d: [" ".join(t.split(" ")[p:p + n])

@@ -2674,10 +2674,10 @@ def test_ewm_grouped_kernel_matches_pandas(spark):
     pandas per group, on 3 input partitions whose ROW_IDX order is
     shuffled, with 7-row Arrow batches (so a key spans many batches), a
     null key and a two-column key; an array key (compared element-wise
-    in Python) groups like the two columns it packs, and a float key
-    groups NaN with NaN and -0.0 with 0.0.  The plan has no
-    Window, one Exchange and one MapInArrow, and construction starts no
-    Spark job."""
+    in Python) groups like the two columns it packs, and a float key,
+    bare or inside an array, groups NaN with NaN and -0.0 with 0.0.  The
+    plan has no Window, one Exchange and one MapInArrow, and construction
+    starts no Spark job."""
     import itertools
 
     import numpy as np
@@ -2755,12 +2755,15 @@ def test_ewm_grouped_kernel_matches_pandas(spark):
         fl = spark.createDataFrame(
             [(i, k, float(i)) for i, k in enumerate(kv)],
             f"{ROW_IDX} long, k double, x double")
-        got = attach(fl, ["k"], forms[0], "e").orderBy(ROW_IDX).collect()
+        got = attach(attach(fl, ["k"], forms[0], "e"),
+                     F.array(F.col("k")), forms[0], "ea") \
+            .orderBy(ROW_IDX).collect()
         lab = ["null" if k is None else "nan" if k != k else str(abs(k))
                for k in kv]
         exp = pd.Series(np.arange(10.0)).groupby(lab).transform(
             lambda s: s.ewm(alpha=0.3).mean())
         np.testing.assert_allclose([r["e"] for r in got], exp, rtol=1e-12)
+        np.testing.assert_allclose([r["ea"] for r in got], exp, rtol=1e-12)
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
 
