@@ -1487,13 +1487,11 @@ class RollingGroupBy(_TemporalGroupByMixin):
         documented alternatives instead of silently grinding.  The
         estimate is one narrow 3-column aggregate over the index column
         (count/min/max); occupancy ignores ``by``-key partitioning, a
-        deliberate overestimate bounded by the key count.  Disable with
-        ``SPARK_GRAFT_NO_DENSITY_WARN=1``."""
-        import os
+        deliberate overestimate bounded by the key count.  It is a
+        ``RuntimeWarning``, so ``warnings.filterwarnings("ignore",
+        category=RuntimeWarning)`` silences it."""
         import warnings
 
-        if os.environ.get("SPARK_GRAFT_NO_DENSITY_WARN"):
-            return
         try:
             sdf = self._lf._sdf
             ts_us = F.unix_micros(F.col(self._index).cast("timestamp"))

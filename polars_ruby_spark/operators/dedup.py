@@ -249,54 +249,46 @@ def simhash_pairs(sdf: DataFrame, text_col: str = "text", id_col: str = "doc_id"
     return _bucket_pairs(buckets, id_col, max_bucket_size)
 
 
-def connected_components(edges: DataFrame, src: str = "id_a", dst: str = "id_b",
-                         max_iterations: int = 50,
-                         driver_threshold: int = 2_000_000,
-                         driver_max_bytes: int = 256 << 20) -> DataFrame:
-    """Connected components over an undirected edge list.  Returns
-    ``(id, cluster_id)`` for every node that appears in ``edges``, where
-    ``cluster_id`` is the smallest node id in the component (deterministic,
-    so it is oracle-able with a recursive CTE).
+# one-task limit on Catalyst's estimate: 2M edges of two longs (24 B a row) fit
+_CC_ONE_TASK_BYTES = 64 << 20
 
-    Scale-adaptive, like the IVF coarse quantizer: a dedup pair graph is
-    orders of magnitude smaller than the corpus that produced it, so below
-    ``driver_threshold`` edges (~tens of MB) the component labels are
-    computed with a driver-side union-find — O(E α(E)), one collect, zero
-    iterative jobs.  Above it, a distributed min-label propagation loop with
-    pointer jumping (each round also propagates along id↔label links, so a
-    d-diameter chain converges in ~log d rounds, not d): each round is one
-    shuffle join (edges ∪ label-links × labels) plus a map-side-combined min
-    aggregate, with ``localCheckpoint`` truncating lineage so the plan does
-    not grow with the iteration count.
+
+def connected_components(edges: DataFrame, src: str = "id_a", dst: str = "id_b",
+                         max_iterations: int = 50) -> DataFrame:
+    """Connected components over an undirected edge list: ``(id,
+    cluster_id)`` for every node in ``edges``, typed like ``src``, where
+    ``cluster_id`` is the smallest node id in the component (oracle-able
+    with a recursive CTE).  A null endpoint is not a node; the other
+    endpoint of its edge stays a singleton unless another edge joins it.
+
+    The path comes from Catalyst's size estimate of the endpoint columns
+    (``optimizedPlan().stats()``, what broadcast-join planning reads), so
+    choosing it starts no Spark job.  Under ``_CC_ONE_TASK_BYTES`` — a
+    dedup pair graph is orders of magnitude smaller than its corpus — a
+    union-find with path compression runs in ONE executor task
+    (``repartition(1)`` → ``mapInArrow``, output sorted by id), O(E α(E)).
+    Over it, or unknown (``Long.MaxValue``), a distributed min-label
+    propagation loop with pointer jumping (id↔label links too, so a
+    d-diameter chain converges in ~log d rounds): each round is one shuffle
+    join (edges ∪ label-links × labels) plus a map-side-combined min
+    aggregate, with ``localCheckpoint`` truncating lineage.
     """
-    # Persist-once lazy entry (round-12, guide §5; VERDICT r11 ask #5):
-    # the former eager ``localCheckpoint`` + count + width-sample +
-    # union-find collect ran FOUR driver-blocking jobs at plan-construct
-    # (three of them pure re-reads of the materialized blocks).  A lazy
-    # ``persist`` plus ONE merged stats aggregate computes the expensive
-    # pair-gen pipeline exactly once — the same single materialization the
-    # checkpoint paid — while the count AND the byte guard's width average
-    # ride that same job; the union-find collect then reads the cache.
-    # The width average now spans ALL edges instead of a 10k prefix
-    # sample: per-row octet_length is codegen-cheap inside a pass the job
-    # pays anyway, and a whole-graph mean can only make the byte guard
-    # more honest (same 16-byte fallback when the graph is empty).
-    width = (F.coalesce(F.octet_length(F.col(src).cast("string")), F.lit(8))
-             + F.coalesce(F.octet_length(F.col(dst).cast("string")), F.lit(8)))
-    edges = edges.persist()
-    # every path out of here — including a failing stats job, union-find
-    # collect or symmetric-edge checkpoint — releases the cached edges
-    try:
-        n_edges, avg_w = edges.agg(F.count(F.lit(1)), F.avg(width)).first()
-        use_driver = (n_edges <= driver_threshold
-                      and n_edges * float(avg_w or 16.0) <= driver_max_bytes)
-        if use_driver:
-            return _cc_driver_union_find(edges, src, dst)
-        sym = (edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-               .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))))
-        sym = sym.repartition("v").localCheckpoint(eager=True)
-    finally:
-        edges.unpersist()
+    from pyspark.sql.types import StructType
+
+    id_type = edges.schema[src].dataType
+    u, v = F.col(src), F.col(dst)
+    e = (edges.select(F.coalesce(u, v).cast(id_type).alias("u"),
+                      F.coalesce(v, u).cast(id_type).alias("v"))
+         .filter(F.col("u").isNotNull()))
+    est = e._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    if est < _CC_ONE_TASK_BYTES:
+        schema = StructType().add("id", id_type).add("cluster_id", id_type)
+        return e.repartition(1).mapInArrow(_cc_union_find, schema)
+
+    sym = e.select(F.explode(F.array(
+        F.struct("u", "v"), F.struct(F.col("v").alias("u"), F.col("u").alias("v"))
+    )).alias("e")).select("e.u", "e.v")
+    sym = sym.repartition("v").localCheckpoint(eager=True)
     labels = (sym.select(F.col("u").alias("id")).distinct()
               .withColumn("label", F.col("id"))
               .localCheckpoint(eager=True))
@@ -323,35 +315,39 @@ def connected_components(edges: DataFrame, src: str = "id_a", dst: str = "id_b",
     return labels.select("id", F.col("label").alias("cluster_id"))
 
 
-def _cc_driver_union_find(edges: DataFrame, src: str, dst: str) -> DataFrame:
-    """Union-find with path compression for sub-threshold pair graphs —
-    exact same output contract as the distributed loop (min id per
-    component).  Collects once via Arrow, returns via Arrow."""
+def _cc_union_find(batches):
+    """``mapInArrow`` body of the one-task path: union-find over dense
+    codes of the sorted distinct non-null ids (the smallest code is the
+    smallest id; NaN is one id, the largest, as Spark orders it).  Arrow
+    out, because PySpark turns a NaN in a pandas result into null."""
     import pandas as pd
+    import pyarrow as pa
 
-    pdf = edges.select(src, dst).toPandas()
-    parent: dict = {}
+    frames = list(batches)
+    if not frames:
+        return
+    ends = pa.concat_arrays([b.column(i) for i in (0, 1) for b in frames])
+    codes, ids = pd.factorize(ends.to_pandas(), sort=True, use_na_sentinel=False)
+    parent = list(range(len(ids)))
 
     def find(x):
         root = x
-        while parent.get(root, root) != root:
+        while parent[root] != root:
             root = parent[root]
-        while parent.get(x, x) != x:  # path compression
+        while parent[x] != root:  # path compression
             parent[x], x = root, parent[x]
         return root
 
-    for a, b in zip(pdf[src].tolist(), pdf[dst].tolist()):
+    half = len(codes) // 2
+    for a, b in zip(codes[:half].tolist(), codes[half:].tolist()):
         ra, rb = find(a), find(b)
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
-    nodes = set(pdf[src].tolist()) | set(pdf[dst].tolist())
-    out = pd.DataFrame({"id": list(nodes)})
-    out["cluster_id"] = [find(n) for n in out["id"]]
-    spark = edges.sparkSession
-    if out.empty:
-        dtype = edges.schema[src].dataType.simpleString()
-        return spark.createDataFrame([], f"id {dtype}, cluster_id {dtype}")
-    return spark.createDataFrame(out.sort_values("id"))
+    if len(ids):
+        ids = pa.array(ids.to_numpy(), type=ends.type, from_pandas=False)
+        roots = pa.array([find(i) for i in range(len(ids))])
+        yield pa.RecordBatch.from_arrays([ids, ids.take(roots)],
+                                         ["id", "cluster_id"])
 
 
 def dedup_clusters(sdf: DataFrame, text_col: str = "text", id_col: str = "doc_id",

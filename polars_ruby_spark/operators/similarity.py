@@ -389,8 +389,10 @@ def semantic_dedup(sdf: DataFrame, threshold: float = 0.92,
     count with corpus size — ``ceil(n / target_cluster_rows)`` from one
     cheap count — so 10× data means 10× clusters at constant per-task
     cost, not 100× per-cluster pairs; an explicit ``n_clusters`` is always
-    honored.  The pair graph is corpus-≪ so component labeling is the
-    scale-adaptive ``connected_components``.
+    honored.  The pair graph is corpus-≪, so component labeling is
+    ``connected_components``, which picks one-task union-find from
+    Catalyst's size estimate and starts no Spark job itself (the count and
+    the k-means sample below are this operator's only eager jobs).
     """
     import numpy as np
 

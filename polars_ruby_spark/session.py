@@ -160,6 +160,17 @@ def configure(builder: SparkSession.Builder) -> SparkSession.Builder:
     )
 
 
+def _env_count(name: str, default: str, star: bool = False) -> str:
+    """The env var ``name`` (``default`` when unset) as a positive integer
+    string, or ``*`` where ``star`` allows it; any other value raises a
+    ``ValueError`` that names the variable."""
+    raw = os.environ.get(name, default).strip()
+    if (star and raw == "*") or (raw.isascii() and raw.isdigit() and int(raw) > 0):
+        return raw
+    want = "a positive integer or '*'" if star else "a positive integer"
+    raise ValueError(f"{name}={raw!r}: expected {want}")
+
+
 def get_spark(app_name: str = "polars-ruby-spark", master: str | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
     """Return (or create) the engine's SparkSession.
@@ -172,11 +183,10 @@ def get_spark(app_name: str = "polars-ruby-spark", master: str | None = None,
     if active is not None:
         return active
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-        master = f"local[{cpus}]"
+        master = f"local[{_env_count('SPARK_GRAFT_CPUS', '*', star=True)}]"
     builder = configure(SparkSession.builder.appName(app_name).master(master))
     if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
+        shuffle_partitions = _env_count("SPARK_GRAFT_SHUFFLE", "32")
     builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
     builder = builder.config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     return builder.getOrCreate()

@@ -78,3 +78,17 @@ def embeddings(spark):
     import polars_ruby_spark as pl
 
     return pl.scan_parquet(table_path("embeddings"))
+
+
+@pytest.fixture
+def force_cc_path(monkeypatch):
+    """``force_cc_path("one_task" | "distributed")`` pins
+    ``connected_components`` to one path by moving its size-estimate limit
+    above every estimate (an unknown one is Long.MaxValue) or to 0."""
+    from polars_ruby_spark.operators import dedup
+
+    def force(path: str) -> None:
+        limit = {"one_task": 1 << 64, "distributed": 0}[path]
+        monkeypatch.setattr(dedup, "_CC_ONE_TASK_BYTES", limit)
+
+    return force

@@ -681,6 +681,31 @@ def test_session_disables_dataframe_debugging(spark):
         spark.sql("select definitely_not_a_column from range(1)").collect()
 
 
+def test_session_env_counts_reject_malformed(monkeypatch):
+    """SPARK_GRAFT_CPUS takes ``*`` or a positive integer and
+    SPARK_GRAFT_SHUFFLE a positive integer; anything else is a ValueError
+    naming the variable, raised before any session starts."""
+    import pytest
+
+    from polars_ruby_spark.session import _env_count
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert _env_count("SPARK_GRAFT_CPUS", "*", star=True) == "*"
+    for ok in ("*", "3", " 2 "):
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", ok)
+        assert _env_count("SPARK_GRAFT_CPUS", "*", star=True) == ok.strip()
+    for bad in ("", "0", "-2", "2.5", "four", "4]", "local[4]", "\u0663"):
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", bad)
+        with pytest.raises(ValueError, match="SPARK_GRAFT_CPUS"):
+            _env_count("SPARK_GRAFT_CPUS", "*", star=True)
+    monkeypatch.setenv("SPARK_GRAFT_SHUFFLE", "16")
+    assert _env_count("SPARK_GRAFT_SHUFFLE", "32") == "16"
+    for bad in ("*", "0", "1e3", "sixteen"):
+        monkeypatch.setenv("SPARK_GRAFT_SHUFFLE", bad)
+        with pytest.raises(ValueError, match="SPARK_GRAFT_SHUFFLE"):
+            _env_count("SPARK_GRAFT_SHUFFLE", "32")
+
+
 def test_session_memoizes_jvm_reflection(spark):
     """The bootstrap memoizes PySpark's per-call JVM reflection: every
     ``F.*`` builtin otherwise re-resolves the static ``functions`` member

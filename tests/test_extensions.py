@@ -193,45 +193,97 @@ def test_ivf_full_probe_equals_brute_force(spark, embeddings):
     assert sorted(map(key, part1.collect())) == sorted(map(key, part2.collect()))
 
 
-def test_connected_components_chain_and_islands(spark):
-    """Both CC paths on a 5-node chain + 2-node island: the sub-threshold
-    driver union-find and the distributed pointer-jumping loop (forced with
-    driver_threshold=0) must produce identical component minima."""
-    edges = spark.createDataFrame(
-        [(2, 1), (2, 3), (3, 4), (4, 5), (10, 11)], ["id_a", "id_b"])
+CC_PATHS = ("one_task", "distributed")
+
+
+def _labels(cc):
+    return {r["id"]: r["cluster_id"] for r in cc.collect()}
+
+
+def _cc_one_task(cc) -> bool:
+    return "_cc_union_find" in cc._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_connected_components_chain_and_islands(spark, force_cc_path):
+    """Both CC paths on a 5-node chain + 2-node island, for long ids and
+    for 500-char string ids (URL-like keys): the one-task union-find and
+    the distributed pointer-jumping loop give the same component minima."""
+    pairs = [(2, 1), (2, 3), (3, 4), (4, 5), (10, 11)]
     expect = {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 10: 10, 11: 10}
-    fast = {r["id"]: r["cluster_id"] for r in dedup.connected_components(edges).collect()}
-    assert fast == expect
-    dist = {r["id"]: r["cluster_id"] for r in
-            dedup.connected_components(edges, driver_threshold=0).collect()}
-    assert dist == expect
+    wide = lambda i: "u" * 500 + str(i)  # noqa: E731
+    for path in CC_PATHS:
+        force_cc_path(path)
+        edges = spark.createDataFrame(pairs, ["id_a", "id_b"])
+        assert _labels(dedup.connected_components(edges)) == expect, path
+        edges = spark.createDataFrame(
+            [(wide(a), wide(b)) for a, b in pairs], ["id_a", "id_b"])
+        assert _labels(dedup.connected_components(edges)) == {
+            wide(k): wide(v) for k, v in expect.items()}, path
 
 
-def test_connected_components_byte_guard(spark):
-    """Round-5: the driver union-find is gated on sampled ROW BYTES, not
-    edge count alone — wide string ids (URL keys) must fall back to the
-    distributed label-propagation path even under the edge threshold."""
-    wide = [(("u" * 500) + str(a), ("u" * 500) + str(b))
-            for a, b in [(2, 1), (2, 3), (10, 11)]]
-    edges = spark.createDataFrame(wide, ["id_a", "id_b"])
+def test_connected_components_null_endpoints(spark, force_cc_path):
+    """A null endpoint is not a node; the other endpoint of its edge is a
+    node that stays a singleton unless another edge joins it.  Same answer
+    on both paths, in the type of ``src``."""
+    edges = spark.createDataFrame(
+        [(2, 1), (None, 7), (8, None), (None, None), (3, None), (3, 2)],
+        "id_a long, id_b long")
+    for path in CC_PATHS:
+        force_cc_path(path)
+        cc = dedup.connected_components(edges)
+        assert _cc_one_task(cc) == (path == "one_task")
+        assert _labels(cc) == {1: 1, 2: 1, 3: 1, 7: 7, 8: 8}, path
+        assert [f.dataType.simpleString() for f in cc.schema] == [
+            "bigint", "bigint"]
 
-    calls = []
-    orig = dedup._cc_driver_union_find
-    dedup._cc_driver_union_find = \
-        lambda *a, **k: calls.append(1) or orig(*a, **k)
-    try:
-        # 3 edges x ~1KB rows > a 1KB byte cap -> distributed path
-        out = {r["id"][500:]: r["cluster_id"][500:] for r in
-               dedup.connected_components(
-                   edges, driver_max_bytes=1024).collect()}
-        assert not calls, "byte guard did not trip"
-        assert out == {"1": "1", "2": "1", "3": "1", "10": "10", "11": "10"}
-        # same graph under a roomy cap stays on the driver path
-        out2 = {r["id"][500:]: r["cluster_id"][500:] for r in
-                dedup.connected_components(edges).collect()}
-        assert calls and out2 == out
-    finally:
-        dedup._cc_driver_union_find = orig
+
+def test_connected_components_nan_is_one_id(spark, force_cc_path):
+    """Double ids: NaN is one node, ordered above every number, as Spark
+    compares it — the one-task kernel must neither loop on ``nan != nan``
+    nor split NaN into several nodes."""
+    nan = float("nan")
+    edges = spark.createDataFrame(
+        [(2.0, 1.0), (nan, 3.0), (7.0, nan)], "id_a double, id_b double")
+    for path in CC_PATHS:
+        force_cc_path(path)
+        got = sorted((repr(r["id"]), repr(r["cluster_id"]))
+                     for r in dedup.connected_components(edges).collect())
+        assert got == [("1.0", "1.0"), ("2.0", "1.0"), ("3.0", "3.0"),
+                       ("7.0", "3.0"), ("nan", "3.0")], path
+
+
+def test_connected_components_empty_edges_typed(spark, force_cc_path):
+    """No edges: an empty ``(id, cluster_id)`` frame typed like ``src`` on
+    both paths."""
+    for path in CC_PATHS:
+        force_cc_path(path)
+        for ddl in ("long", "string"):
+            edges = spark.createDataFrame([], f"id_a {ddl}, id_b {ddl}")
+            cc = dedup.connected_components(edges)
+            assert cc.collect() == [], (path, ddl)
+            assert cc.columns == ["id", "cluster_id"]
+            assert {f.dataType.simpleString() for f in cc.schema} == {
+                edges.schema["id_a"].dataType.simpleString()}, (path, ddl)
+
+
+def test_connected_components_path_from_size_estimate(spark):
+    """The path comes from Catalyst's size estimate: a pandas-built edge
+    frame has an exact (tiny) one and takes the one-task union-find; a
+    list-built one estimates Long.MaxValue and takes the distributed loop."""
+    import pandas as pd
+
+    pairs = [(2, 1), (2, 3), (10, 11)]
+    small = spark.createDataFrame(
+        pd.DataFrame(pairs, columns=["id_a", "id_b"]))
+    unknown = spark.createDataFrame(pairs, ["id_a", "id_b"])
+    assert small._jdf.queryExecution().optimizedPlan().stats().sizeInBytes() \
+        < dedup._CC_ONE_TASK_BYTES
+    one_task = dedup.connected_components(small)
+    distributed = dedup.connected_components(unknown)
+    assert _cc_one_task(one_task) and not _cc_one_task(distributed)
+    assert [r["id"] for r in one_task.collect()] == [1, 2, 3, 10, 11]
+    assert _labels(one_task) == _labels(distributed) == {
+        1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
 
 
 def test_dedup_clusters_partitions_corpus(spark):
@@ -545,20 +597,33 @@ def test_ngram_dup_coverage_hot_gram_matches_python(spark):
     assert any(r[3] > 0 for r in got) and any(r[3] == 0 for r in got)
 
 
-def test_connected_components_unpersists_on_error(spark):
-    """The persisted edge table is released even when the stats aggregate
-    fails: the persistent-RDD registry returns to its earlier size."""
+def test_connected_components_builds_lazily(spark, force_cc_path):
+    """On the one-task path construction starts no Spark job — neither on
+    a pandas-built frame that takes it by its size estimate nor on a
+    forced frame whose edge expression fails — and the failure surfaces at
+    ``collect()``."""
+    import pandas as pd
     import pytest
 
-    jsc = spark.sparkContext._jsc
-    edges = spark.createDataFrame(
-        [(2, 1), (2, 3), (10, 11)], ["id_a", "id_b"]).select(
-        F.when(F.col("id_a") > 0, F.raise_error(F.lit("cc boom")))
-        .cast("long").alias("id_a"), F.col("id_b"))
-    before = jsc.getPersistentRDDs().size()
+    sc = spark.sparkContext
+    small = spark.createDataFrame(
+        pd.DataFrame({"id_a": [2, 2, 10], "id_b": [1, 3, 11]}))
+    sc.setJobGroup("cc-construct", "construct")
+    try:
+        ok = dedup.connected_components(small)
+        force_cc_path("one_task")
+        bad = dedup.connected_components(spark.createDataFrame(
+            [(2, 1), (2, 3), (10, 11)], ["id_a", "id_b"]).select(
+            F.when(F.col("id_a") > 0, F.raise_error(F.lit("cc boom")))
+            .cast("long").alias("id_a"), F.col("id_b")))
+    finally:
+        sc._jsc.clearJobGroup()
+    assert list(sc.statusTracker().getJobIdsForGroup("cc-construct")) == []
+    assert _cc_one_task(ok) and _cc_one_task(bad)
+    assert sorted(tuple(r) for r in ok.collect()) == [
+        (1, 1), (2, 1), (3, 1), (10, 10), (11, 10)]
     with pytest.raises(Exception, match="cc boom"):
-        dedup.connected_components(edges)
-    assert jsc.getPersistentRDDs().size() == before
+        bad.collect()
 
 
 def test_weighted_sample_rate_tracks_weight(spark):

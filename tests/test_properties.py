@@ -241,14 +241,18 @@ def test_hash_sample_nested(spark, r1, r2):
     assert s_lo <= s_hi
 
 
-@SET
-@given(edges=st.lists(
+_EDGES = st.lists(
     st.tuples(st.integers(min_value=0, max_value=25),
               st.integers(min_value=0, max_value=25)),
-    min_size=1, max_size=40))
-def test_connected_components_matches_union_find(spark, edges):
-    """Driver path on arbitrary random graphs (self-loops included) must
-    equal an independent pure-python union-find."""
+    min_size=1, max_size=40)
+# the fixture only patches a module constant, so one patch serves every example
+_CC_SET = settings(SET, suppress_health_check=[
+    HealthCheck.too_slow, HealthCheck.function_scoped_fixture])
+
+
+def _check_components(spark, edges):
+    """``connected_components`` on a random graph (self-loops included)
+    equals an independent pure-python union-find."""
     from polars_ruby_spark.operators import dedup
 
     df = spark.createDataFrame(edges, ["id_a", "id_b"])
@@ -268,6 +272,24 @@ def test_connected_components_matches_union_find(spark, edges):
     nodes = {a for a, _ in edges} | {b for _, b in edges}
     expect = {n: find(n) for n in nodes}
     assert got == expect
+
+
+@_CC_SET
+@given(edges=_EDGES)
+def test_connected_components_matches_union_find(spark, force_cc_path, edges):
+    """One-task union-find path."""
+    force_cc_path("one_task")
+    _check_components(spark, edges)
+
+
+# each distributed run is several checkpointed rounds, so fewer examples
+@settings(_CC_SET, max_examples=3)
+@given(edges=_EDGES)
+def test_connected_components_distributed_matches_union_find(
+        spark, force_cc_path, edges):
+    """Distributed pointer-jumping path."""
+    force_cc_path("distributed")
+    _check_components(spark, edges)
 
 
 @SET
