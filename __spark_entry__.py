@@ -1293,7 +1293,8 @@ def q98_label_centroids(spark, sf_dir):
 
 def q99_semantic_dedup(spark, sf_dir):
     """SemDeDup (cluster-confined exact cosine near-dup → components →
-    canonical survivor).  Uses the AUTO cluster default (r8):
+    canonical survivor, all inside each cluster's one grouped task; no
+    connected-components stage).  Uses the AUTO cluster default (r8):
     ceil(n / 2048) — at the oracle scales (≤2048 embeddings) it resolves
     to ONE cluster, i.e. the exact pipeline the recursive-CTE oracle
     computes; at sf1.0 (~20k rows) it gives ~10 clusters so per-task BLAS

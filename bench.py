@@ -15,8 +15,11 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from polars_ruby_spark.session import _env_count  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+CPUS = _env_count("SPARK_GRAFT_CPUS", "32", star=True)
+N_CPUS = 32 if CPUS == "*" else int(CPUS)
 
 # Headline set: one per operator family that dominates 100 TB cost profiles.
 HEADLINE = [
@@ -93,7 +96,7 @@ def main():
     spark = configure(
         SparkSession.builder.master(f"local[{CPUS}]")
         .appName("polars-ruby-spark-bench")
-        .config("spark.sql.shuffle.partitions", str(max(int(CPUS) if CPUS.isdigit() else 32, 8)))
+        .config("spark.sql.shuffle.partitions", str(max(N_CPUS, 8)))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
     ).getOrCreate()
@@ -110,8 +113,7 @@ def main():
     # warm the JVM + parquet footers once (excluded from timing)
     qs[names[0]](spark, SF_DIR).write.format("noop").mode("overwrite").save()
     # pre-fork the Python/Arrow workers (reused across queries afterwards)
-    spark.range(int(CPUS) if CPUS.isdigit() else 32).repartition(
-        int(CPUS) if CPUS.isdigit() else 32).mapInPandas(
+    spark.range(N_CPUS).repartition(N_CPUS).mapInPandas(
         lambda it: it, "id long").write.format("noop").mode("overwrite").save()
 
     # BASELINE.md measurement plan: wall-clock median of 3 runs per query

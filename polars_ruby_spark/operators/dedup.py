@@ -328,7 +328,17 @@ def _cc_union_find(batches):
         return
     ends = pa.concat_arrays([b.column(i) for i in (0, 1) for b in frames])
     codes, ids = pd.factorize(ends.to_pandas(), sort=True, use_na_sentinel=False)
-    parent = list(range(len(ids)))
+    roots = _union_find_roots(len(ids), *codes.reshape(2, -1).tolist())  # src, dst
+    if len(ids):
+        ids = pa.array(ids.to_numpy(), type=ends.type, from_pandas=False)
+        yield pa.RecordBatch.from_arrays([ids, ids.take(pa.array(roots))],
+                                         ["id", "cluster_id"])
+
+
+def _union_find_roots(n: int, a, b) -> list[int]:
+    """Union-find (path compression) over nodes ``0 .. n-1`` joined by the
+    pairs ``zip(a, b)``: each node's root, the smallest node of its component."""
+    parent = list(range(n))
 
     def find(x):
         root = x
@@ -338,16 +348,11 @@ def _cc_union_find(batches):
             parent[x], x = root, parent[x]
         return root
 
-    half = len(codes) // 2
-    for a, b in zip(codes[:half].tolist(), codes[half:].tolist()):
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    if len(ids):
-        ids = pa.array(ids.to_numpy(), type=ends.type, from_pandas=False)
-        roots = pa.array([find(i) for i in range(len(ids))])
-        yield pa.RecordBatch.from_arrays([ids, ids.take(roots)],
-                                         ["id", "cluster_id"])
+    for x, y in zip(a, b):
+        rx, ry = find(x), find(y)
+        if rx != ry:
+            parent[max(rx, ry)] = min(rx, ry)
+    return [find(i) for i in range(n)]
 
 
 def dedup_clusters(sdf: DataFrame, text_col: str = "text", id_col: str = "doc_id",

@@ -13,6 +13,9 @@ corpus so candidate pairs shuffle once on the bucket key.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql.types import IntegerType, IntegralType, StructType
+
+from .dedup import _union_find_roots
 
 
 def _dot(a, b):
@@ -23,6 +26,17 @@ def _dot(a, b):
 def _norm(a):
     return F.sqrt(F.aggregate(a, F.lit(0.0),
                               lambda acc, v: acc + v.cast("double") * v.cast("double")))
+
+
+def _unit_rows(vectors):
+    """``vectors`` stacked into a float64 matrix of unit rows; a zero row
+    stays zero, so any non-zero vector's cosine is exact however small."""
+    import numpy as np
+
+    m = np.stack([np.asarray(v, dtype=np.float64) for v in vectors])
+    n = np.linalg.norm(m, axis=1, keepdims=True)
+    n[n == 0] = 1.0
+    return m / n
 
 
 def cosine_topk(queries: DataFrame, corpus: DataFrame, k: int = 5,
@@ -44,10 +58,7 @@ def cosine_topk(queries: DataFrame, corpus: DataFrame, k: int = 5,
 
     qrows = queries.select(F.col(id_col), F.col(vec_col)).collect()
     qids = np.array([r[0] for r in qrows], dtype=np.int64)
-    qm = np.stack([np.asarray(r[1], dtype=np.float64) for r in qrows])
-    qn = np.linalg.norm(qm, axis=1, keepdims=True)
-    qn[qn == 0] = 1.0
-    qm = qm / qn
+    qm = _unit_rows(r[1] for r in qrows)
     sc = corpus.sparkSession.sparkContext
     bq = sc.broadcast((qids, qm))
     kk, excl = int(k), bool(exclude_self)
@@ -60,10 +71,7 @@ def cosine_topk(queries: DataFrame, corpus: DataFrame, k: int = 5,
             if pdf.empty:
                 continue
             ids = pdf[id_col].to_numpy()
-            m = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            n = np.linalg.norm(m, axis=1, keepdims=True)
-            n[n == 0] = 1.0
-            cos = (m / n) @ b_qm.T  # (batch, |Q|)
+            cos = _unit_rows(pdf[vec_col]) @ b_qm.T  # (batch, |Q|)
             out_q, out_n, out_c = [], [], []
             for j in range(len(b_qids)):
                 col = cos[:, j]
@@ -120,27 +128,18 @@ def cosine_neardup_pairs(sdf: DataFrame, threshold: float,
         import numpy as np
         import pandas as pd
 
-        if pdf.empty:
-            return pd.DataFrame({"id_a": [], "id_b": [], "cosine": []})
         bi, bj = int(pdf["bi"].iat[0]), int(pdf["bj"].iat[0])
 
-        def unit(frame):
-            m = np.stack([np.asarray(v, dtype=np.float64) for v in frame["vec"]])
-            n = np.linalg.norm(m, axis=1, keepdims=True)
-            n[n == 0] = 1.0
-            return m / n
-
         if bi == bj:
-            ids = pdf["id"].to_numpy()
-            cos = unit(pdf) @ unit(pdf).T
-            iu, ju = np.triu_indices(len(ids), k=1)
-            keep = cos[iu, ju] >= tau
-            a, b, c = ids[iu[keep]], ids[ju[keep]], cos[iu, ju][keep]
+            ids, m = pdf["id"].to_numpy(), _unit_rows(pdf["vec"])
+            cos = m @ m.T
+            iu, ju = np.nonzero(np.triu(cos >= tau, k=1))
+            a, b, c = ids[iu], ids[ju], cos[iu, ju]
         else:
             left, right = pdf[pdf["blk"] == bi], pdf[pdf["blk"] == bj]
             if left.empty or right.empty:
                 return pd.DataFrame({"id_a": [], "id_b": [], "cosine": []})
-            cos = unit(left) @ unit(right).T
+            cos = _unit_rows(left["vec"]) @ _unit_rows(right["vec"]).T
             li, ri = np.nonzero(cos >= tau)
             a = left["id"].to_numpy()[li]
             b = right["id"].to_numpy()[ri]
@@ -159,7 +158,7 @@ def _kmeans_centroids(sample, n_centroids: int, seed: int = 42, iters: int = 8):
     import numpy as np
 
     rng = np.random.RandomState(seed)
-    m = sample / np.maximum(np.linalg.norm(sample, axis=1, keepdims=True), 1e-12)
+    m = _unit_rows(sample)
     cent = m[rng.choice(len(m), size=min(n_centroids, len(m)), replace=False)]
     for _ in range(iters):
         assign = (m @ cent.T).argmax(axis=1)
@@ -186,11 +185,8 @@ def ivf_assign(sdf: DataFrame, centroids, vec_col: str = "embedding") -> DataFra
         for pdf in batches:
             if pdf.empty:
                 continue
-            m = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            m = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
-            out = pdf.copy()
-            out["centroid_id"] = (m @ cent.T).argmax(axis=1).astype("int32")
-            yield out
+            cos = _unit_rows(pdf[vec_col]) @ cent.T
+            yield pdf.assign(centroid_id=cos.argmax(axis=1).astype("int32"))
 
     fields = ", ".join(f"{f.name} {f.dataType.simpleString()}"
                        for f in sdf.schema.fields)
@@ -212,14 +208,12 @@ def ivf_cosine_topk(queries: DataFrame, corpus: DataFrame, k: int = 5,
 
     from . import ensure_parallelism
 
-    sample = np.stack([np.asarray(r[0], dtype=np.float64) for r in
-                       corpus.select(vec_col).limit(sample_size).collect()])
+    sample = [r[0] for r in corpus.select(vec_col).limit(sample_size).collect()]
     cent = _kmeans_centroids(sample, n_centroids, seed)
 
     qrows = queries.select(id_col, vec_col).collect()
     qids = np.array([r[0] for r in qrows], dtype=np.int64)
-    qm = np.stack([np.asarray(r[1], dtype=np.float64) for r in qrows])
-    qm = qm / np.maximum(np.linalg.norm(qm, axis=1, keepdims=True), 1e-12)
+    qm = _unit_rows(r[1] for r in qrows)
     probe = np.argsort(-(qm @ cent.T), axis=1)[:, :n_probe]
 
     spark = corpus.sparkSession
@@ -241,10 +235,8 @@ def ivf_cosine_topk(queries: DataFrame, corpus: DataFrame, k: int = 5,
         for pdf in batches:
             if pdf.empty:
                 continue
-            m = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            m = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
             qi = pdf["query_id"].map(pos).to_numpy()
-            cos = (m * b_qm[qi]).sum(axis=1)
+            cos = (_unit_rows(pdf[vec_col]) * b_qm[qi]).sum(axis=1)
             yield pd.DataFrame({"query_id": pdf["query_id"].to_numpy(),
                                 "neighbor_id": pdf[id_col].to_numpy(),
                                 "cosine": cos})
@@ -377,26 +369,25 @@ def semantic_dedup(sdf: DataFrame, threshold: float = 0.92,
                    n_clusters: int | None = None, sample_size: int = 20_000,
                    seed: int = 42, target_cluster_rows: int = 2048) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023 pattern):
-    k-means coarse clusters → EXACT within-cluster cosine near-dup pairs →
-    connected components → canonical survivor = component-min id.  Returns
-    ``(id, cluster_id, canonical_id, is_duplicate)`` for every row.
+    k-means coarse clusters → EXACT within-cluster cosine near-dups →
+    components → canonical survivor = component-min id.  Returns
+    ``(id, cluster_id, canonical_id, is_duplicate)`` for every row
+    (``canonical_id`` is ``long`` for an integral id); a null-id row is
+    compared with nothing and its ``canonical_id``/``is_duplicate`` are null.
 
     Scale shape: the O(n²) comparison is confined to each cluster — one
-    applyInPandas task per centroid_id with a single float64 BLAS matmul
+    grouped Arrow task per centroid_id with a single float64 BLAS matmul
     over ~n/C rows (the SemDeDup trade: cross-cluster near-dups are missed
     by design; use ``n_clusters=1`` or ``cosine_neardup_pairs`` for full
     recall).  ``n_clusters=None`` (the default) AUTO-SCALES the cluster
     count with corpus size — ``ceil(n / target_cluster_rows)`` from one
     cheap count — so 10× data means 10× clusters at constant per-task
     cost, not 100× per-cluster pairs; an explicit ``n_clusters`` is always
-    honored.  The pair graph is corpus-≪, so component labeling is
-    ``connected_components``, which picks one-task union-find from
-    Catalyst's size estimate and starts no Spark job itself (the count and
-    the k-means sample below are this operator's only eager jobs).
+    honored.  Every pair, and so every component, lies inside one cluster:
+    the same task labels components with a union-find, and no pair leaves
+    it.  The count and the k-means sample are the only eager jobs.
     """
     import numpy as np
-
-    from .dedup import connected_components
 
     # one cheap columnar count feeds BOTH the cluster autoscale and the
     # sample fraction below
@@ -411,34 +402,37 @@ def semantic_dedup(sdf: DataFrame, threshold: float = 0.92,
     samp = sdf.select(vec_col)
     if frac < 1.0:
         samp = samp.sample(fraction=frac, seed=seed)
-    sample = np.stack([np.asarray(r[0], dtype=np.float64) for r in
-                       samp.limit(sample_size).collect()])
+    sample = [r[0] for r in samp.limit(sample_size).collect()]
     cent = _kmeans_centroids(sample, n_clusters, seed)
     assigned = ivf_assign(sdf.select(id_col, vec_col), cent, vec_col)
+    id_type = assigned.schema[id_col].dataType
+    schema = (StructType().add(id_col, id_type).add("cluster_id", IntegerType())
+              .add("canonical_id", id_type))
     tau = float(threshold)
 
-    def compare(pdf):
+    def label(table):
         import pandas as pd
+        import pyarrow as pa
 
-        if len(pdf) < 2:
-            return pd.DataFrame({"id_a": [], "id_b": []})
-        ids = pdf[id_col].to_numpy()
-        m = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-        m = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
-        cos = m @ m.T
-        iu, ju = np.triu_indices(len(ids), k=1)
-        keep = cos[iu, ju] >= tau
-        a, b = ids[iu[keep]], ids[ju[keep]]
-        return pd.DataFrame({"id_a": np.minimum(a, b).astype("int64"),
-                             "id_b": np.maximum(a, b).astype("int64")})
+        # Arrow in and out: pandas would turn a long id column holding a
+        # null into float64 and round ids above 2^53
+        ids = table.column(id_col)
+        known = ids.is_valid().to_numpy()
+        # the smallest code is the smallest id, so each root is its
+        # component's minimum; a repeated id is one node
+        codes, uniq = pd.factorize(ids.filter(known).to_pandas(), sort=True,
+                                   use_na_sentinel=False)
+        m = (_unit_rows(table.column(vec_col).filter(known).to_numpy())
+             if len(codes) else np.zeros((0, 0)))
+        a, b = np.nonzero(np.triu(m @ m.T >= tau, k=1))
+        roots = np.array(_union_find_roots(len(uniq), codes[a].tolist(),
+                                           codes[b].tolist()), dtype=np.int64)
+        canon = np.empty(len(known), dtype=uniq.dtype)
+        canon[known] = uniq.to_numpy()[roots[codes]]
+        return pa.table({id_col: ids, "cluster_id": table.column("centroid_id"),
+                         "canonical_id": pa.array(canon, mask=~known, type=ids.type)})
 
-    pairs = assigned.groupBy("centroid_id").applyInPandas(
-        compare, "id_a long, id_b long")
-    comp = connected_components(pairs, "id_a", "id_b").select(
-        F.col("id").alias("__cid__"), F.col("cluster_id").alias("__canon__"))
-    out = (assigned.select(id_col, F.col("centroid_id").alias("cluster_id"))
-           .join(comp, F.col(id_col) == F.col("__cid__"), "left"))
-    return (out.select(
-                id_col, "cluster_id",
-                F.coalesce(F.col("__canon__"), F.col(id_col)).alias("canonical_id"))
+    canon_type = "long" if isinstance(id_type, IntegralType) else id_type
+    return (assigned.groupBy("centroid_id").applyInArrow(label, schema)
+            .withColumn("canonical_id", F.col("canonical_id").cast(canon_type))
             .withColumn("is_duplicate", F.col("canonical_id") != F.col(id_col)))

@@ -744,6 +744,81 @@ def test_semantic_dedup_full_recall_matches_exact(spark, embeddings):
         assert r["is_duplicate"] == (comp.get(vid, vid) != vid)
 
 
+def test_semantic_dedup_matches_cluster_reference(spark, embeddings):
+    """n_clusters=4: each row's canonical id is the smallest id of its
+    component, where edges join rows of one returned cluster_id at cosine
+    >= tau — computed here without the operator's union-find."""
+    import numpy as np
+
+    tau = 0.4
+    sdf = embeddings._sdf
+    got = {r["vec_id"]: r for r in
+           similarity.semantic_dedup(sdf, threshold=tau, n_clusters=4).collect()}
+    vecs = {r["vec_id"]: np.asarray(r["embedding"], dtype=np.float64)
+            for r in sdf.select("vec_id", "embedding").collect()}
+    assert sorted(got) == sorted(vecs)
+    members = {}
+    for vid, r in got.items():
+        members.setdefault(r["cluster_id"], []).append(vid)
+    assert len(members) > 1
+    label = {vid: vid for vid in vecs}
+    for ids in members.values():
+        unit = {i: vecs[i] / np.linalg.norm(vecs[i]) for i in ids}
+        nbrs = {i: [j for j in ids if j != i and unit[i] @ unit[j] >= tau]
+                for i in ids}
+        for start in ids:  # flood each component from every member
+            seen, stack = {start}, [start]
+            while stack:
+                for j in nbrs[stack.pop()]:
+                    if j not in seen:
+                        seen.add(j)
+                        stack.append(j)
+            label[start] = min(seen)
+    assert any(label[v] != v for v in label)
+    for vid, r in got.items():
+        assert r["canonical_id"] == label[vid], vid
+        assert r["is_duplicate"] == (label[vid] != vid)
+
+
+def test_semantic_dedup_plan_is_one_grouped_pass(spark, embeddings):
+    """Labels come from the per-cluster task: one centroid-assign pass, no
+    connected-components stage (MapInArrow) and no join back."""
+    import re
+
+    out = similarity.semantic_dedup(embeddings._sdf, threshold=0.4, n_clusters=4)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert len(re.findall(r"MapInPandas assign", plan)) == 1, plan
+    assert "MapInArrow" not in plan and "Join" not in plan, plan
+
+
+def test_semantic_dedup_null_id_is_unlabeled(spark):
+    """A null-id row is compared with nothing: its canonical_id and
+    is_duplicate are null even when its vector equals another row's, and
+    canonical_id is long for an int id."""
+    rows = [(5, [1.0, 2.0, 3.0]), (None, [1.0, 2.0, 3.0]),
+            (3, [0.0, 1.0, 0.0]), (4, [0.0, 2.0, 0.0])]
+    sdf = spark.createDataFrame(rows, "vec_id int, embedding array<double>")
+    out = similarity.semantic_dedup(sdf, threshold=0.99, n_clusters=1)
+    assert [(f.name, f.dataType.simpleString()) for f in out.schema] == [
+        ("vec_id", "int"), ("cluster_id", "int"), ("canonical_id", "bigint"),
+        ("is_duplicate", "boolean")]
+    got = {r["vec_id"]: (r["canonical_id"], r["is_duplicate"]) for r in out.collect()}
+    assert got == {5: (5, False), None: (None, None), 3: (3, False), 4: (3, True)}
+
+
+def test_tiny_norm_vector_has_exact_cosine(spark):
+    """A vector and its 1e-13 copy (norm under 1e-12) are one direction:
+    semantic_dedup pairs them and cosine_topk scores them 1."""
+    v = [1.0, 2.0, 3.0]
+    rows = [(1, v), (2, [x * 1e-13 for x in v]), (3, [3.0, -1.0, 0.5])]
+    sdf = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    got = {r["vec_id"]: r["canonical_id"] for r in
+           similarity.semantic_dedup(sdf, threshold=0.99, n_clusters=1).collect()}
+    assert got == {1: 1, 2: 1, 3: 3}
+    top = similarity.cosine_topk(sdf.filter("vec_id = 1"), sdf, k=1).collect()
+    assert [(r["neighbor_id"], r["cosine"]) for r in top] == [(2, 1.0)]
+
+
 def test_plot_spec_shapes(spark):
     df = pl.DataFrame({"cat": ["a", "b"], "v": [1.0, 2.0]})
     spec = df.collect().plot()

@@ -597,6 +597,40 @@ def test_global_ordinal_plans_are_multi_task(spark):
     assert single_partition_violations(plan) == 0, plan
 
 
+def test_plan_audit_flags_repeated_python_nodes():
+    """tools/plan_audit: a Python node printed twice once expression ids are
+    stripped is one Python pass run twice; nodes that differ in their
+    inputs, and repeated non-Python lines, are not flagged."""
+    import os
+    import sys
+
+    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
+    from plan_audit import repeated_python_nodes
+
+    twice = """AdaptiveSparkPlan isFinalPlan=false
++- BroadcastHashJoin [vec_id#12L], [__cid__#23L], LeftOuter, BuildRight, false
+   :- Project [vec_id#12L, centroid_id#14 AS cluster_id#25]
+   :  +- MapInPandas assign(vec_id#0L, embedding#1)#11, [vec_id#12L, embedding#13, centroid_id#14], false
+   :     +- FileScan parquet [vec_id#0L,embedding#1] Batched: true
+   +- FlatMapGroupsInPandas [centroid_id#31], compare(vec_id#29L, embedding#30, centroid_id#31)#15, [id_a#16L, id_b#17L]
+      +- Exchange hashpartitioning(centroid_id#31, 32), ENSURE_REQUIREMENTS, [plan_id=112]
+         +- MapInPandas assign(vec_id#26L, embedding#27)#11, [vec_id#29L, embedding#30, centroid_id#31], false
+            +- FileScan parquet [vec_id#26L,embedding#27] Batched: true"""
+    assert repeated_python_nodes(twice) == 1
+    # codegen and tree prefixes do not hide a repeat; a third copy counts
+    third = twice + "\n   :  :  +- *(2) MapInPandas assign(vec_id#7L, embedding#8)#11, " \
+        "[vec_id#9L, embedding#10, centroid_id#3], false"
+    assert repeated_python_nodes(third) == 2
+    # q132's shape: two ewm kernels with the same name over different inputs
+    differ = """+- MapInArrow gen(__ewm_pid__#44, __row_idx__#42L, value#39, __ewm_x_0__#45)#116, [pid#117], false
+   +- BroadcastExchange HashedRelationBroadcastMode(List(input[0, int, true]),false), [plan_id=253]
+      +- ArrowEvalPython [_udf(__arr__#64)#84], [pythonUDF0#154], 250
+         +- MapInArrow gen(__ewm_pid__#113, __row_idx__#112L, __ewm_x_0__#114)#47, [pid#48], false
+            +- Exchange SinglePartition, ENSURE_REQUIREMENTS, [plan_id=245]
+            +- Exchange SinglePartition, ENSURE_REQUIREMENTS, [plan_id=245]"""
+    assert repeated_python_nodes(differ) == 0
+
+
 def test_chunked_ordinals_on_gapped_concentrated_index(spark):
     """Round-7: the deterministic-chunk attaches (cum_*/rle_id/reverse)
     key on floor((idx-min)/width) — correctness must hold when a filter

@@ -22,6 +22,11 @@ import subprocess
 import sys
 import time
 
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from polars_ruby_spark.session import _env_count  # noqa: E402
+
+CPUS = _env_count("SPARK_GRAFT_CPUS", "32", star=True)
 TREE_A = os.environ.get("AB_TREE_A", "/root/repo")
 TREE_B = os.environ.get("AB_TREE_B", "/tmp/r10tree")
 LABEL_A = os.environ.get("AB_LABEL_A", "head")
@@ -35,7 +40,7 @@ ONLY = sys.argv[3] if len(sys.argv) > 3 else None
 def run_bench(tree: str) -> dict:
     env = dict(os.environ)
     env.setdefault("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    env.setdefault("SPARK_GRAFT_CPUS", "32")
+    env["SPARK_GRAFT_CPUS"] = CPUS
     if ONLY:
         env["SPARK_GRAFT_BENCH_ONLY"] = ONLY
     t0 = time.time()
@@ -98,7 +103,7 @@ def main():
                        "min-of-N per query per tree, same box same sitting",
         "order": order,
         "trees": {LABEL_A: TREE_A, LABEL_B: TREE_B},
-        "cpus": os.environ.get("SPARK_GRAFT_CPUS", "32"),
+        "cpus": CPUS,
         "sf_dir": os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"),
         "only": ONLY,
         "runs_per_tree": RUNS,

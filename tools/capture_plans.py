@@ -22,9 +22,9 @@ SF_DIR = next((a for a in sys.argv[2:] if a.startswith("/")),
 def main():
     from pyspark.sql import SparkSession
 
-    from polars_ruby_spark.session import configure
+    from polars_ruby_spark.session import _env_count, configure
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = _env_count("SPARK_GRAFT_CPUS", "32", star=True)
     spark = configure(
         SparkSession.builder.master(f"local[{cpus}]")
         .appName("plan-capture")

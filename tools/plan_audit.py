@@ -7,7 +7,10 @@ small SF (analysis only — nothing executes) and flags:
   totals aggregate or a keyless/limit-bounded input;
 - ``CartesianProduct``/``BroadcastNestedLoopJoin`` outside queries that are
   cross joins by definition;
-- parquet scans with no pruned ReadSchema.
+- parquet scans with no pruned ReadSchema;
+- a Python node (``MapInPandas``, ``FlatMapGroupsInArrow``,
+  ``ArrowEvalPython``, ...) printed twice with the same text once
+  expression ids are stripped: the same Python pass runs twice.
 
 Usage: python tools/plan_audit.py [sf_dir]
 Exit code 1 if any violation is found.
@@ -16,6 +19,7 @@ Exit code 1 if any violation is found.
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -160,6 +164,24 @@ def unpartitioned_window_violations(plan: str) -> int:
 empty_partition_window_violations = unpartitioned_window_violations
 
 
+_PYTHON_NODE = re.compile(
+    r"(MapIn|FlatMap(Co)?GroupsIn)(Pandas|Arrow|Batch)\b"
+    r"|(Arrow|Batch)EvalPython(UDTF)?\b|Arrow(Aggregate|Window)Python\b")
+
+
+def repeated_python_nodes(plan: str) -> int:
+    """Python nodes whose line, with the tree prefix and expression ids
+    (``#12``, ``#12L``) stripped, appears more than once in ``plan``: each
+    repeat is one more run of the same Python pass over the same input."""
+    seen: dict[str, int] = {}
+    for line in plan.splitlines():
+        node = re.sub(r"^[\s+\-:*()\d]*", "", line)
+        if _PYTHON_NODE.match(node):
+            key = re.sub(r"#\d+L?", "", node)
+            seen[key] = seen.get(key, 0) + 1
+    return sum(n - 1 for n in seen.values())
+
+
 def has_bad_nested_loop(plan: str) -> bool:
     """BroadcastNestedLoopJoin is sanctioned ONLY as the scalar-stats attach
     (crossJoin with a broadcast ONE-ROW keyless aggregate — e.g. corpus
@@ -221,6 +243,9 @@ def audit(sf_dir: str) -> int:
         if ("CartesianProduct" in plan or has_bad_nested_loop(plan)) \
                 and name not in ALLOWED_NESTED_LOOP:
             problems.append("nested-loop join")
+        nr = repeated_python_nodes(plan)
+        if nr:
+            problems.append(f"{nr} repeated Python node(s)")
         if problems:
             failures += 1
             print(f"✗ {name}: {'; '.join(problems)}")
