@@ -59,6 +59,10 @@ from .sources import (
     scan_parquet, scan_table, write_bucketed,
 )
 from .sql_context import SQLContext
+from ._worker_zip import install as _install_worker_zip
+
+# every engine kernel imports this package when a worker unpickles it
+_install_worker_zip()
 
 # `all` as the wildcard fn (Polars.all) while keeping builtins importable
 all = all_  # noqa: A001

@@ -13,7 +13,7 @@ corpus so candidate pairs shuffle once on the bucket key.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
-from pyspark.sql.types import IntegerType, IntegralType, StructType
+from pyspark.sql.types import IntegerType, IntegralType, StructField, StructType
 
 from .dedup import _union_find_roots
 
@@ -172,25 +172,28 @@ def _kmeans_centroids(sample, n_centroids: int, seed: int = 42, iters: int = 8):
 
 def ivf_assign(sdf: DataFrame, centroids, vec_col: str = "embedding") -> DataFrame:
     """Add `centroid_id` = nearest coarse centroid (cosine).  One Arrow pass,
-    no shuffle; downstream join/partition on centroid_id prunes the corpus."""
+    no shuffle; downstream join/partition on centroid_id prunes the corpus.
+    The other columns pass through as Arrow: pandas would turn a long column
+    holding a null into float64 and round values above 2^53."""
     import numpy as np
 
     sc = sdf.sparkSession.sparkContext
     bc = sc.broadcast(np.asarray(centroids, dtype=np.float64))
 
     def assign(batches):
-        import pandas as pd
+        import pyarrow as pa
 
         cent = bc.value
-        for pdf in batches:
-            if pdf.empty:
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            cos = _unit_rows(pdf[vec_col]) @ cent.T
-            yield pdf.assign(centroid_id=cos.argmax(axis=1).astype("int32"))
+            cos = (_unit_rows(batch.column(vec_col).to_numpy(zero_copy_only=False))
+                   @ cent.T)
+            yield batch.append_column(
+                "centroid_id", pa.array(cos.argmax(axis=1), type=pa.int32()))
 
-    fields = ", ".join(f"{f.name} {f.dataType.simpleString()}"
-                       for f in sdf.schema.fields)
-    return sdf.mapInPandas(assign, fields + ", centroid_id int")
+    return sdf.mapInArrow(assign, StructType(
+        sdf.schema.fields + [StructField("centroid_id", IntegerType())]))
 
 
 def ivf_cosine_topk(queries: DataFrame, corpus: DataFrame, k: int = 5,

@@ -110,7 +110,7 @@ def _install_jvm_function_cache() -> None:
 def configure(builder: SparkSession.Builder) -> SparkSession.Builder:
     """Apply engine defaults to an existing builder (idempotent)."""
     _install_jvm_function_cache()
-    return (
+    builder = (
         builder.config("spark.sql.ansi.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
         # polars column names are case-sensitive ("A" and "a" coexist —
@@ -145,19 +145,21 @@ def configure(builder: SparkSession.Builder) -> SparkSession.Builder:
         # top-k vs the 10k default; 64k rows × ~64-dim float is still ≪
         # executor memory.
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        # Pin BLAS/OpenMP pools inside Python workers to ONE thread
-        # (round-12, guide §5): the numpy matmul stages (ANN scoring,
-        # neardup/semantic-dedup blocks, Arrow rolling kernels) run one
-        # worker per core — N workers × M BLAS threads oversubscribes the
-        # box by M (this numpy's OpenBLAS is built MAX_THREADS=2 → 2×).
-        # The matmuls are already partition-parallel; intra-op threading
-        # adds contention, not throughput.  spark.executorEnv.* reaches
-        # every Python worker's environment (core/context.py:294) in
-        # local AND cluster mode.
-        .config("spark.executorEnv.OMP_NUM_THREADS", "1")
-        .config("spark.executorEnv.OPENBLAS_NUM_THREADS", "1")
-        .config("spark.executorEnv.MKL_NUM_THREADS", "1")
     )
+    # Pin BLAS/OpenMP pools inside Python workers to ONE thread
+    # (round 12): the numpy matmul stages (ANN scoring,
+    # neardup/semantic-dedup blocks, Arrow rolling kernels) run one
+    # worker per core — N workers × M BLAS threads oversubscribes the
+    # box by M (this numpy's OpenBLAS is built MAX_THREADS=2 → 2×).
+    # The matmuls are already partition-parallel; intra-op threading
+    # adds contention, not throughput.  spark.executorEnv.* reaches
+    # every Python worker's environment (core/context.py:294) in
+    # local AND cluster mode.  A count the driver's environment sets is
+    # the user's choice and is left alone.
+    for var in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):
+        if var not in os.environ:
+            builder = builder.config(f"spark.executorEnv.{var}", "1")
+    return builder
 
 
 def _env_count(name: str, default: str, star: bool = False) -> str:

@@ -706,6 +706,24 @@ def test_session_env_counts_reject_malformed(monkeypatch):
             _env_count("SPARK_GRAFT_SHUFFLE", "32")
 
 
+def test_session_respects_user_blas_threads(monkeypatch):
+    """The bootstrap pins each of OMP/OPENBLAS/MKL_NUM_THREADS to 1 in the
+    Python workers only when the driver's environment does not set it."""
+    from pyspark.sql import SparkSession
+
+    from polars_ruby_spark.session import configure
+
+    names = ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS")
+    for name in names:
+        monkeypatch.delenv(name, raising=False)
+    opts = configure(SparkSession.builder)._options
+    assert {n: opts.get(f"spark.executorEnv.{n}") for n in names} == dict.fromkeys(names, "1")
+    monkeypatch.setenv("OPENBLAS_NUM_THREADS", "4")
+    opts = configure(SparkSession.builder)._options
+    assert {n: opts.get(f"spark.executorEnv.{n}") for n in names} == {
+        "OMP_NUM_THREADS": "1", "OPENBLAS_NUM_THREADS": None, "MKL_NUM_THREADS": "1"}
+
+
 def test_session_memoizes_jvm_reflection(spark):
     """The bootstrap memoizes PySpark's per-call JVM reflection: every
     ``F.*`` builtin otherwise re-resolves the static ``functions`` member

@@ -782,13 +782,32 @@ def test_semantic_dedup_matches_cluster_reference(spark, embeddings):
 
 def test_semantic_dedup_plan_is_one_grouped_pass(spark, embeddings):
     """Labels come from the per-cluster task: one centroid-assign pass, no
-    connected-components stage (MapInArrow) and no join back."""
+    connected-components stage and no join back."""
     import re
 
     out = similarity.semantic_dedup(embeddings._sdf, threshold=0.4, n_clusters=4)
     plan = out._jdf.queryExecution().executedPlan().toString()
-    assert len(re.findall(r"MapInPandas assign", plan)) == 1, plan
-    assert "MapInArrow" not in plan and "Join" not in plan, plan
+    assert len(re.findall(r"MapInArrow assign", plan)) == 1, plan
+    assert "MapInPandas" not in plan, plan
+    assert "_cc_union_find" not in plan and "Join" not in plan, plan
+
+
+def test_ivf_assign_carries_ids_exactly(spark):
+    """ivf_assign appends centroid_id to each Arrow batch and leaves the
+    other columns alone: ids above 2^53 next to a null in the same batch
+    come back exact (through pandas the column would be float64 and 2^53+1,
+    2^53+3 would round to even), in its own output and in semantic_dedup's."""
+    big = 2 ** 53
+    rows = [(big + 1, [1.0, 0.0]), (None, [0.0, 1.0]), (big + 3, [1.0, 0.01])]
+    sdf = spark.createDataFrame(rows, "vec_id long, embedding array<double>").coalesce(1)
+    out = similarity.ivf_assign(sdf, [[1.0, 0.0], [0.0, 1.0]])
+    assert [(f.name, f.dataType.simpleString()) for f in out.schema] == [
+        ("vec_id", "bigint"), ("embedding", "array<double>"), ("centroid_id", "int")]
+    assert sorted((r["vec_id"] or 0, r["centroid_id"]) for r in out.collect()) == [
+        (0, 1), (big + 1, 0), (big + 3, 0)]
+    dedup_out = similarity.semantic_dedup(sdf, threshold=0.99, n_clusters=1).collect()
+    assert {r["vec_id"]: r["canonical_id"] for r in dedup_out} == {
+        big + 1: big + 1, None: None, big + 3: big + 1}
 
 
 def test_semantic_dedup_null_id_is_unlabeled(spark):

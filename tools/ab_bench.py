@@ -1,17 +1,20 @@
 """Interleaved A/B bench runner (round-12 VERDICT ask #1).
 
-Runs ``bench.py`` alternately from two trees (A=HEAD=/root/repo,
-B=r10=/tmp/r10tree by default), N alternations each, on the same box in
-one sitting, and reports min-of-N per query per tree.  Interleaving plus
+Runs ``bench.py`` alternately from two trees, N alternations each, on the
+same box in one sitting, and reports min-of-N per query per tree.  Tree A
+is ``AB_TREE_A`` (default: this checkout); tree B is ``AB_TREE_B``, which
+must name an existing directory, such as a ``git archive`` of the parent
+commit.  Interleaving plus
 min-of-N is the methodology OPTIMIZATION_r11.md documents for this
 sandbox's multi-minute hypervisor throughput waves: a wave slows both
 trees' adjacent runs alike, and the min is the fast-phase floor.
 
 Usage:
-    python tools/ab_bench.py [out.json] [runs_per_tree] [bench_only]
+    AB_TREE_B=<dir> python tools/ab_bench.py [out.json] [runs_per_tree] [bench_only]
 
-Environment mirrors the driver: SPARK_GRAFT_SF_DIR (default sf0.1),
-SPARK_GRAFT_CPUS (default 32).
+``out.json`` defaults to ``ab_bench.json`` in ``tempfile.gettempdir()``,
+never a committed file.  Environment mirrors the driver: SPARK_GRAFT_SF_DIR
+(default sf0.1), SPARK_GRAFT_CPUS (default 32).
 """
 
 from __future__ import annotations
@@ -20,19 +23,22 @@ import json
 import os
 import subprocess
 import sys
+import tempfile
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from polars_ruby_spark.session import _env_count  # noqa: E402
 
 CPUS = _env_count("SPARK_GRAFT_CPUS", "32", star=True)
-TREE_A = os.environ.get("AB_TREE_A", "/root/repo")
-TREE_B = os.environ.get("AB_TREE_B", "/tmp/r10tree")
+TREE_A = os.environ.get("AB_TREE_A", ROOT)
+TREE_B = os.environ.get("AB_TREE_B", "")
 LABEL_A = os.environ.get("AB_LABEL_A", "head")
-LABEL_B = os.environ.get("AB_LABEL_B", "r10")
+LABEL_B = os.environ.get("AB_LABEL_B", "base")
 
-OUT = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/BENCH_AB_r12.json"
+OUT = (sys.argv[1] if len(sys.argv) > 1
+       else os.path.join(tempfile.gettempdir(), "ab_bench.json"))
 RUNS = int(sys.argv[2]) if len(sys.argv) > 2 else 3
 ONLY = sys.argv[3] if len(sys.argv) > 3 else None
 
@@ -55,6 +61,9 @@ def run_bench(tree: str) -> dict:
 
 
 def main():
+    if not os.path.isdir(TREE_B):
+        raise SystemExit(f"AB_TREE_B={TREE_B!r}: set it to an existing "
+                         "directory holding the tree to compare against")
     runs = {LABEL_A: [], LABEL_B: []}
     order = []
     for i in range(RUNS):
@@ -122,7 +131,7 @@ def main():
                        "total_speedup_vs_" + LABEL_B, "parsed_runs")}))
     n_reg = sum(1 for v in per_query.values() if v["status"] == "regressed")
     n_imp = sum(1 for v in per_query.values() if v["status"] == "improved")
-    print(f"regressed={n_reg} improved={n_imp} of {len(common)}")
+    print(f"regressed={n_reg} improved={n_imp} of {len(common)}; wrote {OUT}")
 
 
 if __name__ == "__main__":
