@@ -120,6 +120,11 @@ def main():
     # (steady-state engine cost; first run additionally pays one-time JIT /
     # codegen-cache compilation that a long-lived cluster amortizes away).
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
+    # classes janino compiled so far in this JVM: a query that still
+    # compiles over its timed reps (after its warm run) misses the
+    # generated-code cache
+    compiled = (spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+                .METRIC_COMPILATION_TIME())
     results, split = {}, {}
     for name in names:
         # per-query untimed warm run: heavy expression trees (minhash, ANN)
@@ -127,6 +132,7 @@ def main():
         # amortizes; without this the median of 3 can still catch it
         qs[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
         times, cons, exes = [], [], []
+        compiled_before = compiled.getCount()
         for _ in range(reps):
             t0 = time.perf_counter()
             df = qs[name](spark, SF_DIR)
@@ -140,10 +146,12 @@ def main():
         # the operator does (carry collects, pivot-value discovery);
         # execute = the noop sink (Catalyst analysis of the final plan +
         # the jobs).  Split comes from the SAME rep as the reported median
-        # so construct + execute == the headline number.
+        # so construct + execute == the headline number; compiles covers
+        # all timed reps.
         mid = sorted(range(reps), key=lambda i: times[i])[reps // 2]
         results[name] = times[mid]
-        split[name] = {"construct": cons[mid], "execute": exes[mid]}
+        split[name] = {"construct": cons[mid], "execute": exes[mid],
+                       "compiles": compiled.getCount() - compiled_before}
 
     total = round(sum(results.values()), 3)
     # r1-anchor subtotal: the original 28-query set BENCH_r01 measured —

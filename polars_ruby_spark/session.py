@@ -28,6 +28,10 @@ ROW_IDX = "__row_idx__"
 #: :func:`_install_jvm_function_cache`.
 _JVM_FN_CACHE: dict = {}
 
+#: Compiled generated classes Spark keeps per JVM (its default is 100); see
+#: the generated-code cache note in :func:`configure`.
+_CODEGEN_CACHE_ENTRIES = 2048
+
 
 def _install_jvm_function_cache() -> None:
     """Memoize PySpark's per-call JVM reflection for ``F.*`` builtins.
@@ -145,6 +149,27 @@ def configure(builder: SparkSession.Builder) -> SparkSession.Builder:
         # top-k vs the 10k default; 64k rows × ~64-dim float is still ≪
         # executor memory.
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
+        # Generated-code cache.  Spark keeps 100 compiled classes, keyed on
+        # the generated source, and misses two ways here.  (1) LRU thrash:
+        # one mixed pass of the interactive attach/ewm queries uses about
+        # 200 distinct classes (the extension pipeline about 125), so each
+        # class is evicted before its query comes round again, and every
+        # pass recompiled 146-218 classes (0.6-1.4 s of janino a pass; 161
+        # of 1,548 JVM CPU samples were in UnitCompiler.compile2).  A pass
+        # over all 168 registry queries at sf0.01 compiles 1,889 distinct
+        # classes, and metaspace grew 57.5 MB over it, so a retained class
+        # costs at most ~33 KB and _CODEGEN_CACHE_ENTRIES holds the whole
+        # registry.  (2) Stage-id class names: AQE numbers whole-stage
+        # codegen stages while it re-plans, and the number varies from run
+        # to run (q165: GeneratedIteratorForCodegenStage5, then ...Stage7),
+        # so byte-identical pipelines miss on the name alone -- run alone,
+        # q165 recompiled 15 classes per collect and 6 per construct.
+        # With both, steady mixed passes compile 0 classes.  The stage id
+        # still shows in explain() ("*(N)") and in the generated comment.
+        # The cache size is a static conf: a session built before
+        # configure() ran keeps Spark's 100.
+        .config("spark.sql.codegen.cache.maxEntries", str(_CODEGEN_CACHE_ENTRIES))
+        .config("spark.sql.codegen.useIdInClassName", "false")
     )
     # Pin BLAS/OpenMP pools inside Python workers to ONE thread
     # (round 12): the numpy matmul stages (ANN scoring,

@@ -676,9 +676,48 @@ def test_session_disables_dataframe_debugging(spark):
         "spark.python.sql.dataFrameDebugging.enabled") == "false"
     assert spark.conf.get(
         "spark.sql.dataFrameQueryContext.enabled") == "false"
+    # the generated-code cache holds the engine's working set, and its keys
+    # carry no AQE stage id in the class name
+    from polars_ruby_spark.session import _CODEGEN_CACHE_ENTRIES
+
+    assert opts.get("spark.sql.codegen.cache.maxEntries") == str(
+        _CODEGEN_CACHE_ENTRIES)
+    assert opts.get("spark.sql.codegen.useIdInClassName") == "false"
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(
+        _CODEGEN_CACHE_ENTRIES)
+    assert spark.conf.get("spark.sql.codegen.useIdInClassName") == "false"
     import pytest as _pytest
     with _pytest.raises(Exception):
         spark.sql("select definitely_not_a_column from range(1)").collect()
+
+
+def test_codegen_cache_keeps_the_working_set(spark, sf_dir):
+    """A second round of the interactive attach/ewm queries compiles no
+    generated class.  One round uses more classes than Spark's default
+    cache of 100 holds, so with Spark's defaults each class is evicted
+    before the next round needs it, and q165's pipelines also miss because
+    AQE numbers its codegen stages differently from run to run, which put
+    a different stage id into each class name."""
+    import os
+    import sys
+
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    import __spark_entry__ as e
+
+    qs = e.queries()
+    names = ("q107_global_ordinals", "q132_ewm_single_series",
+             "q165_ungrouped_rank_attach", "q166_ungrouped_fills_lag_attach")
+    compiles = (spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+                .METRIC_COMPILATION_TIME())
+
+    def one_round():
+        for name in names:
+            qs[name](spark, sf_dir).toPandas()
+
+    one_round()
+    before = compiles.getCount()
+    one_round()
+    assert compiles.getCount() - before == 0
 
 
 def test_session_env_counts_reject_malformed(monkeypatch):

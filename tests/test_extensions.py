@@ -626,6 +626,29 @@ def test_connected_components_builds_lazily(spark, force_cc_path):
         bad.collect()
 
 
+def test_ensure_parallelism_runs_no_job_on_shuffled_input(spark, documents):
+    """``ensure_parallelism`` reads the partition count only of an input
+    with no exchange: on a grouped input that read would run the upstream
+    shuffle stage while the plan is built.  A one-partition scan still
+    spreads to ``defaultParallelism``."""
+    from polars_ruby_spark.operators import ensure_parallelism
+
+    docs = documents.to_spark()
+    grouped = docs.groupBy("doc_id").agg(F.first("text").alias("text"))
+    sc = spark.sparkContext
+    sc.setJobGroup("parallelism-construct", "construct")
+    try:
+        same = ensure_parallelism(grouped)
+        dedup.minhash_dedup_pairs(grouped)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert list(sc.statusTracker().getJobIdsForGroup(
+        "parallelism-construct")) == []
+    assert same is grouped
+    spread = ensure_parallelism(docs.coalesce(1))
+    assert spread.rdd.getNumPartitions() == sc.defaultParallelism
+
+
 def test_weighted_sample_rate_tracks_weight(spark):
     from polars_ruby_spark.operators import sampling
 
