@@ -91,8 +91,19 @@ HEADLINE = [
 def main():
     from pyspark.sql import SparkSession
 
+    import __spark_entry__ as entry
     from polars_ruby_spark.session import configure
 
+    qs = entry.queries()
+    names = [n for n in HEADLINE if n in qs]
+    only = os.environ.get("SPARK_GRAFT_BENCH_ONLY")
+    if only:  # iteration aid: comma-separated subset of the whole registry
+        keep = [n for n in only.split(",") if n]
+        unknown = [n for n in keep if n not in qs]
+        if unknown or not keep:
+            sys.exit(f"SPARK_GRAFT_BENCH_ONLY={only!r} names no registry "
+                     f"query: {', '.join(unknown) or '(empty)'}")
+        names = [n for n in qs if n in keep]
     spark = configure(
         SparkSession.builder.master(f"local[{CPUS}]")
         .appName("polars-ruby-spark-bench")
@@ -102,14 +113,6 @@ def main():
     ).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    import __spark_entry__ as entry
-
-    qs = entry.queries()
-    names = [n for n in HEADLINE if n in qs]
-    only = os.environ.get("SPARK_GRAFT_BENCH_ONLY")
-    if only:  # iteration aid: comma-separated query subset
-        keep = set(only.split(","))
-        names = [n for n in names if n in keep] or names
     # warm the JVM + parquet footers once (excluded from timing)
     qs[names[0]](spark, SF_DIR).write.format("noop").mode("overwrite").save()
     # pre-fork the Python/Arrow workers (reused across queries afterwards)

@@ -21,7 +21,8 @@ from pyspark.sql import DataFrame as SparkDF
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from .exprs import Expr, col, lit, wrap_expr
+from .exprs import (_ORDER_CTX, Expr, _attach_ewm, _ColumnBinding,
+                    _ewm_nodes, col, lit, wrap_expr)
 from .group_by import DynamicGroupBy, GroupBy, LazyGroupBy, RollingGroupBy
 from .operators.row_index import strip_row_index, with_row_index
 from .session import ROW_IDX
@@ -267,8 +268,9 @@ class LazyFrame:
         for name, e in parsed:
             for ee in e._expand(sdf):
                 expanded.append((name, ee))
-        needs_order = any(e._needs_order or e._scrambles_order
-                          for _, e in expanded)
+        ewm_nodes = _ewm_nodes([e for _, e in expanded])
+        needs_order = bool(ewm_nodes) or any(
+            e._needs_order or e._scrambles_order for _, e in expanded)
         # sort-key window-ordering fast path: the frame's row order came
         # from an explicit sort(keys) and every order consumer in this bind
         # is _order_safe (windows only, never ROW_IDX values) — order
@@ -281,6 +283,7 @@ class LazyFrame:
         if (needs_order and ROW_IDX not in sdf.columns and spec
                 and all(n in sdf.columns for n, _, _ in spec)
                 and all(e._order_safe for _, e in expanded)
+                and not ewm_nodes
                 and not any(e._global_ordinal_fn is not None
                             or e._grouped_remap_fn is not None
                             for _, e in expanded)
@@ -295,10 +298,13 @@ class LazyFrame:
             # positional consumer over an index of unknown provenance (a
             # row-subset op upstream may have gapped it): re-rank first
             sdf = self._ensure_dense_index()._sdf_raw
-        from .exprs import _ORDER_CTX
-
         _ORDER_CTX.append(fast_cols)
+        binding = _ColumnBinding()
         try:
+            pre_ewm = sdf   # ewm nodes attach first, then bind as columns
+            ewm_ks = {k for k, (_, e) in enumerate(expanded)
+                      if ewm_nodes and _ewm_nodes([e])}
+            sdf, ewm_cols = _attach_ewm(sdf, ewm_nodes, binding)
             all_agg = bool(expanded) and all(e._is_agg for _, e in expanded)
             if context == "select" and all_agg:
                 # composed per-row+aggregate exprs (x * x.sum(), when(...) *
@@ -336,8 +342,11 @@ class LazyFrame:
                     scalar_plan[k] = tmp
                     probe_cols.append(c.alias(tmp))
                 if probe_cols:
-                    one = sdf.agg(*probe_cols)  # over the PRE-attach frame
-            helpers = list(scalar_plan.values())
+                    # over the PRE-attach frame, unless an aggregate reads
+                    # an attached ewm column
+                    src = sdf if ewm_ks & scalar_plan.keys() else pre_ewm
+                    one = src.agg(*probe_cols)
+            helpers = ewm_cols + list(scalar_plan.values())
             # ordinal hooks may run alongside aggregates as long as every agg
             # was scalar-planned (its value is already a plain attached column);
             # only an unplanned composed agg (global-window binding) blocks them
@@ -364,25 +373,8 @@ class LazyFrame:
                 return sdf
 
             if not (context == "select" and all_agg) and not unplanned_agg:
-                # SAME-FRAME ewm bindings batch into ONE attach: one
-                # kernel pass and one carry fold for all of them
-                ewm_ks = [
-                    (k, e._global_ordinal_fn._ewm_batch)
-                    for k, (name, e) in enumerate(expanded)
-                    if not e._is_agg and e._global_ordinal_fn is not None
-                    and getattr(e._global_ordinal_fn, "_ewm_batch", None)]
-                if len(ewm_ks) >= 2:
-                    from .exprs import _next_gord_name
-                    from .operators.ewm import attach_ewm_global_multi
-
-                    tmps = [_next_gord_name() for _ in ewm_ks]
-                    sdf = attach_ewm_global_multi(
-                        sdf, [(b["value"], b["spec"], tmp)
-                              for (_k, b), tmp in zip(ewm_ks, tmps)])
-                    for (k, b), tmp in zip(ewm_ks, tmps):
-                        helpers.append(tmp)
-                        sdf = chain_posts(sdf, k, tmp, b["post"])
-                # same for cum_* bindings: one pin + one offsets broadcast
+                # SAME-FRAME cum_* bindings batch into ONE attach: one pin
+                # and one offsets broadcast for all of them
                 cum_ks = [
                     (k, e._global_ordinal_fn._cum_batch)
                     for k, (name, e) in enumerate(expanded)
@@ -529,7 +521,7 @@ class LazyFrame:
                         helpers.append(nxt)
                         hook_cols[k] = nxt
                     sdf = sdf.drop(*tmps)
-                hook_attached = bool(hook_cols)
+                hook_attached = bool(hook_cols) or bool(ewm_cols)
                 for k, (name, e) in enumerate(expanded):
                     if (e._is_agg or e._global_ordinal_fn is None
                             or k in hook_cols):
@@ -585,18 +577,39 @@ class LazyFrame:
             # (k in hook_cols) scramble too (round-7): the two-pass attachments
             # leave the chunk/join layout in place and rely on this deferred
             # restore instead of paying an eager re-sort inside every attach
-            # (driver/bench handoffs skip the restore legitimately).
-            self._last_bind_scrambled = any(
+            # (driver/bench handoffs skip the restore legitimately).  Of the
+            # aggregates, only scalar-planned ones and df.agg are order-free.
+            self._last_bind_scrambled = not (
+                context == "select" and all_agg) and any(
                 (e._scrambles_order or e._needs_order or k in hook_cols)
-                and not e._is_agg
+                and k not in scalar_plan
                 for k, (_, e) in enumerate(expanded))
             self._last_bind_fast = fast_cols is not None
             self._last_bind_identities = {
                 alias: _identity_source(e)
                 for (alias, _c), (_nm, e) in zip(cols, expanded)}
         finally:
+            binding.restore()
             _ORDER_CTX.pop()
         return sdf, cols, all_agg, helpers
+
+    def _reshape(self, e, name) -> "LazyFrame":
+        """Bind a row-count-changing expression through its ``_frame_fn``.
+        ewm nodes under it attach first; the reshape reads their columns
+        (a nested select skips the already attached nodes)."""
+        nodes = _ewm_nodes([e])
+        if not nodes:
+            return e._frame_fn(self, name or e._name)
+        base = self._ensure_row_index()
+        binding = _ColumnBinding()
+        try:
+            sdf, _ = _attach_ewm(base._sdf_raw, nodes, binding)
+            lf = LazyFrame(sdf)
+            lf._order_dirty = True
+            lf._idx_dense = base._idx_dense
+            return e._frame_fn(lf, name or e._name)
+        finally:
+            binding.restore()
 
     # -- projections ----------------------------------------------------------
     def select(self, *exprs, **named) -> "LazyFrame":
@@ -611,7 +624,7 @@ class LazyFrame:
 
                     out = None
                     for name, e in parsed:
-                        part = e._frame_fn(self, name or e._name)
+                        part = self._reshape(e, name)
                         out = part if out is None else _hstack(out, part)
                     return out
                 from .exceptions import InvalidOperationError
@@ -620,7 +633,7 @@ class LazyFrame:
                     "row-count-changing expressions (reshape) must be the "
                     "only expression in a select")
             name, e = parsed[0]
-            return e._frame_fn(self, name or e._name)
+            return self._reshape(e, name)
         sdf, cols, all_agg, _helpers = self._bind_all(parsed, "select")
         if all_agg:
             return LazyFrame(sdf.agg(*[c for _, c in cols]))

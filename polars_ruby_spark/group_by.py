@@ -14,7 +14,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from .exprs import Expr, bind_context, col, wrap_expr
+from .exprs import (Expr, _attach_ewm, _ColumnBinding, _ewm_nodes,
+                    bind_context, col, wrap_expr)
 from .session import ROW_IDX
 
 #: rolling sliding-kernel kinds for the central-moment aggregate family —
@@ -132,7 +133,7 @@ def _has_agg_prestages(exprs, named) -> bool:
     # multi (selector) exprs may expand to windowables — the substitution
     # pass expands them first and decides per expanded expr
     return any(ew._agg_pre_fn is not None or _windowable_in_agg(ew)
-               or ew._multi_fn is not None
+               or ew._multi_fn is not None or _ewm_nodes([ew])
                for e in list(exprs) + list(named.values())
                for ew in (wrap_expr(e),))
 
@@ -315,45 +316,60 @@ class LazyGroupBy:
             # gapped index is stale (round-5): re-rank to dense first
             lf = self._lf = lf._ensure_dense_index()
         sdf = lf._sdf
-        if self._grouping == "groupBy":
-            giant = _giant_group_gate(sdf, self._keys, exprs, named)
-            psdf, pexprs, pnamed = _apply_agg_prestages(
-                sdf, exprs, named, self._keys, giant=giant)
-        elif _has_agg_prestages(exprs, named):
-            # cube/rollup with pre-stage aggs (spearman, cumulative_eval):
-            # the single-shuffle plan cannot host per-SUBTOTAL-group
-            # pre-stage windows, so expand to explicit grouping sets —
-            # each a plain groupBy carrying its own pre-stage — and union
-            # (round-5; 2^k / k+1 passes, cube key counts are small by
-            # construction)
+        flat = [ee for e in exprs for ee in wrap_expr(e)._expand(sdf)]
+        gkeys = [e for _, e in self._keys]
+        ewm_nodes = _ewm_nodes(flat + list(map(wrap_expr, named.values())),
+                               gkeys)
+        if ewm_nodes and self._grouping != "groupBy":
             return self._agg_grouping_sets(exprs, named)
-        else:
-            psdf, pexprs, pnamed = sdf, exprs, named
-        aggs, needs_order = _agg_columns(psdf, pexprs, pnamed)
-        key_needs_order = any(e._needs_order for _, e in self._keys)
-        if (needs_order or key_needs_order or self._maintain_order) \
-                and ROW_IDX not in sdf.columns:
-            if self._maintain_order:
-                # first-appearance order needs GLOBAL positions — the
-                # group-local ordinal would make every group's min 1
-                sdf = lf._ensure_row_index()._sdf
-            else:
-                sdf = self._order_base(sdf, exprs, named)
+        binding = _ColumnBinding()
+        try:
+            if ewm_nodes:
+                # ewm nodes attach first, scanning groups in row order
+                sdf, _ = _attach_ewm(lf._ensure_row_index()._sdf,
+                                     ewm_nodes, binding, gkeys)
+                exprs = flat
             if self._grouping == "groupBy":
+                giant = _giant_group_gate(sdf, self._keys, exprs, named)
                 psdf, pexprs, pnamed = _apply_agg_prestages(
                     sdf, exprs, named, self._keys, giant=giant)
+            elif _has_agg_prestages(exprs, named):
+                # cube/rollup with pre-stage aggs (spearman, cumulative_eval):
+                # the single-shuffle plan cannot host per-SUBTOTAL-group
+                # pre-stage windows, so expand to explicit grouping sets —
+                # each a plain groupBy carrying its own pre-stage — and union
+                # (round-5; 2^k / k+1 passes, cube key counts are small by
+                # construction)
+                return self._agg_grouping_sets(exprs, named)
             else:
                 psdf, pexprs, pnamed = sdf, exprs, named
-            aggs, _ = _agg_columns(psdf, pexprs, pnamed)
-        sdf = psdf
-        keys = self._key_cols(sdf)
-        grouped = getattr(sdf, self._grouping)(*keys)
-        if self._maintain_order and ROW_IDX in sdf.columns:
-            # polars contract: groups come out in first-appearance order —
-            # aggregate the min row position and sort the (small) result
-            out = grouped.agg(*aggs, F.min(ROW_IDX).alias("__mo__"))
-            return LazyFrame(out.orderBy("__mo__").drop("__mo__"))
-        return LazyFrame(grouped.agg(*aggs))
+            aggs, needs_order = _agg_columns(psdf, pexprs, pnamed)
+            key_needs_order = any(e._needs_order for _, e in self._keys)
+            if (needs_order or key_needs_order or self._maintain_order) \
+                    and ROW_IDX not in sdf.columns:
+                if self._maintain_order:
+                    # first-appearance order needs GLOBAL positions — the
+                    # group-local ordinal would make every group's min 1
+                    sdf = lf._ensure_row_index()._sdf
+                else:
+                    sdf = self._order_base(sdf, exprs, named)
+                if self._grouping == "groupBy":
+                    psdf, pexprs, pnamed = _apply_agg_prestages(
+                        sdf, exprs, named, self._keys, giant=giant)
+                else:
+                    psdf, pexprs, pnamed = sdf, exprs, named
+                aggs, _ = _agg_columns(psdf, pexprs, pnamed)
+            sdf = psdf
+            keys = self._key_cols(sdf)
+            grouped = getattr(sdf, self._grouping)(*keys)
+            if self._maintain_order and ROW_IDX in sdf.columns:
+                # polars contract: groups come out in first-appearance
+                # order — aggregate the min row position, sort the result
+                out = grouped.agg(*aggs, F.min(ROW_IDX).alias("__mo__"))
+                return LazyFrame(out.orderBy("__mo__").drop("__mo__"))
+            return LazyFrame(grouped.agg(*aggs))
+        finally:
+            binding.restore()
 
     def _agg_grouping_sets(self, exprs, named):
         """cube/rollup expansion for pre-stage aggregates: one plain
@@ -602,11 +618,80 @@ class _TemporalGroupByMixin:
         """Apply deferred ``_agg_pre_fn`` hooks against the window-assigned
         pre-groupBy frame (keys = window start + group keys — the SAME
         attributes the groupBy hashes, so the pre-stage windows share its
-        exchange) and compile the final aggregate columns."""
-        frame, exprs2, named2 = _apply_agg_prestages_cols(
-            frame, exprs, named, key_cols)
-        aggs, _ = _agg_columns(frame, exprs2, named2)
+        exchange) and compile the final aggregate columns.  ewm nodes
+        attach first, each window scanned in row order."""
+        keys = [Expr(lambda df, part, _c=c: _c) for c in key_cols]
+        exprs = [ee for e in exprs for ee in wrap_expr(e)._expand(frame)]
+        binding = _ColumnBinding()
+        try:
+            frame, _ = _attach_ewm(frame, _ewm_nodes(
+                exprs + [wrap_expr(v) for v in named.values()], keys),
+                binding, keys)
+            frame, exprs2, named2 = _apply_agg_prestages_cols(
+                frame, exprs, named, key_cols)
+            aggs, _ = _agg_columns(frame, exprs2, named2)
+        finally:
+            binding.restore()
         return frame, aggs
+
+    def _member(self, s, t, e):
+        """``t`` lies in the window from ``s`` to ``e`` under ``closed``."""
+        member = {"left": (s <= t) & (t < e), "right": (s < t) & (t <= e),
+                  "both": (s <= t) & (t <= e),
+                  "none": (s < t) & (t < e)}.get(self._closed)
+        if member is None:
+            raise ValueError(f"invalid closed: {self._closed!r}")
+        return member
+
+    def _datapoint_anchors(self, sdf, t_us):
+        """start_by='datapoint' prologue: each group's first datapoint (µs)
+        joined onto its rows as ``__sb_min__`` by one broadcast agg.
+        Returns ``(joined, key_cols, renames)``: the group keys as
+        ``__sbk{i}__`` columns and their output names."""
+        by_cols = [wrap_expr(b)._fn(sdf, None) if isinstance(b, Expr)
+                   else F.col(b) for b in self._by]
+        by_names = [f"__sbk{i}__" for i in range(len(by_cols))]
+        base = sdf.select("*", *[c.alias(n) for c, n in zip(by_cols, by_names)])
+        anchors = (base.groupBy(*by_names)
+                   .agg(F.min(t_us).alias("__sb_min__")))
+        if by_names:
+            joined = base.join(F.broadcast(anchors.withColumnsRenamed(
+                {n: n + "r" for n in by_names})),
+                on=[base[n].eqNullSafe(F.col(n + "r")) for n in by_names])
+        else:
+            joined = base.crossJoin(F.broadcast(anchors))
+        renames = [F.col(n).alias(str(b)) if isinstance(b, str) else F.col(n)
+                   for n, b in zip(by_names, self._by)]
+        return joined, [F.col(n) for n in by_names], renames
+
+    def _dyn_finish(self, frame, exprs, named, aggs, hooked, winkey,
+                    by_cols, lo, hi, renames=None):
+        """Shared dynamic-window epilogue: bind deferred aggregates
+        (``hooked``) over the window-assigned ``frame``, aggregate per
+        (``winkey``, group keys) in one hash agg, label and emit.  ``lo``
+        and ``hi`` map the window-start column to the lower and upper
+        boundary in the index's type; label 'right' is the upper one."""
+        w = F.col(winkey)
+        if hooked:
+            frame, aggs = self._dyn_bind(frame, exprs, named, [w, *by_cols])
+        if self._label == "datapoint":
+            aggs = [*aggs, F.min(F.col(self._index)).alias("__dp__")]
+            label_col = F.col("__dp__")
+        else:
+            label_col = hi(w) if self._label == "right" else lo(w)
+        extra = ([lo(w).alias("_lower_boundary"),
+                  hi(w).alias("_upper_boundary")]
+                 if self._include_boundaries else [])
+        grouped = frame.groupBy(w, *by_cols).agg(*aggs)
+        return self._wrap_out(self._dyn_emit(
+            grouped, winkey, len(by_cols), extra,
+            label_col.alias(self._index), renames=renames))
+
+
+def _floordiv(a, b):
+    """Exact integer floor division of a long Column by the int ``b``
+    (pmod is non-negative)."""
+    return ((a - F.pmod(a, F.lit(b))) / F.lit(b)).cast("long")
 
 
 class DynamicGroupBy(_TemporalGroupByMixin):
@@ -639,7 +724,6 @@ class DynamicGroupBy(_TemporalGroupByMixin):
 
     def agg(self, *exprs, **named):
         from .functions.duration import parse_duration
-        from .frame import LazyFrame
 
         exprs, named = _exclude_keys_from_multi(
             exprs, named,
@@ -714,8 +798,6 @@ class DynamicGroupBy(_TemporalGroupByMixin):
         single-assignment fast path; period != every and closed both/none
         (round-3) enumerate candidate starts on the anchored grid and filter
         by the closed-interval test (same shape as _agg_enumerated)."""
-        from .frame import LazyFrame
-
         hopping = every.total_seconds() != period.total_seconds()
         if hopping or self._closed in ("both", "none"):
             return self._agg_datapoint_enumerated(every, period, exprs, named)
@@ -723,19 +805,8 @@ class DynamicGroupBy(_TemporalGroupByMixin):
             raise ValueError(f"invalid closed: {self._closed!r}")
         every_us = int(every.total_seconds() * 1_000_000)
         sdf, aggs, hooked = self._dyn_pre(exprs, named)
-        by_cols = [wrap_expr(b)._fn(sdf, None) if isinstance(b, Expr) else F.col(b)
-                   for b in self._by]
-        by_names = [f"__sbk{i}__" for i in range(len(by_cols))]
-        base = sdf.select("*", *[c.alias(n) for c, n in zip(by_cols, by_names)])
         t = F.unix_micros(F.col(self._index).cast("timestamp"))
-        anchors = (base.groupBy(*by_names)
-                   .agg(F.min(t).alias("__sb_min__")))
-        if by_names:
-            joined = base.join(F.broadcast(anchors.withColumnsRenamed(
-                {n: n + "r" for n in by_names})),
-                on=[base[n].eqNullSafe(F.col(n + "r")) for n in by_names])
-        else:
-            joined = base.crossJoin(F.broadcast(anchors))
+        joined, by_cols, renames = self._datapoint_anchors(sdf, t)
         tt = t - (F.lit(1) if self._closed == "right" else F.lit(0))
         k = F.floor((tt - F.col("__sb_min__")) / F.lit(every_us)).cast("long")
         start_us = F.col("__sb_min__") + k * F.lit(every_us)
@@ -743,30 +814,10 @@ class DynamicGroupBy(_TemporalGroupByMixin):
         # on the open left edge of window 0 (k = -1 here) — polars drops it
         # rather than emitting a window before the first datapoint
         pre = joined.withColumn("__s__", start_us).filter(k >= 0)
-        if hooked:
-            pre, aggs = self._dyn_bind(
-                pre, exprs, named,
-                [F.col("__s__"), *[F.col(n) for n in by_names]])
-        grouped = (pre
-                   .groupBy(F.col("__s__"), *[F.col(n) for n in by_names])
-                   .agg(*aggs,
-                        *([F.min(F.col(self._index)).alias("__dp__")]
-                          if self._label == "datapoint" else [])))
-        if self._label == "datapoint":
-            label_col = F.col("__dp__").alias(self._index)
-        elif self._label == "right":
-            label_col = F.timestamp_micros(F.col("__s__") + F.lit(every_us)).alias(self._index)
-        else:
-            label_col = F.timestamp_micros(F.col("__s__")).alias(self._index)
-        extra = []
-        if self._include_boundaries:
-            extra = [F.timestamp_micros(F.col("__s__")).alias("_lower_boundary"),
-                     F.timestamp_micros(F.col("__s__") + F.lit(every_us)).alias("_upper_boundary")]
-        renames = [F.col(n).alias(str(b)) if isinstance(b, str) else F.col(n)
-                   for n, b in zip(by_names, self._by)]
-        return self._wrap_out(self._dyn_emit(
-            grouped, "__s__", len(by_names), extra, label_col,
-            renames=renames))
+        return self._dyn_finish(
+            pre, exprs, named, aggs, hooked, "__s__", by_cols,
+            F.timestamp_micros,
+            lambda s: F.timestamp_micros(s + F.lit(every_us)), renames)
 
     def _agg_datapoint_enumerated(self, every, period, exprs, named):
         """start_by='datapoint' with period != every or closed both/none
@@ -774,8 +825,6 @@ class DynamicGroupBy(_TemporalGroupByMixin):
         min-ts anchor broadcast back, then candidate-start enumeration on
         the anchored grid + ONE closed-interval membership test — the same
         single hash-agg shuffle as every other dynamic path."""
-        from .frame import LazyFrame
-
         if every.months or period.months:
             # defensive: agg() dispatches calendar durations to
             # _agg_datapoint_calendar before reaching here
@@ -783,77 +832,30 @@ class DynamicGroupBy(_TemporalGroupByMixin):
         every_us = int(every.total_seconds() * 1_000_000)
         period_us = int(period.total_seconds() * 1_000_000)
         sdf, aggs, hooked = self._dyn_pre(exprs, named)
-        by_cols = [wrap_expr(b)._fn(sdf, None) if isinstance(b, Expr) else F.col(b)
-                   for b in self._by]
-        by_names = [f"__sbk{i}__" for i in range(len(by_cols))]
-        base = sdf.select("*", *[c.alias(n) for c, n in zip(by_cols, by_names)])
         t = F.unix_micros(F.col(self._index).cast("timestamp"))
-        anchors = (base.groupBy(*by_names)
-                   .agg(F.min(t).alias("__sb_min__")))
-        if by_names:
-            joined = base.join(F.broadcast(anchors.withColumnsRenamed(
-                {n: n + "r" for n in by_names})),
-                on=[base[n].eqNullSafe(F.col(n + "r")) for n in by_names])
-        else:
-            joined = base.crossJoin(F.broadcast(anchors))
-
-        def floordiv(a, b):
-            return ((a - F.pmod(a, F.lit(b))) / F.lit(b)).cast("long")
-
+        joined, by_cols, renames = self._datapoint_anchors(sdf, t)
         rel = t - F.col("__sb_min__")
-        k_hi = floordiv(rel, every_us)
+        k_hi = _floordiv(rel, every_us)
         # the datapoint grid only extends FORWARD from the group's first
         # datapoint (lazy_frame.rb:1448): clamp so rows within `period` of
         # the anchor don't spawn windows starting before it
-        k_lo = F.greatest(floordiv(rel - F.lit(period_us), every_us),
+        k_lo = F.greatest(_floordiv(rel - F.lit(period_us), every_us),
                           F.lit(0))
         exploded = joined.withColumn(
             "__k__", F.explode(F.sequence(k_lo, k_hi)))
         s = F.col("__sb_min__") + F.col("__k__") * F.lit(every_us)
-        e = s + F.lit(period_us)
-        member = {
-            "left": (s <= t) & (t < e),
-            "right": (s < t) & (t <= e),
-            "both": (s <= t) & (t <= e),
-            "none": (s < t) & (t < e),
-        }.get(self._closed)
-        if member is None:
-            raise ValueError(f"invalid closed: {self._closed!r}")
-        filtered = exploded.withColumn("__s__", s).filter(member)
-        if hooked:
-            filtered, aggs = self._dyn_bind(
-                filtered, exprs, named,
-                [F.col("__s__"), *[F.col(n) for n in by_names]])
-        grouped = (filtered
-                   .groupBy(F.col("__s__"), *[F.col(n) for n in by_names])
-                   .agg(*aggs,
-                        *([F.min(F.col(self._index)).alias("__dp__")]
-                          if self._label == "datapoint" else [])))
-        if self._label == "datapoint":
-            label_col = F.col("__dp__").alias(self._index)
-        elif self._label == "right":
-            label_col = F.timestamp_micros(
-                F.col("__s__") + F.lit(period_us)).alias(self._index)
-        else:
-            label_col = F.timestamp_micros(F.col("__s__")).alias(self._index)
-        extra = []
-        if self._include_boundaries:
-            extra = [F.timestamp_micros(F.col("__s__")).alias("_lower_boundary"),
-                     F.timestamp_micros(F.col("__s__") + F.lit(period_us))
-                     .alias("_upper_boundary")]
-        renames = [F.col(n).alias(str(b)) if isinstance(b, str) else F.col(n)
-                   for n, b in zip(by_names, self._by)]
-        return self._wrap_out(self._dyn_emit(
-            grouped, "__s__", len(by_names), extra, label_col,
-            renames=renames))
+        filtered = exploded.withColumn("__s__", s).filter(
+            self._member(s, t, s + F.lit(period_us)))
+        return self._dyn_finish(
+            filtered, exprs, named, aggs, hooked, "__s__", by_cols,
+            F.timestamp_micros,
+            lambda s: F.timestamp_micros(s + F.lit(period_us)), renames)
 
     def _agg_int(self, exprs, named):
         """Integer-index dynamic windows (every="Ni" — lazy_frame.rb:1416
         idx doctest): grid starts k*every+offset over the raw i64 index,
         candidate-start enumeration + closed-interval filter, one hash-agg
         shuffle on (start, by) — the same shape as the time paths."""
-        from .frame import LazyFrame
-
         def iv(x):
             return int(str(x).strip().rstrip("i"))
 
@@ -862,22 +864,13 @@ class DynamicGroupBy(_TemporalGroupByMixin):
         off_i = iv(self._offset) if self._offset is not None else 0
         sdf, aggs, hooked = self._dyn_pre(exprs, named)
         t = F.col(self._index).cast("long")
-
-        def floordiv(a, b):
-            return ((a - F.pmod(a, F.lit(b))) / F.lit(b)).cast("long")
-
-        k_lo = floordiv(t - F.lit(off_i) - F.lit(period_i), every_i)
-        k_hi = floordiv(t - F.lit(off_i), every_i) + F.lit(1).cast("long")
+        k_lo = _floordiv(t - F.lit(off_i) - F.lit(period_i), every_i)
+        k_hi = _floordiv(t - F.lit(off_i), every_i) + F.lit(1).cast("long")
         exploded = sdf.withColumn("__s__", F.explode(F.transform(
             F.sequence(k_lo, k_hi),
             lambda k: k * F.lit(every_i) + F.lit(off_i))))
         s = F.col("__s__")
-        hi = s + F.lit(period_i)
-        member = {"left": (s <= t) & (t < hi),
-                  "right": (s < t) & (t <= hi),
-                  "both": (s <= t) & (t <= hi),
-                  "none": (s < t) & (t < hi)}[self._closed]
-        filtered = exploded.filter(member)
+        filtered = exploded.filter(self._member(s, t, s + F.lit(period_i)))
         by_cols = [wrap_expr(b)._fn(sdf, None) if isinstance(b, Expr)
                    else F.col(b) for b in self._by]
         if hooked:
@@ -909,7 +902,6 @@ class DynamicGroupBy(_TemporalGroupByMixin):
         so it scales identically (lazy_frame.rb:1416 closed semantics).
         """
         from .functions.duration import parse_duration
-        from .frame import LazyFrame
 
         every_us = int(every.total_seconds() * 1_000_000)
         period_us = int(period.total_seconds() * 1_000_000)
@@ -918,45 +910,19 @@ class DynamicGroupBy(_TemporalGroupByMixin):
         sdf, aggs, hooked = self._dyn_pre(exprs, named)
 
         t = F.unix_micros(F.col(self._index).cast("timestamp"))
-
-        def floordiv(a, b):
-            # exact integer floor division (pmod is non-negative)
-            return ((a - F.pmod(a, F.lit(b))) / F.lit(b)).cast("long")
-
-        k_hi = floordiv(t - F.lit(off_us), every_us)
-        k_lo = floordiv(t - F.lit(off_us) - F.lit(period_us), every_us)
+        k_hi = _floordiv(t - F.lit(off_us), every_us)
+        k_lo = _floordiv(t - F.lit(off_us) - F.lit(period_us), every_us)
         exploded = sdf.withColumn("__s__", F.explode(F.transform(
             F.sequence(k_lo, k_hi),
             lambda k: k * F.lit(every_us) + F.lit(off_us))))
         s = F.col("__s__")
-        if self._closed == "both":
-            member = (s <= t) & (t <= s + F.lit(period_us))
-        else:  # none
-            member = (s < t) & (t < s + F.lit(period_us))
-        filtered = exploded.filter(member)
-
+        filtered = exploded.filter(self._member(s, t, s + F.lit(period_us)))
         by_cols = [wrap_expr(b)._fn(sdf, None) if isinstance(b, Expr) else F.col(b)
                    for b in self._by]
-        if hooked:
-            filtered, aggs = self._dyn_bind(
-                filtered, exprs, named, [F.col("__s__"), *by_cols])
-        extra_aggs = [F.min(F.col(self._index)).alias("__dp__")] \
-            if self._label == "datapoint" else []
-        grouped = filtered.groupBy(F.col("__s__"), *by_cols).agg(*aggs, *extra_aggs)
-        if self._label == "datapoint":
-            label_col = F.col("__dp__").alias(self._index)
-        elif self._label == "right":
-            label_col = F.timestamp_micros(
-                F.col("__s__") + F.lit(period_us)).alias(self._index)
-        else:
-            label_col = F.timestamp_micros(F.col("__s__")).alias(self._index)
-        extra = []
-        if self._include_boundaries:
-            extra = [F.timestamp_micros(F.col("__s__")).alias("_lower_boundary"),
-                     F.timestamp_micros(F.col("__s__") + F.lit(period_us))
-                     .alias("_upper_boundary")]
-        return self._wrap_out(self._dyn_emit(
-            grouped, "__s__", len(by_cols), extra, label_col))
+        return self._dyn_finish(
+            filtered, exprs, named, aggs, hooked, "__s__", by_cols,
+            F.timestamp_micros,
+            lambda s: F.timestamp_micros(s + F.lit(period_us)))
 
     def _agg_calendar(self, every, period, exprs, named):
         """Calendar-unit (1mo/1q/1y) TUMBLING windows with offset and all
@@ -971,7 +937,6 @@ class DynamicGroupBy(_TemporalGroupByMixin):
         shuffle.
         """
         from .functions.duration import parse_duration
-        from .frame import LazyFrame
 
         if self._start_by == "datapoint":
             # round-5: each group's first datapoint anchors the calendar
@@ -1031,24 +996,9 @@ class DynamicGroupBy(_TemporalGroupByMixin):
             raise ValueError(f"invalid closed: {self._closed!r}")
         by_cols = [wrap_expr(b)._fn(sdf, None) if isinstance(b, Expr) else F.col(b)
                    for b in self._by]
-        if hooked:
-            base, aggs = self._dyn_bind(
-                base, exprs, named, [F.col("__w__"), *by_cols])
-        extra_aggs = [F.min(F.col(self._index)).alias("__dp__")] \
-            if self._label == "datapoint" else []
-        grouped = base.groupBy(F.col("__w__"), *by_cols).agg(*aggs, *extra_aggs)
-        if self._label == "datapoint":
-            label_col = F.col("__dp__").alias(self._index)
-        elif self._label == "right":
-            label_col = shift(F.col("__w__"), step, 0).alias(self._index)
-        else:
-            label_col = F.col("__w__").alias(self._index)
-        extra = []
-        if self._include_boundaries:
-            extra = [F.col("__w__").alias("_lower_boundary"),
-                     shift(F.col("__w__"), step, 0).alias("_upper_boundary")]
-        return self._wrap_out(self._dyn_emit(
-            grouped, "__w__", len(by_cols), extra, label_col))
+        return self._dyn_finish(
+            base, exprs, named, aggs, hooked, "__w__", by_cols,
+            lambda w: w, lambda w: shift(w, step, 0))
 
     def _agg_calendar_enumerated(self, every, period, exprs, named):
         """Calendar hopping/sliding dynamic windows (round-3;
@@ -1065,7 +1015,6 @@ class DynamicGroupBy(_TemporalGroupByMixin):
         ``make_interval`` so variable month lengths are exact.
         """
         from .functions.duration import parse_duration
-        from .frame import LazyFrame
 
         off = (parse_duration(self._offset) if self._offset is not None
                else parse_duration("0s"))
@@ -1094,10 +1043,6 @@ class DynamicGroupBy(_TemporalGroupByMixin):
                 e = F.timestamp_micros(F.unix_micros(e) + F.lit(pus))
             return e
 
-        def floordiv(a, b):
-            # exact integer floor division (pmod is non-negative)
-            return ((a - F.pmod(a, F.lit(b))) / F.lit(b)).cast("long")
-
         em, eus = every.months, int(every.microseconds)
         if em and eus:
             # MIXED every (1mo10d, round-5): no closed-form row->k mapping
@@ -1113,10 +1058,10 @@ class DynamicGroupBy(_TemporalGroupByMixin):
             step28 = em * _28D_US + eus
             step31 = em * _31D_US + eus
             span_max = pm * _31D_US + pus
-            k_hi = F.greatest(floordiv(rel, step28),
-                              floordiv(rel, step31)) + F.lit(1)
-            k_lo = F.least(floordiv(rel - F.lit(span_max), step28),
-                           floordiv(rel - F.lit(span_max), step31)) - F.lit(1)
+            k_hi = F.greatest(_floordiv(rel, step28),
+                              _floordiv(rel, step31)) + F.lit(1)
+            k_lo = F.least(_floordiv(rel - F.lit(span_max), step28),
+                           _floordiv(rel - F.lit(span_max), step31)) - F.lit(1)
         elif em:
             # month-grid: k_hi from the shifted row's epoch-month index
             tshift = t
@@ -1131,44 +1076,19 @@ class DynamicGroupBy(_TemporalGroupByMixin):
         else:
             t_us = F.unix_micros(t)
             rel = t_us - F.lit(ous)
-            k_hi = floordiv(rel, eus)
+            k_hi = _floordiv(rel, eus)
             max_period_us = pm * _31D_US + pus
             k_lo = k_hi - F.lit(int(-(-max_period_us // eus) + 1))
         exploded = sdf.withColumn(
             "__k__", F.explode(F.sequence(k_lo, k_hi)))
         s = win_start(F.col("__k__"))
-        e = win_end(s)
-        member = {
-            "left": (s <= t) & (t < e),
-            "right": (s < t) & (t <= e),
-            "both": (s <= t) & (t <= e),
-            "none": (s < t) & (t < e),
-        }.get(self._closed)
-        if member is None:
-            raise ValueError(f"invalid closed: {self._closed!r}")
-        filtered = (exploded.withColumn("__w__", s).filter(member)
-                    .drop("__k__"))
+        filtered = (exploded.withColumn("__w__", s)
+                    .filter(self._member(s, t, win_end(s))).drop("__k__"))
         by_cols = [wrap_expr(b)._fn(sdf, None) if isinstance(b, Expr)
                    else F.col(b) for b in self._by]
-        if hooked:
-            filtered, aggs = self._dyn_bind(
-                filtered, exprs, named, [F.col("__w__"), *by_cols])
-        extra_aggs = [F.min(F.col(self._index)).alias("__dp__")] \
-            if self._label == "datapoint" else []
-        grouped = filtered.groupBy(F.col("__w__"), *by_cols).agg(
-            *aggs, *extra_aggs)
-        if self._label == "datapoint":
-            label_col = F.col("__dp__").alias(self._index)
-        elif self._label == "right":
-            label_col = win_end(F.col("__w__")).alias(self._index)
-        else:
-            label_col = F.col("__w__").alias(self._index)
-        extra = []
-        if self._include_boundaries:
-            extra = [F.col("__w__").alias("_lower_boundary"),
-                     win_end(F.col("__w__")).alias("_upper_boundary")]
-        return self._wrap_out(self._dyn_emit(
-            grouped, "__w__", len(by_cols), extra, label_col))
+        return self._dyn_finish(
+            filtered, exprs, named, aggs, hooked, "__w__", by_cols,
+            lambda w: w, win_end)
 
     def _agg_datapoint_calendar(self, every, period, exprs, named):
         """start_by='datapoint' with calendar/mixed durations (round-5;
@@ -1181,42 +1101,25 @@ class DynamicGroupBy(_TemporalGroupByMixin):
         (start, by) as every other dynamic path; the anchor agg is a
         broadcast-joined pre-pass, exactly like the fixed-duration
         datapoint path."""
-        from .frame import LazyFrame
-
         em, eus = every.months, int(every.microseconds)
         pm, pus = period.months, int(period.microseconds)
         _28D_US = 28 * 86400 * 1_000_000
         _31D_US = 31 * 86400 * 1_000_000
         sdf, aggs, hooked = self._dyn_pre(exprs, named)
-        by_cols = [wrap_expr(b)._fn(sdf, None) if isinstance(b, Expr)
-                   else F.col(b) for b in self._by]
-        by_names = [f"__sbk{i}__" for i in range(len(by_cols))]
-        base = sdf.select("*", *[c.alias(n) for c, n in zip(by_cols, by_names)])
         t = F.col(self._index).cast("timestamp")
         t_us = F.unix_micros(t)
-        anchors = (base.groupBy(*by_names)
-                   .agg(F.min(t_us).alias("__sb_min__")))
-        if by_names:
-            joined = base.join(F.broadcast(anchors.withColumnsRenamed(
-                {n: n + "r" for n in by_names})),
-                on=[base[n].eqNullSafe(F.col(n + "r")) for n in by_names])
-        else:
-            joined = base.crossJoin(F.broadcast(anchors))
-
-        def floordiv(a, b):
-            return ((a - F.pmod(a, F.lit(b))) / F.lit(b)).cast("long")
-
+        joined, by_cols, renames = self._datapoint_anchors(sdf, t_us)
         rel = t_us - F.col("__sb_min__")   # >= 0: anchor is the group min
         step_lo = em * _28D_US + eus
         step_hi = em * _31D_US + eus
         span_max = pm * _31D_US + pus
-        k_hi = F.greatest(floordiv(rel, step_lo),
-                          floordiv(rel, step_hi)) + F.lit(1)
+        k_hi = F.greatest(_floordiv(rel, step_lo),
+                          _floordiv(rel, step_hi)) + F.lit(1)
         # forward-only grid (lazy_frame.rb:1448): no window starts before
         # the group's first datapoint
         k_lo = F.greatest(
-            F.least(floordiv(rel - F.lit(span_max), step_lo),
-                    floordiv(rel - F.lit(span_max), step_hi)) - F.lit(1),
+            F.least(_floordiv(rel - F.lit(span_max), step_lo),
+                    _floordiv(rel - F.lit(span_max), step_hi)) - F.lit(1),
             F.lit(0))
         exploded = joined.withColumn(
             "__k__", F.explode(F.sequence(k_lo, k_hi)))
@@ -1235,40 +1138,11 @@ class DynamicGroupBy(_TemporalGroupByMixin):
                 e = F.timestamp_micros(F.unix_micros(e) + F.lit(pus))
             return e
 
-        e = win_end(s)
-        member = {
-            "left": (s <= t) & (t < e),
-            "right": (s < t) & (t <= e),
-            "both": (s <= t) & (t <= e),
-            "none": (s < t) & (t < e),
-        }.get(self._closed)
-        if member is None:
-            raise ValueError(f"invalid closed: {self._closed!r}")
-        filtered = exploded.withColumn("__s__", s).filter(member)
-        if hooked:
-            filtered, aggs = self._dyn_bind(
-                filtered, exprs, named,
-                [F.col("__s__"), *[F.col(n) for n in by_names]])
-        grouped = (filtered
-                   .groupBy(F.col("__s__"), *[F.col(n) for n in by_names])
-                   .agg(*aggs,
-                        *([F.min(F.col(self._index)).alias("__dp__")]
-                          if self._label == "datapoint" else [])))
-        if self._label == "datapoint":
-            label_col = F.col("__dp__").alias(self._index)
-        elif self._label == "right":
-            label_col = win_end(F.col("__s__")).alias(self._index)
-        else:
-            label_col = F.col("__s__").alias(self._index)
-        extra = []
-        if self._include_boundaries:
-            extra = [F.col("__s__").alias("_lower_boundary"),
-                     win_end(F.col("__s__")).alias("_upper_boundary")]
-        renames = [F.col(n).alias(str(b)) if isinstance(b, str) else F.col(n)
-                   for n, b in zip(by_names, self._by)]
-        return self._wrap_out(self._dyn_emit(
-            grouped, "__s__", len(by_names), extra, label_col,
-            renames=renames))
+        filtered = exploded.withColumn("__s__", s).filter(
+            self._member(s, t, win_end(s)))
+        return self._dyn_finish(
+            filtered, exprs, named, aggs, hooked, "__s__", by_cols,
+            lambda w: w, win_end, renames)
 
 
 class RollingGroupBy(_TemporalGroupByMixin):
@@ -1782,9 +1656,8 @@ class RollingGroupBy(_TemporalGroupByMixin):
         for b, n in zip(self._by, kn):
             cond = cond & F.col(n).eqNullSafe(contrib[b])
         joined = anchors.join(contrib, cond & rng, "left")
-        joined, exprs2, named2 = _apply_agg_prestages_cols(
+        joined, aggs = self._dyn_bind(
             joined, exprs, named, [F.col("__ra_id__")])
-        aggs, _ = _agg_columns(joined, exprs2, named2)
         grouped = joined.groupBy(
             F.col("__ra_id__"), F.col("__ra_ts__"),
             *[F.col(n) for n in kn]).agg(*aggs)
@@ -1973,11 +1846,11 @@ class RollingGroupBy(_TemporalGroupByMixin):
                   enumerate(items)]
         ksdf = self._sliding_kernel_sdf(
             dur, pseudo, [lk for _n, lk in items])
-        saved = []
+        binding = _ColumnBinding()
         try:
             for j, (n, _lk) in enumerate(items):
-                saved.append((n, n._fn))
-                n._fn = (lambda df, part, _t=f"__rkw{j}__": F.col(_t))
+                binding.bind(n, lambda df, part, _t=f"__rkw{j}__":
+                             F.col(_t))
             outs = []
             for i, e in enumerate(all_exprs):
                 c = e._fn(ksdf, None)
@@ -1993,8 +1866,7 @@ class RollingGroupBy(_TemporalGroupByMixin):
             out = ksdf.select(*keep)
             out.schema  # force analysis while the fallback is reachable
         finally:
-            for n, fn in saved:
-                n._fn = fn
+            binding.restore()
         res = LazyFrame(out)
         res._order_dirty = True
         return self._wrap_out(res)
@@ -2005,7 +1877,6 @@ class RollingGroupBy(_TemporalGroupByMixin):
         result column per ``plan`` entry (named from ``all_exprs``)."""
         from pyspark.sql import types as T
 
-        from .frame import LazyFrame
         from .operators.rolling_kernel import make_sliding_kernel
 
         if any(not isinstance(b, str) for b in self._by):

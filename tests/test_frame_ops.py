@@ -678,45 +678,283 @@ def test_chunked_ordinals_on_gapped_concentrated_index(spark):
     assert [r["cm"] for r in sl] == mx
 
 
-def test_ewm_fallback_all_modes(spark):
-    """Round-5: the composed-aggregate O(n^2) fallback (reached when ewm is
-    combined with another expression in one binding, warns) now supports
-    ignore_nulls=false too — absolute-position decay via null-keeping
-    structs; every adjust x ignore_nulls combo must match the pandas
-    reference, same as the primary O(n) scan."""
-    import warnings
-
+def _pd_ewm(values, kind, adjust, ign, alpha=0.4):
+    """Polars ewm semantics from pandas: None before the first
+    observation, and 0.0 var/std at a single observation."""
     import numpy as np
     import pandas as pd
 
-    vals = [1.0, None, 3.0, 2.5, None, 8.0, 0.5]
-    df = pl.DataFrame({"x": vals, "g": ["a"] * 7})
+    s = pd.Series([np.nan if v is None else v for v in values],
+                  dtype=float)
+    ew = s.ewm(alpha=alpha, adjust=adjust, ignore_na=ign, min_periods=1)
+    out = ew.mean() if kind == "mean" else ew.var(bias=False)
+    if kind == "std":
+        out = np.sqrt(out)
+    res, cnt = [], 0
+    for v, o in zip(values, out):
+        cnt += v is not None
+        res.append(None if cnt == 0 else
+                   0.0 if kind != "mean" and cnt == 1 else float(o))
+    return res
 
-    def expected(kind, adjust, ign):
-        s = pd.Series([np.nan if v is None else v for v in vals])
-        ew = s.ewm(alpha=0.4, adjust=adjust, ignore_na=ign, min_periods=1)
-        out = ew.mean() if kind == "mean" else ew.var(bias=False)
-        res, cnt = [], 0
-        for i, v in enumerate(vals):
-            cnt += v is not None
-            res.append(None if cnt == 0 else
-                       (0.0 if kind != "mean" and cnt == 1
-                        else round(float(out.iloc[i]), 6)))
-        return res
 
-    for kind, meth in [("mean", "ewm_mean"), ("var", "ewm_var")]:
-        for adjust in (True, False):
-            for ign in (True, False):
-                kw = dict(alpha=0.4, adjust=adjust, min_periods=1,
-                          ignore_nulls=ign)
-                # + lit(0.0) defeats the hook composition -> fallback path
-                with warnings.catch_warnings():
-                    warnings.simplefilter("ignore", RuntimeWarning)
-                    got = df.with_columns(
-                        (getattr(pl.col("x"), meth)(**kw) + pl.lit(0.0))
-                        .over("g").round(6).alias("v")).to_a()
-                assert [r["v"] for r in got] == expected(kind, adjust, ign), \
-                    f"fallback {kind} adjust={adjust} ign={ign}"
+def _prefix_fold_parts(lf):
+    """Plan parts of the O(n^2) ewm shape: a running-prefix collect_list
+    window, and the aggregate HOF that folds it."""
+    import re
+
+    plan = lf._sdf._jdf.queryExecution().optimizedPlan().toString()
+    windows = [m for m in re.findall(r"collect_list\(.*?\) AS ", plan)
+               if "windowspecdefinition" in m and "currentrow$()" in m]
+    return windows + re.findall(r"\baggregate\(", plan)
+
+
+def test_ewm_compositions_match_pandas(spark):
+    """Every ewm node binds through the kernel attach, whatever expression
+    it sits in: composed with an aggregate, under order ops and over(), an
+    ewm of an ewm, and inside group_by().agg.  Each composition matches
+    pandas for mean, var and std in all four adjust x ignore_nulls forms,
+    comes back in frame row order, and plans no prefix collect_list window
+    or aggregate HOF."""
+    vals = [1.0, None, 3.0, 2.5, None, 8.0, 0.5, 4.0, None, 7.5]
+    grp = ["a", "b", "a", "b", "a", "b", "b", "a", "b", "a"]
+    n = len(vals)
+    df = pl.DataFrame({"i": list(range(n)), "x": vals, "g": grp})
+    x = pl.col("x")
+    sx = sum(v for v in vals if v is not None)
+    mx = sx / sum(v is not None for v in vals)
+    idx = {k: [i for i in range(n) if grp[i] == k] for k in ("a", "b")}
+
+    def op(f, *xs):
+        return None if any(v is None for v in xs) else f(*xs)
+
+    def grouped(kind, adjust, ign, post=lambda sub: sub):
+        out = [None] * n
+        for rows in idx.values():
+            sub = post(_pd_ewm([vals[i] for i in rows], kind, adjust, ign))
+            for i, v in zip(rows, sub):
+                out[i] = v
+        return out
+
+    # name -> (engine expr over the ewm node e, pandas rows from
+    # (whole-series ewm, form))
+    row_cases = {
+        "ewm*sum": (lambda e: e * x.sum(),
+                    lambda w, f: [op(lambda a: a * sx, v) for v in w]),
+        "ewm-mean": (lambda e: e - x.mean(),
+                     lambda w, f: [op(lambda a: a - mx, v) for v in w]),
+        "over*sum": (lambda e: e.over("g") * x.sum(),
+                     lambda w, f: [op(lambda a: a * sx, v)
+                                   for v in grouped(*f)]),
+        "diff": (lambda e: e.diff(),
+                 lambda w, f: [None] + [op(lambda a, b: b - a, u, v)
+                                        for u, v in zip(w, w[1:])]),
+        "rolling_mean": (lambda e: e.rolling_mean(2),
+                         lambda w, f: [None] + [
+                             op(lambda a, b: (a + b) / 2, u, v)
+                             for u, v in zip(w, w[1:])]),
+        "sort": (lambda e: e.sort(),
+                 lambda w, f: ([None] * w.count(None)
+                               + sorted(v for v in w if v is not None))),
+        "shift_over": (lambda e: e.shift(1).over("g"),
+                       lambda w, f: grouped(
+                           *f, post=lambda sub: [None] + sub[:-1])),
+        "ewm_of_ewm": (lambda e: e.ewm_mean(alpha=0.3),
+                       lambda w, f: _pd_ewm(w, "mean", True, True, 0.3)),
+        "cum_sum": (lambda e: e.cum_sum(),
+                    lambda w, f: [sum(v for v in w[:i + 1] if v is not None)
+                                  for i in range(n)]),
+    }
+    agg_cases = {
+        "agg": (lambda e: e, lambda sub: sub),
+        "agg_last": (lambda e: e.last(), lambda sub: sub[-1]),
+        "agg_sum": (lambda e: e.sum(),
+                    lambda sub: sum(v for v in sub if v is not None)),
+    }
+
+    def close(got, exp):
+        if isinstance(exp, list):
+            return (isinstance(got, list) and len(got) == len(exp)
+                    and all(close(a, b) for a, b in zip(got, exp)))
+        if got is None or exp is None:
+            return got is exp
+        return abs(got - exp) <= 1e-9 * max(1.0, abs(exp))
+
+    kinds = {"mean": "ewm_mean", "var": "ewm_var", "std": "ewm_std"}
+    for adjust in (True, False):
+        for ign in (True, False):
+            def ewm(kind):
+                return getattr(x, kinds[kind])(
+                    alpha=0.4, adjust=adjust, ignore_nulls=ign)
+
+            for name, (build, ref) in row_cases.items():
+                lf = df.lazy().with_columns(
+                    *[build(ewm(k)).alias(k) for k in kinds])
+                label = f"{name} adjust={adjust} ignore_nulls={ign}"
+                assert _prefix_fold_parts(lf) == [], label
+                rows = lf.collect().to_a()
+                assert [r["i"] for r in rows] == list(range(n)), label
+                for k in kinds:
+                    exp = ref(_pd_ewm(vals, k, adjust, ign), (k, adjust, ign))
+                    assert close([r[k] for r in rows], exp), (label, k)
+            for name, (build, ref) in agg_cases.items():
+                lf = df.lazy().group_by("g").agg(
+                    *[build(ewm(k)).alias(k) for k in kinds]).sort("g")
+                label = f"{name} adjust={adjust} ignore_nulls={ign}"
+                assert _prefix_fold_parts(lf) == [], label
+                rows = lf.collect().to_a()
+                for k in kinds:
+                    exp = [ref(_pd_ewm([vals[i] for i in idx[g]], k, adjust,
+                                       ign)) for g in ("a", "b")]
+                    assert close([r[k] for r in rows], exp), (label, k)
+            lf = df.lazy().select(*[ewm(k).last().alias(k) for k in kinds])
+            assert _prefix_fold_parts(lf) == []
+            row = lf.collect().to_a()
+            assert len(row) == 1
+            for k in kinds:
+                assert close(row[0][k], _pd_ewm(vals, k, adjust, ign)[-1]), \
+                    ("select last", adjust, ign, k)
+
+
+def test_composed_aggregate_keeps_frame_row_order(spark):
+    """A windowed expression composed with an aggregate binds over the
+    window's rows, so the bind restores frame row order like any window:
+    only a scalar-planned aggregate (a broadcast constant) and the
+    all-aggregate select are order-free."""
+    df = pl.DataFrame({"i": list(range(7)),
+                       "x": [1.0, None, 3.0, 2.5, None, 8.0, 0.5],
+                       "g": ["a", "b", "a", "b", "a", "b", "b"]})
+    x = pl.col("x")
+    for name, e in [("cum_sum", x.cum_sum()), ("shift", x.shift(1)),
+                    ("rank", x.rank()), ("ewm", x.ewm_mean(alpha=0.4))]:
+        composed = (e.over("g") * x.sum()).alias("v")
+        for how, out in [("select", df.select("i", composed)),
+                         ("with_columns", df.with_columns(composed))]:
+            assert [r["i"] for r in out.to_a()] == list(range(7)), \
+                (name, how)
+
+
+def _close(got, exp):
+    if isinstance(exp, list):
+        return (isinstance(got, list) and len(got) == len(exp)
+                and all(_close(a, b) for a, b in zip(got, exp)))
+    if got is None or exp is None:
+        return got is exp
+    return abs(got - exp) <= 1e-9 * max(1.0, abs(exp))
+
+
+def test_ewm_node_reused_under_several_partitions(spark):
+    """One ewm node bound plain and under over() keys in the same bind
+    reads, at each use, the column attached for that partition: plain,
+    sort().over(g), shift(1).over(g), over(g), over(h) and plain minus
+    over(g) all match pandas."""
+    vals = [1.0, 4.0, 2.0, None, 3.0, 5.0, 7.0]
+    keys = {"g": ["a", "b", "a", "a", "b", "b", "a"],
+            "h": [1, 1, 2, 2, 1, 2, 2]}
+    n = len(vals)
+    df = pl.DataFrame({"i": list(range(n)), "x": vals, **keys})
+    e = pl.col("x").ewm_mean(alpha=0.4)
+
+    def grouped(key, post=lambda sub: sub):
+        out = [None] * n
+        for k in dict.fromkeys(keys[key]):
+            rows = [i for i in range(n) if keys[key][i] == k]
+            sub = post(_pd_ewm([vals[i] for i in rows], "mean", True, True))
+            for i, v in zip(rows, sub):
+                out[i] = v
+        return out
+
+    plain = _pd_ewm(vals, "mean", True, True)
+    og = grouped("g")
+    want = {
+        "a": plain,
+        "s": grouped("g", lambda sub: ([None] * sub.count(None) + sorted(
+            v for v in sub if v is not None))),
+        "sh": grouped("g", lambda sub: [None] + sub[:-1]),
+        "og": og,
+        "oh": grouped("h"),
+        "d": [None if a is None or b is None else a - b
+              for a, b in zip(plain, og)],
+    }
+    rows = df.with_columns(
+        e.alias("a"), e.sort().over("g").alias("s"),
+        e.shift(1).over("g").alias("sh"), e.over("g").alias("og"),
+        e.over("h").alias("oh"), (e - e.over("g")).alias("d")).to_a()
+    assert [r["i"] for r in rows] == list(range(n))
+    for name, exp in want.items():
+        assert _close([r[name] for r in rows], exp), name
+
+
+def test_ewm_in_dynamic_and_rolling_aggs(spark):
+    """group_by_dynamic and rolling aggregations attach an ewm per window
+    (each window scanned in row order): the bare ewm implodes to a list,
+    and last() takes its final value."""
+    import datetime as dt
+
+    vals = [1.0, 4.0, 2.0, None, 3.0, 5.0, 7.0]
+    mins = [0, 1, 2, 3, 5, 6, 9]
+    df = pl.DataFrame({"t": [dt.datetime(2024, 1, 1, 0, m) for m in mins],
+                       "x": vals})
+    e = pl.col("x").ewm_mean(alpha=0.4)
+
+    def ewm(members):
+        return _pd_ewm([vals[j] for j in members], "mean", True, True)
+
+    dyn = df.group_by_dynamic("t", every="5m").agg(
+        e.alias("e"), e.last().alias("l")).to_a()
+    wins = [[0, 1, 2, 3], [4, 5, 6]]
+    assert len(dyn) == len(wins)
+    for row, members in zip(dyn, wins):
+        assert _close(row["e"], ewm(members)), row
+        assert _close(row["l"], ewm(members)[-1]), row
+    roll = df.rolling("t", period="4m").agg(
+        e.alias("e"), e.last().alias("l")).to_a()
+    assert len(roll) == len(mins)
+    for row, m in zip(roll, mins):
+        members = [j for j in range(len(mins)) if m - 4 < mins[j] <= m]
+        assert _close(row["e"], ewm(members)), row
+        assert _close(row["l"], ewm(members)[-1]), row
+
+
+def test_ewm_under_list_and_reshape_ops(spark):
+    """An ewm under a row-count-changing op binds both as the sole select
+    (the reshape reads the attached column) and inside group_by().agg."""
+    vals = [1.0, 4.0, 2.0, 3.0, 5.0, 7.0]
+    grp = ["a", "b", "a", "a", "b", "a"]
+    df = pl.DataFrame({"x": vals, "g": grp})
+    e = pl.col("x").ewm_mean(alpha=0.4)
+    w = _pd_ewm(vals, "mean", True, True)
+
+    def sole(expr):
+        return [r["x"] for r in df.select(expr).to_a()]
+
+    assert _close(sole(e.reverse()), w[::-1])
+    assert sole(e.arg_sort()) == sorted(range(len(w)), key=w.__getitem__)
+    assert sole(e.unique_counts()) == [1] * len(w)
+    assert _close(sole(e.head(3)), w[:3])
+    assert _close(sole(e.top_k(2)), sorted(w, reverse=True)[:2])
+    vc = sorted((r["x"], r["count"]) for r in sole(e.value_counts()))
+    assert _close([v for v, _c in vc], sorted(w))
+    assert [c for _v, c in vc] == [1] * len(w)
+    rows = df.group_by("g").agg(
+        e.head(2).alias("h"), e.reverse().alias("r"),
+        e.top_k(1).alias("k")).sort("g").to_a()
+    for row, k in zip(rows, ("a", "b")):
+        sub = _pd_ewm([v for v, g in zip(vals, grp) if g == k],
+                      "mean", True, True)
+        assert _close(row["h"], sub[:2]), row
+        assert _close(row["r"], sub[::-1]), row
+        assert _close(row["k"], [max(sub)]), row
+
+
+def test_type_changing_ops_add_numerically_on_strings(spark):
+    """``+`` concatenates only when an operand is provably a string: a
+    count, n_unique or arg_max over a string column adds as a number."""
+    df = pl.DataFrame({"s": ["a", "b", "b", "c"]})
+    s = pl.col("s")
+    row = df.select((s.count() + 1).alias("c"), (s.n_unique() + 1).alias("u"),
+                    (s.arg_max() + 1).alias("m")).to_a()
+    assert row == [{"c": 5, "u": 4, "m": 4}]
 
 
 def test_cumulative_eval_and_struct_ops(spark):

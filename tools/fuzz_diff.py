@@ -1056,21 +1056,25 @@ def _run_seed_inner(pl, spark, duck, seed: int) -> list[str]:
     # g x h), vs an O(n²) weighted self-join oracle (ignore_nulls=True:
     # weight = lam^(nonnull-count distance), times alpha except at the
     # group's first non-null when adjust=False; a null row emits the
-    # previous mean — its pair set is unchanged)
+    # previous mean — its pair set is unchanged).  The grouped ewm also
+    # binds composed with an aggregate (eg - mean(x)): the binder attaches
+    # the ewm node once and both bindings read its column.
     lam30 = rng.choice([0.5, 0.8, 0.9])
     al30 = round(1 - lam30, 6)
     kw30 = dict(alpha=al30, adjust=True, ignore_nulls=True, min_periods=1)
     adj30 = rng.choice([True, False])
     keys30 = rng.choice([["b"], ["g", "h"]])
+    eg30 = pl.col("x").ewm_mean(**dict(kw30, adjust=adj30)).over(keys30)
     q30 = (df.lazy().sort("idx")
            .with_columns(
                pl.col("x").ewm_mean(**kw30).alias("e1"),
                pl.col("y").ewm_mean(**kw30).alias("e2"),
-               pl.col("x").ewm_mean(**dict(kw30, adjust=adj30))
-               .over(keys30).alias("eg"))
+               eg30.alias("eg"),
+               (eg30 - pl.col("x").mean()).alias("egm"))
            .select("idx", pl.col("e1").round(6).alias("e1"),
                    pl.col("e2").round(6).alias("e2"),
-                   pl.col("eg").round(6).alias("eg")))
+                   pl.col("eg").round(6).alias("eg"),
+                   pl.col("egm").round(6).alias("egm")))
     L = repr(1.0 - al30)
     gw = "1.0" if adj30 else f"CASE WHEN b.cgx = 1 THEN 1.0 ELSE {al30} END"
     gon = " AND ".join(f"b.{k} IS NOT DISTINCT FROM a.{k}" for k in keys30)
@@ -1090,7 +1094,8 @@ def _run_seed_inner(pl, spark, duck, seed: int) -> list[str]:
            f"LEFT JOIN s b ON {gon} AND b.idx <= a.idx AND b.x IS NOT NULL "
            "GROUP BY a.idx, a.cgx) "
            "SELECT s.idx, round(e1.v, 6) AS e1, round(e2.v, 6) AS e2, "
-           "round(eg.v, 6) AS eg FROM s "
+           "round(eg.v, 6) AS eg, "
+           "round(eg.v - (SELECT avg(x) FROM t), 6) AS egm FROM s "
            "LEFT JOIN e1 ON e1.idx = s.idx "
            "LEFT JOIN e2 ON e2.idx = s.idx "
            "LEFT JOIN eg ON eg.idx = s.idx")
